@@ -172,7 +172,7 @@ object Bench {
       System.err.println(s"[bench] isolate $name timed out"); return None
     }
     val line = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
-    val re = ("\"" + java.util.regex.Pattern.quote(name) + "\":([0-9.eE+-]+)").r
+    val re = (java.util.regex.Pattern.quote(jsonStr(name)) + ":([0-9.eE+-]+)").r
     // first occurrence = the cold "queries" entry; the "warm" map (second
     // same-JVM run) follows it in the line when the child ran under TWICE
     val warm = Some(line.indexOf("\"warm\":")).filter(_ >= 0)
@@ -184,6 +184,90 @@ object Bench {
     }
   } catch { case e: Throwable =>
     System.err.println(s"[bench] isolate $name failed: ${e.getMessage}"); None
+  }
+
+  /** A JSON string literal: quotes, backslashes and control characters
+    * escaped (Jackson's encoder), so any query name or path stays one
+    * valid token. */
+  private def jsonStr(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder
+      .getInstance.quoteAsString(s)) + "\""
+
+  /** A fixed-point JSON number. `Locale.ROOT`: under a comma-decimal
+    * default locale (de_DE) a bare `f"%.2f"` emits `1,50`, which is not
+    * JSON. */
+  private def jsonNum(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** `{"k":v,...}` with escaped keys and `num`-rendered values. */
+  private def jsonObj[V](kvs: Seq[(String, V)])(num: V => String): String =
+    kvs.map { case (k, v) => jsonStr(k) + ":" + num(v) }.mkString("{", ",", "}")
+
+  /** Per-row (median cold, median warm) over the fresh-JVM children. */
+  private def isolatedMedians(runs: Seq[(String, Seq[(Double, Option[Double])])])
+      : Seq[(String, Double, Option[Double])] =
+    runs.map { case (n, rs) =>
+      val colds = rs.map(_._1).sorted
+      val warms = rs.flatMap(_._2).sorted
+      (n, colds(colds.size / 2), warms.drop(warms.size / 2).headOption)
+    }
+
+  /** The full artifact line. Totals are third-party-reproducible from the
+    * artifact alone (the r10 nit: `value` vs Σqueries measured different
+    * things with nothing in the line saying so): `value` stays the
+    * DECLARED shared-pass wall (the cross-round comparable), and the
+    * breakdown keys state exactly which rows each total sums. Shared and
+    * warm figures print as raw doubles, which the isolation pass parses
+    * back out of its children's lines. PURE (BenchSpec parses it).
+    *
+    *  - `isolated_stats`: per-row spread over the fresh-JVM children (the
+    *    `isolated` map carries the median); n=1 rows are in here too — a
+    *    single-child figure is still an isolated figure, and the coverage
+    *    contract counts it.
+    *  - `shared_over_isolated_flags`: always present, {} when clean (r12
+    *    verdict item 5), so "zero flags" is distinguishable from a
+    *    pre-flag bench version that never computed them.
+    *  - `vs_history_flags` + `history_rows` (`history`, None on ONLY runs,
+    *    whose figures carry unamortized session cost): flags vs the
+    *    COMMITTED median, so a contended same-run isolation pass cannot
+    *    invalidate the adjudication (r15 verdict item 4); {} with rows>0
+    *    is "computed, clean", {} with rows=0 is "history missing".
+    *  - `isolation_skipped` (COVERAGE CONTRACT, r14 verdict item 2): every
+    *    planned row is in `isolated_stats` or here with a reason —
+    *    "pending" at an incremental write, so even a kill -9 leaves an
+    *    artifact that names its own holes. Always present.
+    *  - `host_load` (r15 verdict item 6): start, pre-isolation, and the
+    *    max sampled before any child. */
+  private[graft] def fullLine(rows: Seq[(String, Double)], declaredRows: Int,
+                              declaredTotal: Double, warm: Seq[(String, Double)],
+                              isoRuns: Seq[(String, Seq[(Double, Option[Double])])],
+                              flagged: Seq[(String, Double)],
+                              history: Option[(Seq[(String, Double)], Int)],
+                              skipped: Seq[(String, String)],
+                              load: Seq[(String, Double)], sf: String): String = {
+    val isolated = isolatedMedians(isoRuns)
+    val isoStats = isoRuns.map { case (n, rs) =>
+      val colds = rs.map(_._1).sorted
+      n -> (colds.head, colds(colds.size / 2), colds.last, rs.size)
+    }
+    def opt(key: String, obj: String, present: Boolean) =
+      if (present) s""","$key":$obj""" else ""
+    val stagedTotal = rows.map(_._2).sum - declaredTotal
+    s"""{"metric":"total","value":$declaredTotal,"unit":"sec",""" +
+      s""""declared_rows":$declaredRows,"staged_rows":${rows.size - declaredRows},""" +
+      s""""staged_total_sec":$stagedTotal,"queries":${jsonObj(rows)(_.toString)}""" +
+      opt("warm", jsonObj(warm)(_.toString), warm.nonEmpty) +
+      opt("isolated", jsonObj(isolated.map(t => t._1 -> t._2))(_.toString), isolated.nonEmpty) +
+      opt("isolated_warm", jsonObj(isolated.collect { case (k, _, Some(w)) => k -> w })(_.toString),
+        isolated.exists(_._3.isDefined)) +
+      opt("isolated_stats", jsonObj(isoStats) { case (mn, md, mx, n) =>
+        s"""{"min":${jsonNum(mn, 3)},"med":${jsonNum(md, 3)},"max":${jsonNum(mx, 3)},"n":$n}"""
+      }, isoStats.nonEmpty) +
+      s""","shared_over_isolated_flags":${jsonObj(flagged)(jsonNum(_, 2))}""" +
+      history.fold("") { case (flags, n) =>
+        s""","vs_history_flags":${jsonObj(flags)(jsonNum(_, 2))},"history_rows":$n""" } +
+      s""","isolation_skipped":${jsonObj(skipped)(jsonStr)}""" +
+      s""","host_load":${jsonObj(load)(jsonNum(_, 2))},"sf":${jsonStr(sf)}}"""
   }
 
   /** Compact driver line (r16 verdict item 1): the driver's BENCH artifact
@@ -205,14 +289,12 @@ object Bench {
     val sorted = allRows.sortBy(-_._2)
     def render(n: Int): String = {
       val shown = sorted.take(math.max(n, 1))
-      val qs = shown
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
-        .mkString("{", ",", "}")
-      f"""{"metric":"total","value":$declaredTotal%.3f,"unit":"sec",""" +
+      s"""{"metric":"total","value":${jsonNum(declaredTotal, 3)},"unit":"sec",""" +
         s""""declared_rows":$declaredRows,"staged_rows":$stagedRows,""" +
-        f""""staged_total_sec":$stagedTotal%.2f,"cpus":"$cpus",""" +
-        s""""queries":$qs,"rows_shown":${shown.size},"rows_total":${sorted.size},""" +
-        s""""full_artifact":"$fullArtifact","sf":"$sf"}"""
+        s""""staged_total_sec":${jsonNum(stagedTotal, 2)},"cpus":${jsonStr(cpus)},""" +
+        s""""queries":${jsonObj(shown)(jsonNum(_, 2))},""" +
+        s""""rows_shown":${shown.size},"rows_total":${sorted.size},""" +
+        s""""full_artifact":${jsonStr(fullArtifact)},"sf":${jsonStr(sf)}}"""
     }
     Iterator.iterate(40)(_ - 5)
       .map(n => (n, render(n)))
@@ -869,17 +951,12 @@ object Bench {
     val runsByName = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ListBuffer[(Double, Option[Double])]]
     val skipReasons = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def isolatedTriples: Seq[(String, Double, Option[Double])] =
-      runsByName.toSeq.map { case (n, runs) =>
-        val colds = runs.map(_._1).toSeq.sorted
-        val warms = runs.flatMap(_._2).toSeq.sorted
-        (n, colds(colds.size / 2), warms.drop(warms.size / 2).headOption)
-      }
+    def isoRuns = runsByName.toSeq.map { case (n, runs) => n -> runs.toSeq }
     // Structural adjudication (r11 verdict item 1c): any row whose SHARED
     // figure is ≥2× its isolated MEDIAN in the SAME artifact is flagged in
     // the line itself — BASELINE.md must carry a named cause for each.
     def flaggedNow: Seq[(String, Double)] =
-      isolatedTriples.flatMap { case (k, isoSec, _) =>
+      isolatedMedians(isoRuns).flatMap { case (k, isoSec, _) =>
         sharedMap.get(k).filter(sh => isoSec > 0 && sh >= 2 * isoSec)
           .map(sh => k -> sh / isoSec)
       }
@@ -887,76 +964,14 @@ object Bench {
     // re-rendered incrementally after every child)
     var loadPreIso: Option[Double] = None
     var maxChildLoad: Option[Double] = None
-    // Totals, made third-party-reproducible from the artifact alone (the
-    // r10 nit: `value` vs Σqueries measured different things with nothing
-    // in the line saying so): `value` stays the DECLARED shared-pass wall
-    // (the cross-round comparable), and the breakdown keys state exactly
-    // which rows each total sums.
-    def renderLine(): String = {
-      val isolated = isolatedTriples
-      val isoStats = runsByName.toSeq.map { case (n, runs) =>
-        val colds = runs.map(_._1).toSeq.sorted
-        n -> (colds.min, colds(colds.size / 2), colds.max, runs.size)
-      }
-      val qs = allRows
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val allWarm = warmRows ++ stagedWarm
-      val warm = allWarm.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString(""","warm":{""", ",", "}")
-      val iso = isolated.map { case (k, v, _) => "\"" + k + "\":" + v }
-        .mkString(""","isolated":{""", ",", "}")
-      val isoWarm = isolated.collect { case (k, _, Some(w)) => "\"" + k + "\":" + w }
-        .mkString(""","isolated_warm":{""", ",", "}")
-      // per-row spread over the fresh-JVM children (the "isolated" map
-      // carries the median); n=1 rows are IN here too — a single-child
-      // figure is still an isolated figure, and the coverage contract
-      // below counts it
-      val isoStatsJson = isoStats.map { case (k, (mn, md, mx, n)) =>
-        "\"" + k + "\":" + f"""{"min":$mn%.3f,"med":$md%.3f,"max":$mx%.3f,"n":$n}"""
-      }.mkString(""","isolated_stats":{""", ",", "}")
-      val flagsJson = flaggedNow.map { case (k, r) => "\"" + k + "\":" + f"$r%.2f" }
-        .mkString(""","shared_over_isolated_flags":{""", ",", "}")
-      // flags vs the COMMITTED history: a contended same-run isolation
-      // pass can no longer invalidate the adjudication — the committed
-      // median is this run's independent anchor (r15 verdict item 4).
-      // ALWAYS present on a full run, with `history_rows` beside it, so
-      // "flags computed, clean" ({} with rows>0) is distinguishable from
-      // "history file missing/unreadable" ({} with rows=0) — the r12
-      // distinguishability rule applied to this flag set too. ONLY runs
-      // omit both keys (their figures carry unamortized session cost and
-      // must not stamp flags into adjudication artifacts).
-      val histJson = histFlags.map { case (k, r) => "\"" + k + "\":" + f"$r%.2f" }
-        .mkString(""","vs_history_flags":{""", ",", s"""},"history_rows":${history.size}""")
-      // host-load stamps (r15 verdict item 6): start-of-run, before the
-      // isolation pass, and the max sampled before any child — the
-      // contended-run tells the last two postmortems needed
-      val loadJson = (Seq("start" -> loadStart) ++
-          loadPreIso.map("pre_isolation" -> _) ++
-          maxChildLoad.map("max_pre_child" -> _))
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
-        .mkString(""","host_load":{""", ",", "}")
-      // COVERAGE CONTRACT (r14 verdict item 2): every planned row is in
-      // `isolated_stats` or in `isolation_skipped` with a reason — at an
-      // incremental write the not-yet-attempted rows read "pending", so
-      // even a kill -9 leaves an artifact that names its own holes.
-      // Always present, {} when fully covered.
-      val skippedNow = plannedNames.filterNot(runsByName.contains)
-        .map(n => n -> skipReasons.getOrElse(n, "pending"))
-      val skippedJson = skippedNow.map { case (k, r) => "\"" + k + "\":\"" + r + "\"" }
-        .mkString(""","isolation_skipped":{""", ",", "}")
-      val total = results.map(_._2).sum
-      val stagedTotal = allRows.map(_._2).sum - total
-      s"""{"metric":"total","value":$total,"unit":"sec","declared_rows":${results.size},"staged_rows":${allRows.size - results.size},"staged_total_sec":$stagedTotal,"queries":$qs${
-        if (allWarm.nonEmpty) warm else ""}${
-        if (isolated.nonEmpty) iso else ""}${
-        if (isolated.exists(_._3.isDefined)) isoWarm else ""}${
-        if (isoStats.nonEmpty) isoStatsJson else ""}${
-        // always present, {} when clean (r12 verdict item 5): a third party
-        // reading the artifact can distinguish "zero flags" from a pre-flag
-        // bench version that never computed them
-        flagsJson}${if (only.isEmpty) histJson else ""}$skippedJson$loadJson,"sf":"$sfDir"}"""
-    }
+    def renderLine(): String = fullLine(
+      allRows, results.size, results.map(_._2).sum, warmRows ++ stagedWarm,
+      isoRuns, flaggedNow, if (only.isEmpty) Some((histFlags, history.size)) else None,
+      plannedNames.filterNot(runsByName.contains)
+        .map(n => n -> skipReasons.getOrElse(n, "pending")),
+      Seq("start" -> loadStart) ++ loadPreIso.map("pre_isolation" -> _) ++
+        maxChildLoad.map("max_pre_child" -> _),
+      sfDir)
     // The driver's artifact keeps only the stdout TAIL, which truncates the
     // per-query map on a 95-query run — persist the complete line to a file
     // (override path via SPARK_GRAFT_BENCH_OUT) so every round's numbers

@@ -68,14 +68,20 @@ object GraftSession {
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
   /** Runtime SQL confs every entry point needs, applicable to an existing
-    * session (all of these are runtime-settable SQLConfs). */
+    * session (all of these are runtime-settable SQLConfs). AQE stays on
+    * because [[GraftStore.insert]] sizes its files from AQE's shuffle
+    * coalescing. The excluded optimizer rules are MERGED into the host's
+    * list, never overwrite it: a rule the host application excluded stays
+    * excluded. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold",
       AdaptiveBroadcastThreshold)
-    spark.conf.set("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, (spark.conf.getOption(excluded).toSeq :+ ExcludedOptimizerRules)
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).distinct.mkString(","))
     graft.functions.SeriesFunctions.register(spark)
     spark
   }

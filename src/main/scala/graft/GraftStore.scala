@@ -26,6 +26,11 @@ import org.apache.spark.sql.functions._
   * a time range is partition pruning + row-group skipping + a per-file
   * sorted run — the Spark shape of catena's partition-list binary search +
   * series extent seek.
+  *
+  * Like catena's writable memory partition, an unsealed day takes appends
+  * in files sized from each batch ([[insert]]); only sealed and bulk
+  * writes ([[compact]], [[GraftStore.create]]) pay the `seriesBuckets`
+  * read layout.
   */
 class GraftStore(spark: SparkSession, dir: String) {
 
@@ -38,14 +43,27 @@ class GraftStore(spark: SparkSession, dir: String) {
     * pointers this IS the plain partition-discovery read. */
   def table: DataFrame = BucketedLayout.readEvents(spark, dir)
 
-  /** Append a batch of points (same schema as the events table). The write
-    * clusters into the bucketed layout; days touched by `points` get new
-    * files (compact them when sealed). */
-  def insert(points: DataFrame, seriesBuckets: Int = 8): Unit =
+  /** Append a batch of points (same schema as the events table). Days
+    * touched by `points` get new files (compact them when sealed).
+    *
+    * The file count follows the batch, not the sealed layout: the series
+    * hash repartition sets no partition count, so AQE coalesces the
+    * shuffle to the batch's measured size — a small batch writes one file
+    * per touched day, a large one still spreads over many. Coalescing
+    * merges whole hash partitions, so each series stays in one file per
+    * insert, sorted by (user_id, event_type, ts). The sort leads with
+    * `day`: the partitioned write requires that ordering, and without it
+    * the planner replaces the series sort with a bare sort by day. This
+    * relies on AQE partition coalescing being on, which
+    * [[GraftSession.build]] and [[GraftSession.tune]] set; without it
+    * every insert writes `spark.sql.shuffle.partitions` files per day. The
+    * read-optimized `seriesBuckets` fan-out is paid once, when [[compact]]
+    * seals the day. */
+  def insert(points: DataFrame): Unit =
     points
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-      .repartition(seriesBuckets, col("user_id"), col("event_type"))
-      .sortWithinPartitions("user_id", "event_type", "ts")
+      .repartition(col("user_id"), col("event_type"))
+      .sortWithinPartitions("day", "user_id", "event_type", "ts")
       .write.partitionBy("day").mode("append").parquet(dir)
 
   /** The catena iterator: one series, optional [from, until) range, points

@@ -51,6 +51,44 @@ object ConnectedComponents {
         struct(col(b).as(outA), col(a).as(outB)))).as("e"))
       .select(col(s"e.$outA").as(outA), col(s"e.$outB").as(outB))
 
+  /** Drop an eagerly local-checkpointed frame's blocks: its plan IS a
+    * LogicalRDD leaf, and unpersisting that leaf's RDD frees them. */
+  private[graft] def releaseLocal(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+    case _ => ()
+  }
+
+  /** Two independent eager materializations submitted CONCURRENTLY
+    * (guide §2.6 — actions are sequential only because the driver calls
+    * them sequentially): at sf the contracted tables are tiny and each
+    * round's wall is dominated by per-job scheduling latency, so
+    * overlapping the two per-round checkpoints (labels, contracted edges)
+    * halves that floor; at scale the two jobs simply share the cluster.
+    * join() gives the happens-before edge, errors rethrow on the caller
+    * thread. When one branch fails, the other's completed result is
+    * `release`d before the error propagates; when both fail, f2's error is
+    * thrown with f1's attached as suppressed. */
+  private[graft] def par2(f1: => DataFrame, f2: => DataFrame,
+                          release: DataFrame => Unit): (DataFrame, DataFrame) = {
+    var r1: DataFrame = null
+    var err: Throwable = null
+    val th = new Thread(() => try r1 = f1 catch { case e: Throwable => err = e })
+    th.start()
+    def fail(e: Throwable, sibling: DataFrame): Nothing = {
+      if (sibling != null)
+        try release(sibling) catch { case x: Throwable => e.addSuppressed(x) }
+      throw e
+    }
+    val r2 = try f2 catch { case e: Throwable =>
+      th.join()
+      if (err != null) e.addSuppressed(err)
+      fail(e, r1)
+    }
+    th.join()
+    if (err != null) fail(err, r2)
+    (r1, r2)
+  }
+
   /** nodes: (id: long); edges: (id_a, id_b) undirected, any orientation.
     * Returns (id, comp) with comp = min id of the node's component.
     * `checkpointDir`: when set, per-round lineage truncation uses reliable
@@ -83,35 +121,13 @@ object ConnectedComponents {
     // no-op in reliable mode: those rounds live as checkpoint FILES (the
     // recover-from-executor-churn point of that mode), not storage blocks
     val release: DataFrame => Unit =
-      if (checkpointDir.isDefined) _ => ()
-      else df => df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      }
-    // Two independent eager materializations submitted CONCURRENTLY
-    // (guide §2.6 — actions are sequential only because the driver calls
-    // them sequentially): at sf the contracted tables are tiny and each
-    // round's wall is dominated by per-job scheduling latency, so
-    // overlapping the two per-round checkpoints (labels, contracted
-    // edges) halves that floor; at scale the two jobs simply share the
-    // cluster. join() gives the happens-before edge, errors rethrow on
-    // the caller thread.
-    def par2(f1: => DataFrame, f2: => DataFrame): (DataFrame, DataFrame) = {
-      var r1: DataFrame = null
-      var err: Throwable = null
-      val th = new Thread(() => try r1 = f1 catch { case e: Throwable => err = e })
-      th.start()
-      val r2 = try f2 catch { case e: Throwable => th.join(); throw e }
-      th.join()
-      if (err != null) throw err
-      (r1, r2)
-    }
+      if (checkpointDir.isDefined) _ => () else releaseLocal
     var (lab, g) = par2(
       ckpt(nodes.select(col("id"), col("id").as("comp"))),
       // symmetric edges between current representatives (initially the
       // nodes) — [[symmetrize]]: ONE pass of the (often unmaterialized)
       // edge plan, not a self-union (r13 verdict item 3)
-      ckpt(symmetrize(edges, "id_a", "id_b", "a", "b")))
+      ckpt(symmetrize(edges, "id_a", "id_b", "a", "b")), release)
     var round = 0
     var converged = false
     while (!converged) {
@@ -132,6 +148,11 @@ object ConnectedComponents {
         converged = true
         hookPre.unpersist(false)
       } else {
+        if (round >= maxRounds) { // failing: free this call's blocks first
+          hookPre.unpersist(false)
+          release(lab)
+          release(g)
+        }
         require(round < maxRounds,
           s"connected components did not converge in $maxRounds rounds")
         val oldLab = lab
@@ -181,7 +202,7 @@ object ConnectedComponents {
           ckpt(g.join(h1, col("a") === col("ra")).join(h2, col("b") === col("rb"))
             .select(col("ta").as("a"), col("tb").as("b"))
             .filter(col("a") =!= col("b"))
-            .distinct()))
+            .distinct()), release)
         lab = labN
         g = gN
         // this round's lab/g are checkpointed leaves; the previous round's

@@ -27,6 +27,12 @@ import org.apache.spark.sql.functions._
   *  - One compaction pass per sealed day (`compactDay`) rewrites the
   *    many small files a streaming trigger leaves behind into `n` sorted
   *    files — catena's memory-partition → file-partition seal, as a job.
+  *
+  * The `seriesBuckets` fan-out is the layout of SEALED and bulk-written
+  * data only (`writeEvents`, `migrate`, `compactDay`). Unsealed appends
+  * ([[graft.GraftStore.insert]], streaming triggers) write files sized
+  * from their data — same series hash and sort, but as few files as AQE
+  * coalesces the batch to — and the seal brings them to `n` buckets.
   */
 object BucketedLayout {
 

@@ -179,4 +179,34 @@ class BenchSpec extends AnyFunSuite {
     assert(line.contains("\"b\":2.00") && line.contains("\"a\":1.00"))
     assert(line.length <= 1800)
   }
+
+  test("compactLine and fullLine are valid JSON under a comma-decimal locale " +
+       "and with quotes in row names") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val rows = Seq("q\"quoted\\row" -> 1.5, "plain" -> 0.25)
+      val compact = mapper.readTree(Bench.compactLine(1.75, 2, 0, 0.0, rows,
+        "/data/sf\"0.1", "4", "bench \"last\".json"))
+      assert(compact.get("value").asDouble === 1.75)
+      assert(compact.get("queries").get("q\"quoted\\row").asDouble === 1.5)
+      assert(compact.get("sf").asText === "/data/sf\"0.1")
+      assert(compact.get("full_artifact").asText === "bench \"last\".json")
+      val full = mapper.readTree(Bench.fullLine(rows, 1, 1.5, Seq("plain" -> 0.5),
+        Seq("q\"quoted\\row" -> Seq((1.25, Some(1.0)), (1.5, None))),
+        Seq("q\"quoted\\row" -> 2.5), Some((Seq("plain" -> 3.25), 7)),
+        Seq("x\"skipped" -> "budget"), Seq("start" -> 0.5), "/data/sf\"0.1"))
+      assert(full.get("queries").get("q\"quoted\\row").asDouble === 1.5)
+      assert(full.get("staged_total_sec").asDouble === 0.25)
+      assert(full.get("isolated_stats").get("q\"quoted\\row").get("max").asDouble === 1.5)
+      assert(full.get("isolated_warm").get("q\"quoted\\row").asDouble === 1.0)
+      assert(full.get("shared_over_isolated_flags").get("q\"quoted\\row").asDouble === 2.5)
+      assert(full.get("vs_history_flags").get("plain").asDouble === 3.25)
+      assert(full.get("history_rows").asInt === 7)
+      assert(full.get("isolation_skipped").get("x\"skipped").asText === "budget")
+      assert(full.get("host_load").get("start").asDouble === 0.5)
+      assert(full.get("sf").asText === "/data/sf\"0.1")
+    } finally java.util.Locale.setDefault(prev)
+  }
 }

@@ -234,7 +234,7 @@ class BucketedLayoutSpec extends SparkSpecBase {
       .limit(7).withColumn("event_id", col("event_id") + 1000000L)
     val lateN = late.count()
     assert(lateN > 0)
-    store.insert(late, seriesBuckets = 1)
+    store.insert(late)
     assert(dayCount() === before + lateN,
       "late appends to a pointered day are invisible to readEvents")
     assert(store.table.filter(col("day") === day).count() === before + lateN,
@@ -376,7 +376,7 @@ class BucketedLayoutSpec extends SparkSpecBase {
         date_format(col("ts"), "yyyy-MM-dd") === day)
       .limit(5).withColumn("event_id", col("event_id") + 1000000L)
     val lateN = late.count()
-    store.insert(late, seriesBuckets = 1)
+    store.insert(late)
     // DAMAGE: the pointed-to generation is externally destroyed; only
     // the deferred predecessor g1 still holds the day's folded history.
     // A manifest-less MID-STAGE orphan with newer nanos must not shadow
@@ -430,7 +430,7 @@ class BucketedLayoutSpec extends SparkSpecBase {
         date_format(col("ts"), "yyyy-MM-dd") === day)
       .limit(3).withColumn("event_id", col("event_id") + 3000000L)
     val lateN = late.count()
-    new GraftStore(spark, dir).insert(late, seriesBuckets = 1)
+    new GraftStore(spark, dir).insert(late)
     fsys.listStatus(new Path(dir)).map(_.getPath.getName)
       .filter(_.startsWith(s".day=${day}_g"))
       .foreach(n => fsys.delete(new Path(s"$dir/$n"), true))

@@ -2,6 +2,8 @@ package graft
 
 import graft.functions.ConnectedComponents
 import graft.operators.TextOps
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 class ConnectedComponentsSpec extends SparkSpecBase {
@@ -12,6 +14,55 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       nodes.toDF("id"),
       edges.toDF("id_a", "id_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Whether an eagerly local-checkpointed frame still holds its blocks. */
+  private def holdsBlocks(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case l: LogicalRDD => spark.sparkContext.getPersistentRDDs.contains(l.rdd.id)
+    case other => fail(s"not a checkpointed leaf: $other")
+  }
+
+  /** One par2 call: each branch either checkpoints a small frame (kept
+    * for inspection) or throws. */
+  private def par2(fail1: Boolean, fail2: Boolean) = {
+    val made = Array.fill[DataFrame](2)(null)
+    def branch(i: Int, fails: Boolean): DataFrame =
+      if (fails) throw new IllegalStateException(s"branch ${i + 1} failed")
+      else { made(i) = spark.range(50).toDF("id").localCheckpoint(true); made(i) }
+    val result = scala.util.Try(ConnectedComponents.par2(
+      branch(0, fail1), branch(1, fail2), ConnectedComponents.releaseLocal))
+    (result, made.toSeq)
+  }
+
+  test("par2: a failing branch releases the sibling's completed checkpoint") {
+    val (r1, made1) = par2(fail1 = false, fail2 = true)
+    assert(r1.failed.get.getMessage === "branch 2 failed")
+    assert(made1(0) != null && !holdsBlocks(made1(0)), "branch 1's checkpoint leaked")
+    val (r2, made2) = par2(fail1 = true, fail2 = false)
+    assert(r2.failed.get.getMessage === "branch 1 failed")
+    assert(made2(1) != null && !holdsBlocks(made2(1)), "branch 2's checkpoint leaked")
+  }
+
+  test("par2: when both branches fail, neither error is lost") {
+    val (r, _) = par2(fail1 = true, fail2 = true)
+    val e = r.failed.get
+    assert(e.getMessage === "branch 2 failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("branch 1 failed"))
+  }
+
+  test("par2: success returns both checkpoints, still materialized") {
+    val (r, made) = par2(fail1 = false, fail2 = false)
+    val (a, b) = r.get
+    assert((a eq made(0)) && (b eq made(1)))
+    assert(holdsBlocks(a) && holdsBlocks(b))
+    assert(a.count() === 50 && b.count() === 50)
+    Seq(a, b).foreach(ConnectedComponents.releaseLocal)
+  }
+
+  test("labels past maxRounds fails with the convergence error") {
+    val e = intercept[IllegalArgumentException](ConnectedComponents.labels(
+      Seq(1L, 2L).toDF("id"), Seq((1L, 2L)).toDF("id_a", "id_b"), maxRounds = 0))
+    assert(e.getMessage.contains("did not converge in 0 rounds"))
+  }
 
   test("cliques, chains, and singletons resolve to the component minimum") {
     // component {1,2,3} (star around 3), chain {10..14}, singleton {99}

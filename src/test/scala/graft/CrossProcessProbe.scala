@@ -171,7 +171,7 @@ object CrossProcessProbe {
         mark("INSERTING")
         (1 to batchesS.toInt).foreach { i =>
           store.insert(dayRows.withColumn("event_id",
-            col("event_id") + lit(10000000L * i)), seriesBuckets = 1)
+            col("event_id") + lit(10000000L * i)))
         }
         mark("INSERT_DONE")
 
