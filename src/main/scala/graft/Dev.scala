@@ -1,15 +1,38 @@
 package graft
 
-/** Dev helper: run a subset of SparkEntry queries and show results.
-  * Usage: runMain graft.Dev <sfDir> <name1,name2,...> [explain]
+import org.apache.spark.sql.graftbridge.Bridge
+
+/** Dev harness: `runMain graft.Dev <sfDir> <mode or queries> [explain|time]`.
+  *
+  * Modes (the second argument):
+  *  - `entry` — `SparkEntry.entry` on a bare session with none of the
+  *    builder's configs; prints `entry rows=N`.
+  *  - `stream` — two streaming ingest passes over one checkpoint into a
+  *    day-bucketed sink; prints sink vs batch row counts.
+  *  - `ingestbench[:k]` — rows/s of the batch bucketed write (input
+  *    replicated k times) and of one streaming exactly-once pass.
+  *  - `aqeplan:q1,q2,…` — the final adaptive (executed) plan of declared
+  *    queries.
+  *  - `taskprof:q1,q2,…` — warm once, time the second run, and print the
+  *    heaviest stages' task counts and max/median task times.
+  *  - `scalebench[:mult[:families]]` — the scale rehearsal: a mult× synthetic
+  *    corpus timed against sf0.1 on the production-vs-declared pairs.
+  *  - otherwise a comma-separated list of declared queries (default: all),
+  *    shown, explained (`explain`) or timed three times (`time`);
+  *    `GRAFT_DEV_CATALOG=1` installs the stats catalog first, as Bench and
+  *    Verify do.
+  *
+  * Finished one-off experiments are retired from this file once their
+  * numbers are in BASELINE.md or OPTIMIZATION_r*.md; BASELINE.md's table
+  * of retired modes says where their numbers and their code live.
   */
 object Dev {
 
-  /** Per-stage task-time tracker for the skew-stress modes: records every
-    * task's duration, reports the 3 most skewed stages since the last
-    * report/clear (max vs median task time — the cluster-imbalance number
-    * BASELINE.md's skew sections record). */
-  private final class SkewTracker(s: org.apache.spark.sql.SparkSession) {
+  /** Per-stage task-time tracker for `taskprof`: records every task's
+    * duration and reports the most skewed stages since the last
+    * report/clear (max vs median task time). Both drain the listener bus
+    * first, so a stage that finished just before the call is counted. */
+  private[graft] final class SkewTracker(s: org.apache.spark.sql.SparkSession) {
     private val stageTimes =
       scala.collection.mutable.Map[Int, scala.collection.mutable.ArrayBuffer[Long]]()
     private val stageNames = scala.collection.mutable.Map[Int, String]()
@@ -26,22 +49,27 @@ object Dev {
             sc.stageInfo.details.linesIterator.take(1).mkString.take(120)
         }
     })
-    def clear(): Unit = stageTimes.synchronized { stageTimes.clear(); stageNames.clear() }
-    def report(label: String): Unit = stageTimes.synchronized {
-      val worst = stageTimes.toSeq.map { case (sid, ts) =>
-        val srt = ts.toSeq.sorted
-        (sid, srt.last, srt(srt.size / 2), srt.size)
-      }.sortBy(-_._2).take(10)
-      worst.foreach { case (sid, mx, med, n) =>
-        println(f"[$label] stage=$sid tasks=$n max_ms=$mx med_ms=$med " +
-          f"skew=${mx.toDouble / math.max(1, med)}%.1fx  ${stageNames.getOrElse(sid, "")}")
+    def clear(): Unit = {
+      Bridge.drainListenerBus(s)
+      stageTimes.synchronized { stageTimes.clear(); stageNames.clear() }
+    }
+    def report(label: String): Unit = {
+      Bridge.drainListenerBus(s)
+      stageTimes.synchronized {
+        val worst = stageTimes.toSeq.map { case (sid, ts) =>
+          val srt = ts.toSeq.sorted
+          (sid, srt.last, srt(srt.size / 2), srt.size)
+        }.sortBy(-_._2).take(10)
+        worst.foreach { case (sid, mx, med, n) =>
+          println(f"[$label] stage=$sid tasks=$n max_ms=$mx med_ms=$med " +
+            f"skew=${mx.toDouble / math.max(1, med)}%.1fx  ${stageNames.getOrElse(sid, "")}")
+        }
+        stageTimes.clear(); stageNames.clear()
       }
-      stageTimes.clear(); stageNames.clear()
     }
   }
 
-  /** The scale-rehearsal corpus synthesizer (factored from scalebench so
-    * sigscale shares the exact fixture-statistics generator): `nDocs`
+  /** The scale-rehearsal corpus synthesizer behind `scalebench`: `nDocs`
     * documents mirroring the sf0.1 generator's measured profile —
     * 30-token vocabulary, uniform token draw, token count ~
     * Uniform(10,100), lang ≈ {en .41, others .15 each}, 20 uniform
@@ -140,899 +168,6 @@ object Dev {
       val streamSec = (System.nanoTime() - t1) / 1e9
       println(f"ingestbench rows=$n batch_sec=$batchSec%.2f batch_rows_per_s=${n / batchSec}%.0f " +
         f"stream_sec=$streamSec%.2f stream_rows_per_s=${n / streamSec}%.0f")
-      s.stop()
-      return
-    }
-    if (names == Seq("lshstats")) {
-      // candidate-volume diagnostics for the near-dup pipelines
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val docs = Tables.documents(s, sfDir)
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-      val grams = Tables.documents(s, sfDir).select(col("doc_id").as("id"),
-        expr("transform(sequence(1, length(text)-2), i -> substring(text, i, 3))").as("toks"))
-      for ((nm, items) <- Seq("q53-words" -> docs, "x02-trigrams" -> grams)) {
-        val t0 = System.nanoTime()
-        val cand = graft.functions.MinHashLSH.candidatePairs(items).count()
-        println(f"$nm candidates=$cand%,d in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      s.stop()
-      return
-    }
-    if (names == Seq("bandstress")) {
-      // x93's band-depth trade, measured: at threshold 0.5 the default
-      // 2×32 index under-recalls (miss p ≈ (1−0.25)^32 ≈ 1e-4 per
-      // boundary pair); 2×128 is verified-exact for 4× band rows. This
-      // mode times both shapes over the sfDir word-set corpus and counts
-      // the pairs each finds — the delta IS the measured miss mass.
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val docs = Tables.documents(s, sfDir)
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-      for (perms <- Seq(64, 256)) {
-        val p = graft.functions.MinHashLSH.Params(numPerm = perms, rows = 2)
-        val t0 = System.nanoTime()
-        val n = graft.functions.MinHashLSH.verifiedPairs(docs, 0.5, p).count()
-        println(f"bandstress perms=$perms bands=${p.bands} pairs=$n%,d " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      s.stop()
-      return
-    }
-    if (names == Seq("x02prof")) {
-      // stage anatomy for x02 (the slowest declared query): where do the
-      // seconds go — gram generation, dictionary encode, candidates, or
-      // the verify joins? Each stage timed after a warm pass of the same
-      // stage at sf0.001 (bench protocol).
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val tracker = new SkewTracker(s)
-      def grams(dir: String) = Tables.documents(s, dir).select(col("doc_id").as("id"),
-        graft.functions.TextExpressions.charGrams(col("text"), 3).as("toks"))
-      def time(nm: String)(f: String => Unit): Unit = {
-        f("/root/testdata/sf0.001"); f("/root/testdata/sf0.001")
-        tracker.clear()
-        val t0 = System.nanoTime(); f(sfDir)
-        println(f"[x02prof] $nm%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        tracker.report(s"x02prof/$nm")
-      }
-      time("grams") { d => grams(d).write.format("noop").mode("overwrite").save() }
-      time("candidates") { d =>
-        val n = graft.functions.MinHashLSH.candidatePairs(grams(d)).count()
-        if (d == sfDir) println(f"[x02prof]   n_candidates=$n%,d")
-      }
-      time("dictsets") { d =>
-        val w = org.apache.spark.sql.expressions.Window
-        val tok = grams(d).select(col("id"), explode(array_distinct(col("toks"))).as("tok"))
-        val vocab = tok.select("tok").distinct()
-          .withColumn("bkt", pmod(xxhash64(col("tok")), lit(256L)))
-          .withColumn("r", row_number().over(w.partitionBy("bkt").orderBy("tok")))
-          .select(col("tok"), ((col("r") - 1) * 256 + col("bkt")).cast("int").as("tid"))
-        tok.join(broadcast(vocab), "tok")
-          .groupBy("id").agg(array_sort(collect_list(col("tid"))).as("set"))
-          .write.format("noop").mode("overwrite").save()
-      }
-      time("full_x02") { d =>
-        operators.TextOps.x02NgramJaccard(s, d).write.format("noop").mode("overwrite").save()
-      }
-      // candidate-quality histogram: how much of the 12M-candidate mass is
-      // band-collision false positives, bucketed by exact trigram Jaccard —
-      // the number that decides whether banding params or verify cost is
-      // the lever (run once, not timed)
-      locally {
-        val w = org.apache.spark.sql.expressions.Window
-        val g = grams(sfDir)
-        val tok = g.select(col("id"), explode(array_distinct(col("toks"))).as("tok"))
-        val vocab = tok.select("tok").distinct()
-          .withColumn("bkt", pmod(xxhash64(col("tok")), lit(256L)))
-          .withColumn("r", row_number().over(w.partitionBy("bkt").orderBy("tok")))
-          .select(col("tok"), ((col("r") - 1) * 256 + col("bkt")).cast("int").as("tid"))
-        val sets = tok.join(broadcast(vocab), "tok")
-          .groupBy("id").agg(array_sort(collect_list(col("tid"))).as("set"),
-                             count(lit(1)).as("sz"))
-        val hist = graft.functions.MinHashLSH.candidatePairs(g)
-          .join(sets.select(col("id").as("id_a"), col("set").as("set_a"), col("sz").as("sz_a")), "id_a")
-          .join(sets.select(col("id").as("id_b"), col("set").as("set_b"), col("sz").as("sz_b")), "id_b")
-          .withColumn("inter", graft.functions.VectorExpressions
-            .sortedIntersectInt(col("set_a"), col("set_b")).cast("double"))
-          .withColumn("jac", col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
-          .groupBy(floor(col("jac") * 10).as("decile")).count()
-          .orderBy("decile").collect()
-        hist.foreach(r => println(f"[x02prof] jac_decile=${r.getLong(0)} n=${r.getLong(1)}%,d"))
-      }
-      s.stop()
-      return
-    }
-    if (names == Seq("x42prof")) {
-      // stage anatomy for the SignatureStore increment vs the direct
-      // crossVerifiedPairs recompute
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val toks = Tables.documents(s, sfDir)
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-      val batch = toks.filter(pmod(col("id"), lit(7L)) === 0)
-      val corpus = toks.filter(pmod(col("id"), lit(7L)) =!= 0)
-      val dir = java.nio.file.Files.createTempDirectory("sigstore").toString
-      sources.SignatureStore.write(s, corpus, dir, buckets = 32)
-      def t(nm: String)(f: => Unit): Unit = {
-        f; val t0 = System.nanoTime(); f
-        println(f"[x42prof] $nm%-10s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      t("store") { sources.SignatureStore.incrementPairs(s, batch, 0.8)
-        .write.format("noop").mode("overwrite").save() }
-      t("direct") { graft.functions.MinHashLSH.crossVerifiedPairs(batch, corpus, 0.8)
-        .write.format("noop").mode("overwrite").save() }
-      s.stop()
-      return
-    }
-    if (names == Seq("x93stages")) {
-      // r14 verdict item 4: NAME where x93_containment's wall goes — each
-      // stage below is a strict prefix of the 2×128 containment pipeline
-      // (signature kernel → band join + first-match dedup + size prune →
-      // payload joins + exact verify → containment tail), so per-stage
-      // attribution = the deltas between consecutive rows. The 2×32 shape
-      // (the staged x93_b32 row) runs beside it: if every stage scales
-      // ~linearly in the band count, the 2×128-vs-2×32 gap is the priced
-      // band-depth trade, not a plan defect. Warm-once/time-second, the
-      // x42prof protocol.
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val toks = Tables.documents(s, sfDir)
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-        .localCheckpoint(true) // stage timings must not re-pay the scan
-      def t(nm: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); val t0 = System.nanoTime(); run()
-        println(f"[x93stages] $nm%-16s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      Seq(64, 256).foreach { np =>
-        val p = graft.functions.MinHashLSH.Params(numPerm = np, rows = 2)
-        println(s"[x93stages] ---- numPerm=$np (bands=${p.bands}) ----")
-        t("signatures") {
-          toks.select(col("id"), graft.functions.VectorExpressions
-            .minhashBandKeys(col("toks"), np, 2).as("bands"))
-        }
-        t("candidates") {
-          graft.functions.MinHashLSH.candidatePairsSized(toks, 0.5, p)
-        }
-        t("verify") {
-          graft.functions.MinHashLSH.verifiedPairsDetailed(toks, 0.5, p)
-        }
-        t("full_x93") { operators.TextOps.x93ContainmentWith(s, sfDir, np) }
-        val cand = graft.functions.MinHashLSH.candidatePairsSized(toks, 0.5, p).count()
-        val ver = graft.functions.MinHashLSH.verifiedPairsDetailed(toks, 0.5, p).count()
-        println(s"[x93stages] volumes: candidates=$cand verified=$ver")
-      }
-      s.stop()
-      return
-    }
-    if (names == Seq("x106prof")) {
-      // r16 verdict item 3: x106_exact_pairs runs at the SAME speed on 8
-      // and 32 cores (~18–19 s) — some stage is serial or parallelism-
-      // capped. This mode times each pipeline prefix (warm-once/time-
-      // second, the x42prof protocol) and, via SkewTracker, prints the
-      // task COUNT and max/median skew of the 3 heaviest stages in each —
-      // a stage with tasks≈2 at local[32] is the flat-scaling culprit.
-      // The sub-frames replicate AllPairsJoin.exactPairs' internals
-      // verbatim (dev-only; the operator itself is untouched).
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val tracker = new SkewTracker(s)
-      val t = 0.8
-      val items = Tables.documents(s, sfDir)
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-        .localCheckpoint(true) // stage timings must not re-pay the scan
-      val tok = items.select(col("id"), explode(array_distinct(col("toks"))).as("tok"))
-      val dfreq = tok.groupBy("tok").agg(count(lit(1)).as("df"))
-      val ordered = tok.join(dfreq, "tok")
-        .groupBy("id")
-        .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("ord"),
-             count(lit(1)).as("sz"))
-      def prefixed(frac: Double) = ordered
-        .withColumn("p",
-          (col("sz") - floor(lit(frac) * col("sz").cast("double")) + 1).cast("int"))
-        .select(col("id"), col("sz"),
-          posexplode(slice(col("ord"), lit(1), col("p"))).as(Seq("pos0", "pt")))
-        .select(col("id"), col("sz"), (col("pos0") + 1).as("pos"),
-          col("pt.tok").as("tok"))
-      val probe = prefixed(t)
-        .select(col("id").as("id_x"), col("sz").as("sz_x"), col("pos").as("pos_x"), col("tok"))
-      val index = prefixed(2 * t / (1 + t))
-        .select(col("id").as("id_y"), col("sz").as("sz_y"), col("pos").as("pos_y"), col("tok"))
-      val joined = probe.join(index, "tok")
-        .filter(col("sz_y") < col("sz_x")
-          || (col("sz_y") === col("sz_x") && col("id_y") < col("id_x")))
-        .filter(least(col("sz_x"), col("sz_y")).cast("double") >=
-                lit(t) * greatest(col("sz_x"), col("sz_y")).cast("double") - lit(1.0))
-        .filter((lit(1) + least(col("sz_x") - col("pos_x"), col("sz_y") - col("pos_y")))
-          .cast("double") >=
-          (lit(t / (1 + t)) * (col("sz_x") + col("sz_y")).cast("double") - lit(1.0)))
-      val cand = joined
-        .select(least(col("id_x"), col("id_y")).as("id_a"),
-          greatest(col("id_x"), col("id_y")).as("id_b"),
-          when(col("id_x") < col("id_y"), col("sz_x")).otherwise(col("sz_y")).as("sz_a"),
-          when(col("id_x") < col("id_y"), col("sz_y")).otherwise(col("sz_x")).as("sz_b"))
-        .distinct()
-      def time(nm: String)(f: => Unit): Unit = {
-        f // warm
-        tracker.clear()
-        val t0 = System.nanoTime(); f
-        println(f"[x106prof] $nm%-14s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        tracker.report(s"x106prof/$nm")
-      }
-      time("dfreq")   { dfreq.write.format("noop").mode("overwrite").save() }
-      time("ordered") { ordered.write.format("noop").mode("overwrite").save() }
-      time("join_raw"){ println(s"[x106prof]   join_rows=${joined.count()}") }
-      time("cand")    { println(s"[x106prof]   cand_rows=${cand.count()}") }
-      time("full")    { graft.functions.AllPairsJoin.exactPairs(items, t)
-        .write.format("noop").mode("overwrite").save() }
-      time("full_x106"){ operators.TextOps.x106ExactPairs(s, sfDir)
-        .write.format("noop").mode("overwrite").save() }
-      s.stop()
-      return
-    }
-    if (names == Seq("x93exp2")) {
-      // r17 experiment: bucket-aggregate candidate generation
-      // (candidatePairsSizedGrouped) vs the band self-join, measured END TO
-      // END on the three declared queries that pay the collision mass —
-      // the r16 lesson (stage-level wins that lost composed) applied as
-      // protocol. Warm-once/time-second at sfDir; bucket-shape stats first
-      // (max |bucket| bounds the generator's per-task pair block).
-      import org.apache.spark.sql.functions._
-      import graft.functions.{MinHashLSH => M}
-      val s = GraftSession.build("graft-dev")
-      val toks = Tables.documents(s, sfDir)
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-      val grams = Tables.documents(s, sfDir).select(col("doc_id").as("id"),
-        graft.functions.TextExpressions.charGrams(col("text"), 3).as("toks"))
-      def bucketStats(nm: String, items: org.apache.spark.sql.DataFrame, p: M.Params): Unit = {
-        val banded = M.hashedDocs(items, p).select(col("id"),
-          posexplode(col("bands")).as(Seq("band", "sig")))
-        val st = banded.groupBy("band", "sig").agg(count(lit(1)).as("b"))
-          .agg(count(lit(1)).as("buckets"), max("b").as("max_b"),
-               sum(expr("b * (b - 1) div 2")).as("pair_mass")).collect()(0)
-        println(s"[x93exp2] $nm buckets=${st.getLong(0)} max_bucket=${st.getLong(1)} " +
-          f"pair_mass=${st.getLong(2)}%,d")
-      }
-      bucketStats("x93-words-b128", toks, M.Params(256, 2))
-      bucketStats("q53-words-b32", toks, M.Params(64, 2))
-      bucketStats("x02-grams-b32", grams, M.Params(64, 2))
-      def t(nm: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); val t0 = System.nanoTime(); run()
-        println(f"[x93exp2] $nm%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      val p93 = M.Params(256, 2)
-      def x93tail(v: org.apache.spark.sql.DataFrame) = v
-        .filter(col("inter") * 10 >= least(col("sz_a"), col("sz_b")) * 9)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("j"),
-          graft.functions.Rounding.dround(col("inter").cast("double")
-            / least(col("sz_a"), col("sz_b")).cast("double"), 4).as("containment"))
-        .transform(operators.TextOps.pinnedOrder(_, "doc_a", "doc_b"))
-      // SHJ-hinted band self-join, end to end: the broadcast relation at
-      // 2×128 is ~670 MB (640 k rows × ~1 KB band arrays) — every match
-      // is a DRAM miss; a shuffled-hash join builds ~20 MB per-partition
-      // maps instead. r16 only measured the MERGE hint composed (a loss).
-      def candSizedShj(items: org.apache.spark.sql.DataFrame, t0: Double, p: M.Params) = {
-        val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-        val hashed = items.repartition(n)
-          .select(col("id"), size(array_distinct(col("toks"))).as("sz"),
-            graft.functions.VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
-        val banded = hashed.select(col("id"), col("sz"), col("bands"),
-          posexplode(col("bands")).as(Seq("band", "sig")))
-        banded.as("a").join(banded.hint("shuffle_hash").as("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-            col("a.id") < col("b.id"))
-          .filter(least(col("a.sz"), col("b.sz")).cast("double") >=
-                  lit(t0) * greatest(col("a.sz"), col("b.sz")).cast("double") - lit(1.0))
-          .filter(graft.functions.VectorExpressions
-            .firstMatchIndex(col("a.bands"), col("b.bands")) === col("a.band"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-                  col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      }
-      t("x93_join (declared)") { operators.TextOps.x93Containment(s, sfDir) }
-      t("x93_shj") { x93tail(M.verifiedDetailedFrom(toks, 0.5,
-        candSizedShj(toks, 0.5, p93))) }
-      t("x93_grouped") { x93tail(M.verifiedDetailedFrom(toks, 0.5,
-        M.candidatePairsSizedGrouped(toks, 0.5, p93))) }
-      t("q53_join (declared)") { operators.TextOps.q53(s, sfDir) }
-      t("q53_grouped") { operators.TextOps.pinnedOrder(
-        M.verifiedDetailedFrom(toks, 0.8, M.candidatePairsSizedGrouped(toks, 0.8, M.Params()))
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("j")),
-        "doc_a", "doc_b") }
-      t("x02_join (declared)") { operators.TextOps.x02NgramJaccard(s, sfDir) }
-      t("x02_shj") { operators.TextOps.pinnedOrder(
-        M.verifiedDictFrom(grams, 0.7, candSizedShj(grams, 0.7, M.Params()))
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("j")),
-        "doc_a", "doc_b") }
-      t("x02_grouped") { operators.TextOps.pinnedOrder(
-        M.verifiedDictFrom(grams, 0.7, M.candidatePairsSizedGrouped(grams, 0.7, M.Params()))
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("j")),
-        "doc_a", "doc_b") }
-      // row-set equality spot check (the oracle gate runs separately; this
-      // is the fast inner-loop guard): symmetric difference must be empty
-      for ((nm, a, b) <- Seq(
-        ("x93", operators.TextOps.x93Containment(s, sfDir),
-          x93tail(M.verifiedDetailedFrom(toks, 0.5, M.candidatePairsSizedGrouped(toks, 0.5, p93)))),
-        ("q53", M.verifiedPairs(toks, 0.8).select("id_a", "id_b", "j"),
-          M.verifiedDetailedFrom(toks, 0.8, M.candidatePairsSizedGrouped(toks, 0.8, M.Params()))
-            .select("id_a", "id_b", "j")))) {
-        val d1 = a.exceptAll(b).count(); val d2 = b.exceptAll(a).count()
-        println(s"[x93exp2] $nm symdiff: join-only=$d1 grouped-only=$d2" +
-          (if (d1 == 0 && d2 == 0) " OK" else " MISMATCH"))
-      }
-      s.stop()
-      return
-    }
-    if (names == Seq("x93exp")) {
-      // r16 optimization experiments: (a) join strategy for the band
-      // self-join (baseline CBO-estimated broadcast vs SMJ vs shuffled
-      // hash), (b) attribution of the full-query tail past the verify
-      // (containment filter vs the contract ORDER BY). Warm-once/
-      // time-second, the x42prof protocol.
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val toks = Tables.documents(s, sfDir)
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-        .localCheckpoint(true)
-      val p = graft.functions.MinHashLSH.Params(numPerm = 256, rows = 2)
-      def t(nm: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); val t0 = System.nanoTime(); run()
-        println(f"[x93exp] $nm%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-        val olds = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-        kvs.foreach { case (k, v) => s.conf.set(k, v) }
-        try body finally olds.foreach {
-          case (k, Some(o)) => s.conf.set(k, o)
-          case (k, None)    => s.conf.unset(k)
-        }
-      }
-      t("cand_b128_baseline") {
-        graft.functions.MinHashLSH.candidatePairsSized(toks, 0.5, p) }
-      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-               "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-        t("cand_b128_smj") {
-          graft.functions.MinHashLSH.candidatePairsSized(toks, 0.5, p) }
-        withConf("spark.sql.join.preferSortMergeJoin" -> "false") {
-          t("cand_b128_shj") {
-            graft.functions.MinHashLSH.candidatePairsSized(toks, 0.5, p) }
-        }
-      }
-      // hypothesis probe: how much of the candidate stage is the 1 KB
-      // bands arrays riding BOTH sides of the band join (576M match
-      // iterations × ~1 KB build rows = memory-bandwidth-bound)?
-      def hashedNarrow = {
-        val h = Tables.documents(s, sfDir)
-          .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-          .select(col("id"),
-            size(array_distinct(col("toks"))).as("sz"),
-            graft.functions.VectorExpressions
-              .minhashBandKeys(col("toks"), 256, 2).as("bands"))
-          .filter(col("bands").isNotNull)
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-        h
-      }
-      t("cand_narrow_nofm") { // no first-match dedup — timing only
-        val h = hashedNarrow
-        val banded = h.select(col("id"), col("sz"),
-          posexplode(col("bands")).as(Seq("band", "sig")))
-        banded.as("a").join(banded.as("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-              col("a.id") < col("b.id"))
-          .filter(least(col("a.sz"), col("b.sz")).cast("double") >=
-            lit(0.5) * greatest(col("a.sz"), col("b.sz")).cast("double") - lit(1.0))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("a.band").as("band"))
-      }
-      t("cand_narrow_reattach") { // narrow join, then re-attach band arrays
-        val h = hashedNarrow
-        val arrays = h.select(col("id"), col("bands"))
-        val banded = h.select(col("id"), col("sz"),
-          posexplode(col("bands")).as(Seq("band", "sig")))
-        banded.as("a").join(banded.as("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-              col("a.id") < col("b.id"))
-          .filter(least(col("a.sz"), col("b.sz")).cast("double") >=
-            lit(0.5) * greatest(col("a.sz"), col("b.sz")).cast("double") - lit(1.0))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-            col("a.sz").as("sz_a"), col("b.sz").as("sz_b"), col("a.band").as("band"))
-          .join(arrays.select(col("id").as("id_a"), col("bands").as("ba")), "id_a")
-          .join(arrays.select(col("id").as("id_b"), col("bands").as("bb")), "id_b")
-          .filter(graft.functions.VectorExpressions
-            .firstMatchIndex(col("ba"), col("bb")) === col("band"))
-          .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-      }
-      val detail = graft.functions.MinHashLSH.verifiedPairsDetailed(toks, 0.5, p)
-      t("verify_b128") { detail }
-      def contained = graft.functions.MinHashLSH
-        .verifiedPairsDetailed(toks, 0.5, p)
-        .filter(col("inter") * 10 >= least(col("sz_a"), col("sz_b")) * 9)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("j"),
-          graft.functions.Rounding.dround(col("inter").cast("double")
-            / least(col("sz_a"), col("sz_b")).cast("double"), 4).as("containment"))
-      t("contain_noorder") { contained }
-      t("contain_ordered") { contained.orderBy("doc_a", "doc_b") }
-      s.stop()
-      return
-    }
-    if (names == Seq("x44prof")) {
-      // exact overlap matrix (x30) vs the sketch-only production path —
-      // the declared x44 runs BOTH (its verdict needs the exact answer),
-      // so its bench row can never beat x30; this isolates what the
-      // sketch path alone costs at scale
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val sh = Tables.documents(s, sfDir)
-        .select(col("source"), explode(graft.functions.TextExpressions.wordShingles(
-          split(col("text"), " "), 5)).as("sh"))
-      def sketchOnly = {
-        val sk = sh.groupBy("source").agg(hll_sketch_agg(col("sh")).as("sk"))
-        sk.as("a").join(sk.as("b"), col("a.source") < col("b.source"))
-          .select(col("a.source").as("src_a"), col("b.source").as("src_b"),
-            (hll_sketch_estimate(col("a.sk")) + hll_sketch_estimate(col("b.sk"))
-              - hll_sketch_estimate(hll_union(col("a.sk"), col("b.sk")))).as("inter_est"))
-      }
-      def t(nm: String)(f: => Unit): Unit = {
-        f; val t0 = System.nanoTime(); f
-        println(f"[x44prof] $nm%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      t("exact_x30") { operators.TextOps.x30SourceOverlap(s, sfDir)
-        .write.format("noop").mode("overwrite").save() }
-      t("sketch_only") { sketchOnly
-        .write.format("noop").mode("overwrite").save() }
-      s.stop()
-      return
-    }
-    if (names.length == 1 && names.head.startsWith("powerstress")) {
-      // Scale stress of x51's power-iteration step: a synthetic corpus of
-      // xxhash64-derived vectors (deterministic at any parallelism), run at
-      // cluster-emulating partition counts. Measures (a) single-pass wall
-      // time — the step is one scan, so rows/s IS the scaling story; (b)
-      // the constant-width-reduction claim: the only exchange carries the
-      // map-side-combined (dim, partial) rows, so its row count must be
-      // ≤ partitions·dim regardless of corpus size; (c) run-to-run
-      // determinism of the exact integer y vector.
-      // Usage: powerstress[:nVecs[:partitions]]
-      val parts = names.head.split(":")
-      val nVecs = parts.lift(1).map(_.toInt).getOrElse(1000000)
-      val s = GraftSession.build("graft-dev")
-      parts.lift(2).foreach(p => s.conf.set("spark.sql.shuffle.partitions", p))
-      import org.apache.spark.sql.functions._
-      val dim = 64
-      val vecs = s.range(nVecs).select(col("id").as("vec_id"))
-        .withColumn("embedding", expr(
-          s"transform(sequence(1, $dim), j -> " +
-          s"cast(pmod(xxhash64(vec_id, j), 2000001) / 1000000.0 - 1.0 as float))"))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-        .localCheckpoint(true) // corpus materialized once, like a real table
-      var shuffleRows = -1L
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-          if (w > 0) shuffleRows = math.max(shuffleRows, w)
-        }
-      })
-      def step(): Array[(Int, Long)] =
-        graft.operators.VectorOps.x51PowerCore(s, vecs)
-          .select("dim", "y_scaled").collect()
-          .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      step() // warm
-      shuffleRows = -1L
-      val t0 = System.nanoTime()
-      val y1 = step()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val y2 = step()
-      val partsN = s.conf.get("spark.sql.shuffle.partitions").toInt
-      println(f"powerstress vecs=$nVecs%,d dim=$dim partitions=$partsN " +
-        f"wall=$wall%.2f s rows_per_sec=${(nVecs / wall).toLong}%,d " +
-        f"shuffle_rows=$shuffleRows%,d (bound=${partsN * dim}%,d) " +
-        f"deterministic=${y1.sameElements(y2)}")
-      s.stop()
-      return
-    }
-    if (names.length == 1 && names.head.startsWith("skewstress")) {
-      // Adversarial-skew stress of the near-dup pipeline (candidate gen →
-      // exact verify → connected components → survivor argmax) on a
-      // SYNTHETIC hostile corpus: `clusterSize` docs are byte-IDENTICAL —
-      // every member shares every band key, the worst case for the band
-      // self-join — and the rest carry log-uniform (≈zipf) tokens from a
-      // 5k vocab, all derived from xxhash64(doc_id, pos): deterministic at
-      // any parallelism, no RNG. Usage:
-      //   skewstress[:nDocs[:clusterSize[:salt[:partitions]]]]
-      // (salt=1 → unsalted; partitions emulates CLUSTER width — the hot
-      // cluster creates exactly `bands`=32 hot keys, so at 32 local
-      // partitions the hot work self-balances by accident and the skew
-      // only becomes visible when partitions >> 32, as on a real cluster.)
-      // Prints per-phase wall time plus the 3 most skewed stages'
-      // max/median task times — the numbers BASELINE.md's skew section
-      // records for the salted-vs-unsalted comparison.
-      val parts = names.head.split(":")
-      val nDocs = parts.lift(1).map(_.toInt).getOrElse(50000)
-      val clusterSize = parts.lift(2).map(_.toInt).getOrElse(2000)
-      val saltN = parts.lift(3).map(_.toInt).getOrElse(1)
-      val s = GraftSession.build("graft-dev")
-      parts.lift(4).foreach(p => s.conf.set("spark.sql.shuffle.partitions", p))
-      import org.apache.spark.sql.functions._
-      val ident = (1 to 40).map(j => s"c$j").mkString(" ")
-      val docs = s.range(nDocs).select(col("id"))
-        .withColumn("toks", when(col("id") < clusterSize, split(lit(ident), " "))
-          .otherwise(expr(
-            "transform(sequence(1, 40), j -> concat('t', cast(cast(" +
-            "pow(5000.0, pmod(xxhash64(id, j), 1000000) / 1000000.0) as int) as string)))")))
-        .localCheckpoint(true) // corpus materialized once, like a real table
-      val skew = new SkewTracker(s)
-      def skewReport(label: String): Unit = skew.report(label)
-      val saltCfg = graft.functions.MinHashLSH.Salt(saltN)
-      val pairsDir = java.nio.file.Files.createTempDirectory("skewpairs").toString
-      val t0 = System.nanoTime()
-      graft.functions.MinHashLSH.verifiedPairs(docs, 0.8, s = saltCfg)
-        .write.mode("overwrite").parquet(pairsDir)
-      val tPairs = (System.nanoTime() - t0) / 1e9
-      skewReport("pairs")
-      val pairs = s.read.parquet(pairsDir)
-      val nPairs = pairs.count()
-      val t1 = System.nanoTime()
-      val labels = graft.functions.ConnectedComponents.labels(
-        docs.select(col("id")), pairs.select(col("id_a"), col("id_b")))
-      val nComp = labels.select("comp").distinct().count()
-      val tCc = (System.nanoTime() - t1) / 1e9
-      skewReport("cc")
-      // materialize through the noop sink, NOT count(): Catalyst prunes an
-      // unreferenced max_by out of an agg+count plan (Bench's own protocol)
-      val surv = labels
-        .join(docs.select(col("id"), size(col("toks")).as("n_tok")), "id")
-        .groupBy("comp")
-        .agg(max_by(col("id"), struct(col("n_tok"), -col("id"))).as("keeper"),
-             count(lit(1)).as("members"))
-      // count BEFORE the timed write and drop its stages, so tSurv and the
-      // survivor skew report both describe exactly the timed materialization
-      val nSurv = surv.count()
-      skew.clear()
-      val t2 = System.nanoTime()
-      surv.write.format("noop").mode("overwrite").save()
-      val tSurv = (System.nanoTime() - t2) / 1e9
-      skewReport("survivors")
-      println(f"skewstress docs=$nDocs cluster=$clusterSize salt=$saltN " +
-        f"pairs=$nPairs%,d components=$nComp survivors=$nSurv " +
-        f"pairs_sec=$tPairs%.1f cc_sec=$tCc%.1f surv_sec=$tSurv%.1f")
-      s.stop()
-      return
-    }
-    if (names.length == 1 && names.head.startsWith("snmstress")) {
-      // Adversarial hot-PREFIX stress of x113's sorted-neighborhood scan:
-      // `clusterSize` docs share ONE 24-char blocking prefix AND identical
-      // bodies — the worst case for any value-bucketed global rank (a
-      // first-char bucket scheme serializes the whole cluster onto one
-      // window task; the shipped repartitionByRange rank splits on the
-      // composite (k, doc_id), so the hot key spreads across partitions).
-      // The rest carry xxhash64-distinct prefixes/bodies (digit-leading, so
-      // they sort BEFORE the all-'a' cluster and the cluster stays
-      // contiguous). True pair count is closed-form: the cluster is
-      // adjacent in sort order and verifies at j=1 within the w-window —
-      // clusterSize·w − w(w+1)/2 pairs, random docs contribute none.
-      // Usage: snmstress[:nDocs[:clusterSize[:partitions]]]
-      val parts = names.head.split(":")
-      val nDocs = parts.lift(1).map(_.toInt).getOrElse(50000)
-      val clusterSize = parts.lift(2).map(_.toInt).getOrElse(10000)
-      val s = GraftSession.build("graft-dev")
-      parts.lift(3).foreach(p => s.conf.set("spark.sql.shuffle.partitions", p))
-      import org.apache.spark.sql.functions._
-      val hot = ("a" * 24) + " hot cluster body shared tokens"
-      val docs = s.range(nDocs).select(col("id").as("doc_id"))
-        .withColumn("text", when(col("doc_id") < clusterSize, lit(hot))
-          .otherwise(expr("concat(cast(xxhash64(doc_id) as string), " +
-            "' body', cast(doc_id as string))")))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-        .localCheckpoint(true) // corpus materialized once, like a real table
-      val skew = new SkewTracker(s)
-      val wN = 8
-      val outDir = java.nio.file.Files.createTempDirectory("snmpairs").toString
-      val t0 = System.nanoTime()
-      graft.operators.TextOps.snmPairsOf(docs, wN, 0.8)
-        .write.mode("overwrite").parquet(outDir)
-      val tPairs = (System.nanoTime() - t0) / 1e9
-      skew.report("snm")
-      val got = s.read.parquet(outDir)
-      val nPairs = got.count()
-      val inCluster = got.filter(col("doc_b") < clusterSize).count()
-      val expected = clusterSize.toLong * wN - wN.toLong * (wN + 1) / 2
-      println(f"snmstress docs=$nDocs cluster=$clusterSize " +
-        f"pairs=$nPairs%,d cluster_pairs=$inCluster%,d expected=$expected%,d " +
-        f"exact=${inCluster == expected} wall_sec=$tPairs%.1f")
-      s.stop()
-      return
-    }
-    if (names.length == 1 && names.head.startsWith("vecskewstress")) {
-      // Adversarial-skew stress of x12's SRP band join — the embedding
-      // analogue of skewstress: `clusterSize` vectors are byte-IDENTICAL
-      // (identical sign sketches share every one of the 32 band keys, the
-      // worst case for the band self-join); the rest are xxhash64-derived
-      // uniform noise in [-1,1]^64, near-orthogonal in expectation, so
-      // accidental cos >= 0.9 pairs are ~impossible and the TRUE pair count
-      // is closed-form: C(clusterSize, 2). Deterministic at any
-      // parallelism. Usage: vecskewstress[:nVecs[:clusterSize[:partitions]]]
-      // (like skewstress, the hot cluster makes exactly `bands`=32 hot
-      // keys — skew shows when partitions >> 32, as on a real cluster).
-      val parts = names.head.split(":")
-      val nVecs = parts.lift(1).map(_.toInt).getOrElse(50000)
-      val clusterSize = parts.lift(2).map(_.toInt).getOrElse(10000)
-      val s = GraftSession.build("graft-dev")
-      parts.lift(3).foreach(p => s.conf.set("spark.sql.shuffle.partitions", p))
-      import org.apache.spark.sql.functions._
-      val dim = 64
-      def vec(seed: String) = expr(
-        s"transform(sequence(1, $dim), j -> " +
-        s"cast(pmod(xxhash64($seed, j), 2000001) / 1000000.0 - 1.0 as float))")
-      val vecs = s.range(nVecs).select(col("id").as("vec_id"))
-        .withColumn("embedding",
-          when(col("vec_id") < clusterSize, vec("-1")).otherwise(vec("vec_id")))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-        .localCheckpoint(true) // corpus materialized once, like a real table
-      val skew = new SkewTracker(s)
-      val pairsDir = java.nio.file.Files.createTempDirectory("vecskewpairs").toString
-      val t0 = System.nanoTime()
-      graft.operators.VectorOps.srpVerifiedPairs(vecs, vecs, 0.9)
-        .write.mode("overwrite").parquet(pairsDir)
-      val tPairs = (System.nanoTime() - t0) / 1e9
-      skew.report("pairs")
-      val got = s.read.parquet(pairsDir)
-      val nPairs = got.count()
-      val clusterPairs = got.filter(col("id_a") < clusterSize &&
-                                    col("id_b") < clusterSize).count()
-      val expected = clusterSize.toLong * (clusterSize - 1) / 2
-      println(f"vecskewstress vecs=$nVecs cluster=$clusterSize " +
-        f"pairs=$nPairs%,d cluster_pairs=$clusterPairs%,d expected=$expected%,d " +
-        f"exact=${clusterPairs == expected} pairs_sec=$tPairs%.1f")
-      s.stop()
-      return
-    }
-    if (names.length == 1 && names.head.startsWith("mergestress")) {
-      // Scale stress of the VersionedStore copy-on-write claim: a synthetic
-      // corpus of n docs, a churn confined to `churnB` of `buckets` hash
-      // buckets, one merge. Measures (a) merge wall; (b) the PROPORTIONALITY
-      // claim directly — bytes written by the new generation over the
-      // store's resident bytes must track churnB/buckets, since untouched
-      // buckets are manifest-shared, not copied.
-      // Usage: mergestress[:nDocs[:churnBuckets[:buckets]]]
-      val parts = names.head.split(":")
-      val nDocs = parts.lift(1).map(_.toInt).getOrElse(1000000)
-      val churnB = parts.lift(2).map(_.toInt).getOrElse(4)
-      val buckets = parts.lift(3).map(_.toInt).getOrElse(64)
-      val s = GraftSession.build("graft-dev")
-      import org.apache.spark.sql.functions._
-      def corpus(tag: String) = s.range(nDocs).select(col("id").as("doc_id"))
-        .withColumn("text",
-          expr(s"concat('$tag ', repeat(cast(xxhash64(doc_id) as string), 10))"))
-        .withColumn("lang", expr(
-          "element_at(array('de','en','es','fr','zh'), cast(pmod(doc_id, 5) + 1 as int))"))
-        .withColumn("source", concat(lit("src"), pmod(col("doc_id"), lit(20L))))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      val dir = java.nio.file.Files.createTempDirectory("mergestress").toString
-      val store = new graft.sources.VersionedStore(s, dir)
-      store.write(corpus("v0"), buckets)
-      def dirBytes(p: String): Long = {
-        def walk(f: java.io.File): Long =
-          if (f.isFile) f.length()
-          else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-        walk(new java.io.File(p))
-      }
-      val residentBytes = dirBytes(s"$dir/gen=0")
-      val ups = corpus("v1")
-        .filter(pmod(col("doc_id"), lit(buckets.toLong)) < churnB)
-      val nUps = ups.count()
-      val noDeletes = s.range(0).select(col("id").as("doc_id"))
-      val t0 = System.nanoTime()
-      store.merge(ups, noDeletes)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val newBytes = dirBytes(s"$dir/gen=1")
-      println(f"mergestress docs=$nDocs%,d churn_buckets=$churnB/$buckets " +
-        f"upserts=$nUps%,d wall=$wall%.2f s " +
-        f"new_gen_bytes=$newBytes%,d resident_bytes=$residentBytes%,d " +
-        f"rewrite_frac=${newBytes.toDouble / residentBytes}%.4f " +
-        f"(bucket_frac=${churnB.toDouble / buckets}%.4f)")
-      s.stop()
-      return
-    }
-    if (names.length == 1 && names.head.startsWith("clustercorpus")) {
-      // Synthesize a CLUSTERED embedding corpus (X148Spec's planted shape
-      // at arbitrary scale): 10 hash-derived unit centers, each vector =
-      // normalize(center + 0.15·noise), label = cluster. The locality
-      // regime where the x37 gate APPROVES IVF candidates — the
-      // counterpart to scalebench's isotropic no-locality corpus. Prints
-      // the dir; feed it to x148recall. Usage: clustercorpus[:nVecs]
-      val nVecs = names.head.split(":").drop(1).headOption.map(_.toInt).getOrElse(20000)
-      val s = GraftSession.build("graft-dev")
-      import org.apache.spark.sql.functions._
-      val outDir = java.nio.file.Files.createTempDirectory(s"cluster$nVecs").toString
-      s.range(nVecs).select(col("id").as("vec_id"))
-        .withColumn("c", pmod(col("vec_id"), lit(10L)))
-        .withColumn("raw", expr(
-          "transform(sequence(1, 64), j -> " +
-          " pmod(xxhash64(c, j), 2000001) / 1000000.0 - 1.0 + " +
-          " 0.15 * (pmod(xxhash64(vec_id, j, 999), 2000001) / 1000000.0 - 1.0))"))
-        .withColumn("embedding", expr(
-          "transform(raw, x -> cast(x / sqrt(aggregate(raw, 0d, (acc, v) -> acc + v * v)) as float))"))
-        .withColumn("label", col("c").cast("int"))
-        .select("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-      println(s"clustercorpus n=$nVecs dir=$outDir")
-      s.stop()
-      return
-    }
-    if (names == Seq("x148recall")) {
-      // Recall probe behind the x148_ivf crossover: the scale rehearsal
-      // measured WALLS; this measures whether the IVF-fed mutual-top-1
-      // still FINDS the exact path's pairs on sfDir (pair sets are tiny —
-      // ≤ n/2 rows — so exact set compare is cheap even at 10×). Run with
-      // a scalebench synth dir as sfDir for the at-scale figure.
-      val s = GraftSession.build("graft-dev")
-      def pairsOf(df: org.apache.spark.sql.DataFrame) = df
-        .select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val exact = pairsOf(graft.operators.VectorOps.x148MutualNn(s, sfDir))
-      Seq(2, 4, 8, 16).foreach { np =>
-        val t0 = System.nanoTime()
-        val ivf = pairsOf(graft.operators.VectorOps.x148MutualNnIvf(s, sfDir, np))
-        val sec = (System.nanoTime() - t0) / 1e9
-        val common = exact.intersect(ivf)
-        println(f"x148recall dir=$sfDir nprobe=$np exact=${exact.size}%,d ivf=${ivf.size}%,d " +
-          f"common=${common.size}%,d recall=${if (exact.isEmpty) 1.0 else common.size.toDouble / exact.size}%.4f " +
-          f"precision=${if (ivf.isEmpty) 1.0 else common.size.toDouble / ivf.size}%.4f sec=$sec%.2f")
-      }
-      s.stop()
-      return
-    }
-    if (names == Seq("x148arb")) {
-      // the x148 nprobe AUTO-ARBITER run standalone over sfDir's
-      // embeddings (point it at a `clustercorpus`/`scalebench` dir for
-      // the at-scale verdicts): prints the measured recall curve and the
-      // certified nprobe (or the exact-path fallback) — the executable
-      // form of the r11 fidelity rehearsal's conclusion.
-      val s = GraftSession.build("graft-dev")
-      import org.apache.spark.sql.functions._
-      val corpus = Tables.embeddings(s, sfDir).select(col("vec_id"), col("embedding"))
-      val nVecs = corpus.count() // before t0 — probe_sec prices the GATE only
-      val t0 = System.nanoTime()
-      val (chosen, curve) = graft.operators.VectorOps.x148ChooseNprobe(corpus)
-      val probeSec = (System.nanoTime() - t0) / 1e9
-      println(f"x148arb dir=$sfDir n=$nVecs%,d probe_sec=$probeSec%.2f " +
-        s"curve=${curve.map { case (np, r) => f"np$np=$r%.3f" }.mkString(",")} " +
-        s"chosen=${chosen.map("np" + _).getOrElse("EXACT-FALLBACK")}")
-      s.stop()
-      return
-    }
-    if (names == Seq("x171stats")) {
-      // Candidate-volume diagnostic behind the x171 declared-vs-banded
-      // adjudication: counts the length-block candidate pairs (declared
-      // front end) vs the char-gram band candidate pairs (banded front
-      // end) over sfDir — the two volumes that decide which path wins,
-      // measured rather than argued (r11 scale rehearsal follow-up).
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val nBlock = graft.operators.TextOps.x171BlockCandidates(s, sfDir).count()
-      val grams = Tables.documents(s, sfDir).select(col("doc_id").as("id"),
-        graft.functions.TextExpressions.charGrams(col("text"), 3).as("toks"))
-      val nBand = graft.functions.MinHashLSH.candidatePairs(grams)
-        .select("id_a", "id_b").count()
-      println(f"x171stats dir=$sfDir block_candidates=$nBlock%,d band_candidates=$nBand%,d")
-      s.stop()
-      return
-    }
-    if (names.length == 1 && names.head.startsWith("sigscale")) {
-      // r11 verdict item 7 — scale-rehearse the INGEST INCREMENT itself:
-      // x77/x148/x171 got crossover tables, but the SignatureStore
-      // increment (the production ingest gate, ST12) was priced only at
-      // sf0.1. This mode holds the BATCH fixed (2500 docs) while the
-      // corpus grows mult×, and times three things per size:
-      //   store_sec  — incrementPairs against the persisted index: the
-      //                O(batch + collisions) claim under test (flat-ish
-      //                in mult; collisions grow with the planted dup mass)
-      //   direct_sec — crossVerifiedPairs from raw frames: the x42
-      //                recompute the store amortizes away (re-hashes the
-      //                whole corpus per call — grows linearly in mult)
-      //   admit_sec  — the FULL fenced cycle: durable pair sink +
-      //                increment + staged two-phase append + fence +
-      //                lease — prices the round-12 crash-safety machinery
-      //                at scale (timed once; it mutates the store)
-      // Usage: sigscale[:mult]   (default 10 → 50k synthetic docs)
-      val mult = names.head.split(":").drop(1).headOption.map(_.toInt).getOrElse(10)
-      val s = GraftSession.build("graft-dev")
-      import org.apache.spark.sql.functions._
-      val nDocs = 5000L * mult
-      // the corpus lives on PARQUET, exactly like the x42 contract's input
-      // table — a memory-resident corpus would flatter the direct path's
-      // re-hash (which is precisely the cost the store amortizes away)
-      val docsDir = java.nio.file.Files.createTempDirectory(s"sigscale-docs$mult").toString
-      synthDocs(s, nDocs).write.mode("overwrite").parquet(docsDir)
-      val all = s.read.parquet(docsDir)
-        .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
-      val batch = all.filter(col("id") < 2500)
-      val corpus = all.filter(col("id") >= 2500)
-      val nC = corpus.count()
-      val dir = java.nio.file.Files.createTempDirectory(s"sigscale$mult").toString
-      val tB = System.nanoTime()
-      graft.sources.SignatureStore.write(s, corpus, dir, buckets = 32)
-      val buildSec = (System.nanoTime() - tB) / 1e9
-      def timed(f: => Unit): Double = {
-        f // warm (codegen/JIT — the bench protocol)
-        val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-      }
-      val storeSec = timed {
-        graft.sources.SignatureStore.incrementPairs(s, batch, 0.8)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val directSec = timed {
-        graft.functions.MinHashLSH.crossVerifiedPairs(batch, corpus, 0.8)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val nPairs = graft.sources.SignatureStore.incrementPairs(s, batch, 0.8).count()
-      // the ZERO-COLLISION batch (disjoint 5000-token vocabulary → Jaccard
-      // 0 against everything resident): isolates the two fixed terms the
-      // collision mass hides above — the store path pays hash(batch) + one
-      // index probe scan; the direct path pays hash(batch) + hash(CORPUS).
-      // This is the regime a realistic low-dup-density production corpus
-      // lives in, where the increment's cost must not grow with the corpus.
-      val novel = s.range(2500L).select((col("id") + 10000000L).as("id"))
-        .withColumn("toks", expr(
-          "transform(sequence(1, cast(10 + pmod(xxhash64(id, 17), 91) as int)), " +
-          "j -> concat('nv', cast(pmod(xxhash64(id, j), 5000) as string)))"))
-      val novelStoreSec = timed {
-        graft.sources.SignatureStore.incrementPairs(s, novel, 0.8)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val novelDirectSec = timed {
-        graft.functions.MinHashLSH.crossVerifiedPairs(novel, corpus, 0.8)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val sink = java.nio.file.Files.createTempDirectory("sigscale-pairs").toString
-      val tA = System.nanoTime()
-      graft.sources.SignatureStore.admit(s, batch, 0.8, sink, batchId = Some(0L))
-      val admitSec = (System.nanoTime() - tA) / 1e9
-      println(f"sigscale mult=$mult corpus=$nC%,d batch=2500 pairs=$nPairs%,d " +
-        f"build_sec=$buildSec%.2f store_sec=$storeSec%.2f " +
-        f"direct_sec=$directSec%.2f admit_sec=$admitSec%.2f " +
-        f"novel_store_sec=$novelStoreSec%.2f novel_direct_sec=$novelDirectSec%.2f")
-      s.stop()
-      return
-    }
-    if (names == Seq("x02abl")) {
-      // ablation ladder for x02's residual single-task stage
-      import org.apache.spark.sql.functions._
-      val s = GraftSession.build("graft-dev")
-      val tracker = new SkewTracker(s)
-      val grams = Tables.documents(s, sfDir).select(col("doc_id").as("id"),
-        graft.functions.TextExpressions.charGrams(col("text"), 3).as("toks"))
-      val p = graft.functions.MinHashLSH.Params()
-      def t(nm: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        def run(): Unit = df.write.format("noop").mode("overwrite").save()
-        run(); tracker.clear()
-        val t0 = System.nanoTime(); run()
-        println(f"[x02abl] $nm%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        tracker.report(s"x02abl/$nm")
-      }
-      t("grams") { grams }
-      t("repart") { grams.repartition(32) }
-      t("kernel") { grams.repartition(32).select(col("id"),
-        size(array_distinct(col("toks"))).as("sz"),
-        graft.functions.VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands")) }
-      t("banded") { grams.repartition(32).select(col("id"),
-          size(array_distinct(col("toks"))).as("sz"),
-          graft.functions.VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
-        .select(col("id"), col("sz"), col("bands"),
-          posexplode(col("bands")).as(Seq("band", "sig"))) }
-      t("cand") { graft.functions.MinHashLSH.candidatePairsSized(grams, 0.7, p) }
-      locally {
-        val df = grams.repartition(32).select(col("id"),
-            size(array_distinct(col("toks"))).as("sz"),
-            graft.functions.VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
-          .select(col("id"), col("sz"), col("bands"),
-            posexplode(col("bands")).as(Seq("band", "sig")))
-        df.queryExecution.toRdd.foreachPartition(_ => ())
-        println("=== banded executed ===")
-        println(df.queryExecution.executedPlan.toString)
-      }
       s.stop()
       return
     }
@@ -1194,10 +329,6 @@ object Dev {
     // GRAFT_DEV_CATALOG=1 reproduces Bench/Verify's stats-driven planning
     if (sys.env.get("GRAFT_DEV_CATALOG").contains("1"))
       GraftCatalog.install(spark, sfDir)
-    // GRAFT_DEV_JOINREORDER=1 flips the CBO DP join reorder ON for the run
-    // — the measurement toggle behind GraftCatalog's reorder-off decision
-    if (sys.env.get("GRAFT_DEV_JOINREORDER").contains("1"))
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     val time = args.length > 2 && args(2) == "time"
     names.foreach { n =>
       println(s"=== $n ===")

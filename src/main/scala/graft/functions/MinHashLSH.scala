@@ -89,66 +89,17 @@ object MinHashLSH {
         VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
       .filter(col("bands").isNotNull)
 
-  /** Hot-bucket salting for the band self-join (OFF by default — and
-    * measured to stay off): split each bucket whose ROW count reaches
-    * `hotMin` over `salt` sub-keys.
-    *
-    * The adversarial input is a large cluster of (near-)identical docs:
-    * every member shares EVERY band key, so one bucket holds the whole
-    * cluster and its join computes the full |cluster|² pair square.
-    * Mechanics: left rows of a hot bucket take a deterministic sub-key
-    * `hash(id) % salt`, right rows replicate over all `salt` sub-keys,
-    * and each unordered pair (a<b) still meets exactly once — at a's
-    * sub-key — so the output is IDENTICAL to the unsalted join
-    * (MinHashLSHSpec "hot-bucket salting" pins it, fixture + synthetic
-    * identical-cluster corpus).
-    *
-    * MEASURED (BASELINE.md round-6 skew stress, 50k docs / 10k identical
-    * cluster / 256 partitions): AQE's skew-join split already divides the
-    * hot buckets' sort-merge partitions — unsalted max task 4.4 s vs
-    * median 1.8 s on a 3.2G-probe hot workload — while salt=8 lowered
-    * relative skew to 1.7× but cost 2.3× wall (hot-count pass + tag join
-    * + build replication). Keep Salt for the shapes `operators/Salting`
-    * exists for (shuffled-hash / aggregation-fed joins outside AQE's SMJ
-    * split); for THIS join, AQE is the production answer, and the real
-    * adversarial cost is the 50M-pair OUTPUT itself — run exact dedup
-    * (q52) before near-dup so identical docs collapse to one
-    * representative first. */
-  case class Salt(salt: Int = 1, hotMin: Long = 1000L) {
-    // hotMin is in bucket ROWS (a b-row bucket does b² join work): the
-    // 1000-row default ≈ a 500k-pair square in one task, past which a
-    // bucket is worth splitting — so `Salt(8)` works as a caller expects
-    // (salting stays off entirely unless salt > 1)
-    def on: Boolean = salt > 1
-  }
-
-  /** Self-join of banded rows on (band, sig) with id_a < id_b, optionally
-    * hot-bucket-salted. Callers project from aliases "a"/"b". */
-  private def selfBandJoin(banded: DataFrame, s: Salt): DataFrame = {
-    val eq = col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-      col("a.id") < col("b.id")
-    if (!s.on) banded.as("a").join(banded.as("b"), eq)
-    else {
-      // the salted path reads the banded frame THREE times (hot-bucket
-      // aggregate + both join sides): materialize it once so the
-      // minhash/banding kernel doesn't re-run per reference (the unsalted
-      // path self-joins one plan and needs no such pin)
-      val bandedOnce = banded.localCheckpoint(true)
-      val hot = bandedOnce.groupBy("band", "sig").agg(count(lit(1)).as("_bn"))
-        .filter(col("_bn") >= s.hotMin)
-        .select(col("band"), col("sig"), lit(true).as("_hot"))
-      val tagged = bandedOnce.join(broadcast(hot), Seq("band", "sig"), "left")
-      val l = tagged.withColumn("_salt",
-          when(col("_hot").isNotNull, pmod(xxhash64(col("id")), lit(s.salt.toLong)))
-            .otherwise(lit(0L)))
-        .drop("_hot")
-      val r = tagged.withColumn("_salt",
-          explode(when(col("_hot").isNotNull, sequence(lit(0L), lit(s.salt.toLong - 1)))
-            .otherwise(array(lit(0L)))))
-        .drop("_hot")
-      l.as("a").join(r.as("b"), eq && col("a._salt") === col("b._salt"))
-    }
-  }
+  /** Self-join of banded rows on (band, sig) with id_a < id_b. Callers
+    * project from aliases "a"/"b". A cluster of identical docs puts every
+    * member in one bucket per band; AQE's skew-join split divides that
+    * partition (BASELINE.md round-6 skew stress), and exact dedup (q52)
+    * before near-dup collapses the cluster first. OPTIMIZATION_r17.md
+    * (VERDICT item 4) records why this join beat generating each bucket's
+    * pairs from an aggregate. */
+  private def selfBandJoin(banded: DataFrame): DataFrame =
+    banded.as("a").join(banded.as("b"),
+      col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
+        col("a.id") < col("b.id"))
 
   /** Distinct candidate pairs (id_a < id_b) sharing ≥1 band bucket.
     *
@@ -166,8 +117,7 @@ object MinHashLSH {
     *    count in duplicate rows; first-match dedup is exact (a pair appears
     *    in bucket k iff its band hashes agree at k, which is precisely what
     *    the filter tests) and costs one array scan per collision row. */
-  def candidatePairs(items: DataFrame, p: Params = Params(),
-                     s: Salt = Salt()): DataFrame = {
+  def candidatePairs(items: DataFrame, p: Params = Params()): DataFrame = {
     val n = items.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // pin BEFORE the kernel (r17): with the pin after it, the whole
     // signature+banding kernel evaluated inside the scan stage — one task
@@ -182,7 +132,7 @@ object MinHashLSH {
         VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
     val banded = hashed.select(col("id"), col("bands"),
       posexplode(col("bands")).as(Seq("band", "sig")))
-    selfBandJoin(banded, s)
+    selfBandJoin(banded)
       .filter(VectorExpressions.firstMatchIndex(col("a.bands"), col("b.bands")) === col("a.band"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
   }
@@ -196,7 +146,7 @@ object MinHashLSH {
     * before the verify join drags both token arrays across the shuffle.
     * Output: (id_a, id_b, sz_a, sz_b). */
   private[graft] def candidatePairsSized(items: DataFrame, threshold: Double,
-                                  p: Params, s: Salt = Salt()): DataFrame = {
+                                  p: Params): DataFrame = {
     val n = items.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // The width pin sits BEFORE the signature kernel (r17 — it used to sit
     // after): a projection below a repartition evaluates MAP-SIDE, so the
@@ -221,66 +171,12 @@ object MinHashLSH {
         VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
     val banded = hashed.select(col("id"), col("sz"), col("bands"),
       posexplode(col("bands")).as(Seq("band", "sig")))
-    selfBandJoin(banded, s)
+    selfBandJoin(banded)
       .filter(least(col("a.sz"), col("b.sz")).cast("double") >=
               lit(threshold) * greatest(col("a.sz"), col("b.sz")).cast("double") - lit(1.0))
       .filter(VectorExpressions.firstMatchIndex(col("a.bands"), col("b.bands")) === col("a.band"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
               col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-  }
-
-  /** Bucket-aggregate formulation of [[candidatePairsSized]] — the SAME
-    * (id_a, id_b, sz_a, sz_b) set (MinHashLSHSpec pins equality), with the
-    * collision mass generated by a per-bucket kernel
-    * ([[VectorExpressions.BucketPairPositions]]) instead of matched
-    * through the band self-join's hashed relation, and the first-match
-    * dedup done by reattaching the band arrays from a narrow id-keyed map.
-    *
-    * MEASURED AND REJECTED as the production path (r17, `Dev x93exp2`,
-    * sf0.1, end-to-end, output-identical by symdiff): x93 17.4 → 28.3 s,
-    * q53 4.1 → 9.7 s, x02 8.6 → 14.3 s — the r16 "narrow-join +
-    * payload-reattach" family's third and final formulation, kept as the
-    * committed record of WHY the band self-join stands:
-    *
-    *  1. the join evaluates size-compat + first-match as JOIN CONDITIONS,
-    *     so the ~1 KB matched rows (both sides' band arrays) are never
-    *     materialized — only the post-filter survivors project out. Every
-    *     reattach formulation materializes the band arrays into each of
-    *     the 170–680 M collision rows (two joins' unsafe-row copies ≈
-    *     hundreds of GB of memory writes at sf0.1);
-    *  2. the join parallelizes the quadratic mass over probe ROWS (fine,
-    *     uniform granularity); bucket generation parallelizes over
-    *     BUCKETS, and this corpus's buckets are mega-skewed (max bucket
-    *     3890 of 5000 docs — one generator row owning a 7.5 M-pair block
-    *     is an unsplittable straggler).
-    *
-    * The salted path ([[Salt]], off by default) likewise keeps the join
-    * formulation. */
-  private[graft] def candidatePairsSizedGrouped(items: DataFrame, threshold: Double,
-                                                p: Params): DataFrame = {
-    val n = items.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val hashed = hashedDocs(items, p)
-    val banded = hashed.select(col("id"), col("sz"),
-      posexplode(col("bands")).as(Seq("band", "sig")))
-    val buckets = banded
-      .repartition(n, col("band"), col("sig"))
-      .groupBy("band", "sig")
-      .agg(collect_list(struct(col("id"), col("sz"))).as("ms"))
-      .filter(size(col("ms")) >= 2)
-    val pairs = buckets
-      .select(col("band"), col("ms"),
-        explode(VectorExpressions.bucketPairPositions(col("ms"), threshold)).as("pk"))
-      .select(col("band"),
-        element_at(col("ms"), shiftright(col("pk"), 32).cast("int") + 1).as("ma"),
-        element_at(col("ms"), col("pk").bitwiseAND(lit(0xFFFFFFFFL)).cast("int") + 1).as("mb"))
-      .select(col("ma.id").as("id_a"), col("mb.id").as("id_b"),
-        col("ma.sz").as("sz_a"), col("mb.sz").as("sz_b"), col("band"))
-    val bmap = hashed.select(col("id"), col("bands"))
-    pairs
-      .join(bmap.select(col("id").as("id_a"), col("bands").as("ba")), "id_a")
-      .join(bmap.select(col("id").as("id_b"), col("bands").as("bb")), "id_b")
-      .filter(VectorExpressions.firstMatchIndex(col("ba"), col("bb")) === col("band"))
-      .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
   }
 
   /** Lower bound on the intersection of any pair passing `j ≥ t`:
@@ -305,8 +201,8 @@ object MinHashLSH {
     * tiny rows AQE coalesced to one partition — the distinct is gone, and
     * at sf0.1 the redundant 12M-pair shuffle cost x14 4s of its 11.5s. */
   def verifiedPairs(items: DataFrame, threshold: Double,
-                    p: Params = Params(), s: Salt = Salt()): DataFrame =
-    verifiedPairsDetailed(items, threshold, p, s)
+                    p: Params = Params()): DataFrame =
+    verifiedPairsDetailed(items, threshold, p)
       .select(col("id_a"), col("id_b"), col("j"))
 
   /** [[verifiedPairs]] with the verify's working columns kept on the
@@ -317,7 +213,7 @@ object MinHashLSH {
     * and re-running the intersect kernel over the full pair list — at
     * sf0.1's 6M pairs that second pass was ~40% of x93's wall. */
   def verifiedPairsDetailed(items: DataFrame, threshold: Double,
-                            p: Params = Params(), s: Salt = Salt()): DataFrame = {
+                            p: Params = Params()): DataFrame = {
     // Per-doc ONCE: distinct tokens → 64-bit hashes → sorted array. The
     // per-pair exact intersection is then a codegen'd two-pointer merge
     // (SortedIntersectCount) instead of array_intersect's interpreted
@@ -342,16 +238,7 @@ object MinHashLSH {
     // candidates and verify: the band join upstream is already pinned at
     // full width, and first-match dedup emits each pair exactly once
     // map-side, so the verify joins fuse into that same wide stage.
-    verifiedDetailedFrom(items, threshold,
-      candidatePairsSized(items, threshold, p, s))
-  }
-
-  /** The exact-verify tail of [[verifiedPairsDetailed]] over an explicit
-    * (id_a, id_b, sz_a, sz_b) candidate frame — factored so the two
-    * candidate formulations ([[candidatePairsSized]] join path /
-    * [[candidatePairsSizedGrouped]]) share the verify stage verbatim. */
-  private[graft] def verifiedDetailedFrom(items: DataFrame, threshold: Double,
-                                          cand: DataFrame): DataFrame = {
+    val cand = candidatePairsSized(items, threshold, p)
     // same pre-kernel width pin as candidatePairsSized: the sorted-hash
     // set build is per-doc kernel work that otherwise runs in the scan's
     // (possibly single) task before feeding the broadcast
@@ -477,14 +364,8 @@ object MinHashLSH {
     * is corpus-sized, so the dictionary itself (not the rank) becomes the
     * scaling liability. */
   def verifiedPairsDict(items: DataFrame, threshold: Double,
-                        p: Params = Params()): DataFrame =
-    verifiedDictFrom(items, threshold, candidatePairsSized(items, threshold, p))
-
-  /** [[verifiedPairsDict]]'s dictionary-encode + verify tail over an
-    * explicit candidate frame — the [[verifiedDetailedFrom]] factoring for
-    * the INT-set path. */
-  private[graft] def verifiedDictFrom(items: DataFrame, threshold: Double,
-                                      cand: DataFrame): DataFrame = {
+                        p: Params = Params()): DataFrame = {
+    val cand = candidatePairsSized(items, threshold, p)
     val w = org.apache.spark.sql.expressions.Window
     // pre-explode width pin (r17 taskprof): the token explode + vocab join
     // + per-doc set aggregation otherwise pipeline inside the single-task

@@ -525,134 +525,6 @@ case class FirstMatchIndex(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** All size-compatible member pairs of ONE LSH band bucket, as packed
-  * positions — the generation kernel of the bucket-aggregate candidate
-  * path ([[graft.functions.MinHashLSH.candidatePairsSized]]).
-  *
-  * Input: `array<struct<id: bigint, sz: int>>` (the bucket's members, any
-  * order). Output: `array<bigint>`, one element per unordered pair that
-  * passes the size-compatibility prune `min(sz) ≥ t·max(sz) − 1` (the
-  * IDENTICAL double arithmetic as the join-path filter, so the surviving
-  * pair set is bitwise the same), packed as
-  * `(position of the smaller-id member) << 32 | position of the larger-id
-  * member` — 0-based positions into the SAME input array, so the caller
-  * explodes the longs and decodes each side with `element_at(ms, pos+1)`.
-  * Ids are unique within a bucket (one banded row per (id, band)), so the
-  * smaller-id side is well-defined and the emitted pair set is independent
-  * of the bucket's member order (collect_list order is partitioning-
-  * dependent; the pair SET is not).
-  *
-  * Why this replaces the band self-join: the join evaluates its condition
-  * once per hash-relation MATCH — a random access into a relation carrying
-  * both sides' full band arrays (~1 KB/row at 2×128), measured at
-  * 600–780 ns per match (r16, 576 M matches on x93 alone). Here the i<j
-  * loop runs over one compact in-task array at a few ns per pair, and the
-  * band arrays stay OUT of the stream entirely (the first-match dedup
-  * reattaches them from a narrow id-keyed side — see candidatePairsSized).
-  *
-  * Memory: the output array is materialized per bucket (count-then-fill,
-  * no growth copies) — b members emit ≤ b(b−1)/2 longs, the same quadratic
-  * mass the self-join would stream. A degenerate bucket (a giant cluster
-  * of identical docs) is the [[MinHashLSH.Salt]] scenario either way; the
-  * salted path keeps the join formulation. */
-case class BucketPairPositions(child: Expression, threshold: Double)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "bucket_pair_positions"
-
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val ids = new Array[Long](n)
-    val szs = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val r = arr.getStruct(i, 2)
-      ids(i) = r.getLong(0)
-      szs(i) = r.getInt(1)
-      i += 1
-    }
-    // count-then-fill: exact allocation, no ArrayBuffer growth copies
-    var cnt = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        val mn = math.min(szs(i), szs(j)).toDouble
-        val mx = math.max(szs(i), szs(j)).toDouble
-        if (mn >= threshold * mx - 1.0) cnt += 1
-        j += 1
-      }
-      i += 1
-    }
-    val out = new Array[Long](cnt)
-    var k = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        val mn = math.min(szs(i), szs(j)).toDouble
-        val mx = math.max(szs(i), szs(j)).toDouble
-        if (mn >= threshold * mx - 1.0) {
-          out(k) =
-            if (ids(i) < ids(j)) (i.toLong << 32) | j.toLong
-            else (j.toLong << 32) | i.toLong
-          k += 1
-        }
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val ids = ctx.freshName("ids")
-      val szs = ctx.freshName("szs"); val row = ctx.freshName("row")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val cnt = ctx.freshName("cnt"); val out = ctx.freshName("out")
-      val k = ctx.freshName("k"); val mn = ctx.freshName("mn")
-      val mx = ctx.freshName("mx")
-      s"""
-         |final int $n = $a.numElements();
-         |final long[] $ids = new long[$n];
-         |final int[] $szs = new int[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final org.apache.spark.sql.catalyst.InternalRow $row = $a.getStruct($i, 2);
-         |  $ids[$i] = $row.getLong(0);
-         |  $szs[$i] = $row.getInt(1);
-         |}
-         |int $cnt = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  for (int $j = $i + 1; $j < $n; $j++) {
-         |    final double $mn = (double) java.lang.Math.min($szs[$i], $szs[$j]);
-         |    final double $mx = (double) java.lang.Math.max($szs[$i], $szs[$j]);
-         |    if ($mn >= $threshold * $mx - 1.0) $cnt++;
-         |  }
-         |}
-         |final long[] $out = new long[$cnt];
-         |int $k = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  for (int $j = $i + 1; $j < $n; $j++) {
-         |    final double $mn = (double) java.lang.Math.min($szs[$i], $szs[$j]);
-         |    final double $mx = (double) java.lang.Math.max($szs[$i], $szs[$j]);
-         |    if ($mn >= $threshold * $mx - 1.0) {
-         |      $out[$k++] = ($ids[$i] < $ids[$j])
-         |        ? (((long) $i) << 32) | (long) $j
-         |        : (((long) $j) << 32) | (long) $i;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BucketPairPositions =
-    copy(child = newChild)
-}
-
 /** Signed-random-projection (SRP) sketch of an ARRAY<FLOAT>, emitted directly
   * as banded LSH keys: `numBits` hyperplane sign bits packed into
   * `numBits / bandBits` longs of `bandBits` bits each — one codegen-friendly
@@ -777,10 +649,6 @@ object VectorExpressions {
   def firstMatchIndex(a: Column, b: Column): Column =
     Bridge.column(FirstMatchIndex(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Codegen'd merge-scan intersection count over two sorted ARRAY<INT>. */
-  def sortedIntersectInt(a: Column, b: Column): Column =
-    Bridge.column(SortedIntersectCountInt(Bridge.expression(a), Bridge.expression(b)))
-
   /** Early-exit intersect over sorted ARRAY<BIGINT>: exact count, or -1 once
     * the pair provably cannot reach `minReq` (INT column). */
   def sortedIntersectAtLeast(a: Column, b: Column, minReq: Column): Column =
@@ -799,11 +667,6 @@ object VectorExpressions {
   /** Fused per-row MinHash LSH band keys over an ARRAY<STRING> column. */
   def minhashBandKeys(toks: Column, numPerm: Int, rows: Int): Column =
     Bridge.column(MinHashBandKeys(Bridge.expression(toks), numPerm, rows))
-
-  /** Packed i<j positions of size-compatible pairs inside one LSH bucket
-    * (array<struct<id,sz>> → array<bigint>); see [[BucketPairPositions]]. */
-  def bucketPairPositions(members: Column, threshold: Double): Column =
-    Bridge.column(BucketPairPositions(Bridge.expression(members), threshold))
 
   /** SQL surface: `SELECT vec_dot(e1, e2)`. Idempotent per session. */
   def register(spark: SparkSession): Unit =

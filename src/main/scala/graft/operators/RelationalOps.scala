@@ -210,15 +210,6 @@ object RelationalOps {
       .orderBy("event_type")
   }
 
-  private def revenueByGeo(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .join(Tables.orders(s, d).hint("merge"), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-      .select(col("r_name"), col("n_name"),
-              (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-
   /** Q22 ROLLUP with GROUPING flags over the geo join, via the SQL entry
     * point (SURVEY §3.2 #1) — DataFrame-side rollup().agg(grouping…) then
     * referencing the grouping columns trips a DetectAmbiguousSelfJoin

@@ -1550,8 +1550,7 @@ object TextOps {
     * (X77LshSpec pins: lsh ⊆ declared, and covers every declared row
     * with dist ≤ maxDist, on the fixture). Single-row bands can hot-spot
     * on a globally common min-gram; the bucket join inherits q53's
-    * machinery (AQE skew split; [[MinHashLSH.Salt]] exists for shapes
-    * AQE's SMJ split can't reach). The threshold form
+    * machinery (AQE's skew-join split). The threshold form
     * `levenshtein(a, b, k)` bounds verify cost to O(k·n) per pair and
     * returns −1 past k (filtered), so the verify stage is output-gated.
     *
@@ -2191,7 +2190,7 @@ object TextOps {
                               thresh: Double): DataFrame =
     snmPairsOf(Tables.documents(s, d), w, thresh)
 
-  /** snmPairs over any (doc_id, text) frame — the Dev snmstress entry. */
+  /** snmPairs over any (doc_id, text) frame. */
   private[graft] def snmPairsOf(docs: DataFrame, w: Int,
                                 thresh: Double): DataFrame = {
     // Blocking key casefold is ASCII translate(), NOT lower(): the key is
@@ -2833,7 +2832,7 @@ object TextOps {
     * buckets over char 3-grams — x02's blocker — feeding the IDENTICAL
     * adjudication kernel. Front-end choice is a PER-CORPUS arbitration on
     * measured candidate volume, not a static rule: the round-11 scale
-    * rehearsal (BASELINE.md, `Dev scalebench:10` + `Dev x171stats`)
+    * rehearsal (BASELINE.md, `Dev scalebench:10` + the x171 candidate counts)
     * REFUTED the earlier "bands win at scale" claim on this fixture
     * family — with a 30-word vocabulary every doc shares nearly all
     * char-grams, so band keys collide en masse and the banded candidate
@@ -2841,8 +2840,10 @@ object TextOps {
     * and 10× (1.19B vs 58M); measured walls 522 s banded vs 102 s blocked
     * at 50 k docs. Bands win only where char-grams discriminate
     * (realistic text, large vocab, candidate volume ∝ near-dup mass);
-    * run `x171stats` on the target corpus and pick the smaller volume —
-    * the same way x37's recall gate arbitrates index rebuilds. Bands are
+    * count both front ends' candidates on the target corpus
+    * ([[x171BlockCandidates]] vs `MinHashLSH.candidatePairs` over the
+    * char 3-grams) and pick the smaller volume — the same way x37's
+    * recall gate arbitrates index rebuilds. Bands are
     * language-agnostic, so X171BandedSpec pins kernel consistency on the
     * declared domain (every same-language banded row equals its declared
     * row) and structural recall (exact-prefix duplicates collide in

@@ -221,7 +221,7 @@ object VectorOps {
     * (3.54 s vs 32.2 s at 20 k) — the ~nprobe·n^1.5 candidate volume
     * beats n² exactly where the complexity argument said it would.
     *
-    * FIDELITY at scale is measured too (`Dev x148recall`, BASELINE.md):
+    * FIDELITY at scale is measured too (BASELINE.md, x148 fidelity rehearsal):
     * mutual-top-1 is finer-grained than x08's top-k search, and the
     * search default nprobe=2 recalls only 0.30 of exact pairs even on a
     * CLUSTERED 20 k corpus (a 2 k-member cluster spans ~14 of the √n
@@ -438,12 +438,12 @@ object VectorOps {
       .transform(TextOps.pinnedOrder(_, "id_a", "id_b"))
 
   /** x12's candidate+verify plan over an arbitrary corpus — the reusable
-    * SRP near-dup kernel (Dev's vecskewstress drives it over an adversarial
-    * byte-identical-cluster corpus; [[x12EmbedNearDupLsh]] is this kernel
-    * over the fixture). `vecs` (vec_id, embedding) feeds the sketch and
-    * should arrive at cluster width; `payload` re-supplies embeddings for
-    * the verify joins (the fixture passes the narrow re-read so the scan,
-    * not the widened frame, is joined). */
+    * SRP near-dup kernel (BASELINE.md's round-7 skew stress ran it over an
+    * adversarial byte-identical-cluster corpus; [[x12EmbedNearDupLsh]] is
+    * this kernel over the fixture). `vecs` (vec_id, embedding) feeds the
+    * sketch and should arrive at cluster width; `payload` re-supplies
+    * embeddings for the verify joins (the fixture passes the narrow
+    * re-read so the scan, not the widened frame, is joined). */
   def srpVerifiedPairs(vecs: DataFrame, payload: DataFrame, minCos: Double): DataFrame = {
     val banded = vecs
       .select(col("vec_id"),
@@ -1029,15 +1029,9 @@ object VectorOps {
     * reduction is constant-width regardless of corpus size, the same
     * treeAggregate shape x49's sketch uses. Further iterations rerun the
     * same query feeding y back as v — each step one scan. */
-  def x51PowerIter(s: SparkSession, d: String): DataFrame =
-    x51PowerCore(s, wide(s, emb(s, d)))
-
-  /** x51's step over an arbitrary (…, embedding) frame — the Dev
-    * `powerstress` harness runs this against synthetic corpora at
-    * cluster-emulating partition counts. */
-  private[graft] def x51PowerCore(s: SparkSession, embdf: DataFrame): DataFrame = {
+  def x51PowerIter(s: SparkSession, d: String): DataFrame = {
     val ones = (c: Column) => transform(c, _ => lit(1.0f))
-    val terms = embdf
+    val terms = wide(s, emb(s, d))
       .withColumn("dt", graft.functions.VectorExpressions.vecDot(
         col("embedding"), ones(col("embedding"))))
       .select(posexplode(col("embedding")).as(Seq("dim", "x")), col("dt"))

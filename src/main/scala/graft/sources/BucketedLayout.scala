@@ -36,12 +36,15 @@ import org.apache.spark.sql.functions._
   */
 object BucketedLayout {
 
-  /** Write events into the bucketed day layout (batch sink). */
+  /** Write events into the bucketed day layout (batch sink). The sort
+    * leads with `day`: `partitionBy("day")` requires that ordering, and
+    * the planner replaces a sort that lacks it with a bare sort by `day`,
+    * which loses the series order inside each file. */
   def writeEvents(events: DataFrame, sinkDir: String, seriesBuckets: Int = 8): Unit =
     events
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       .repartition(seriesBuckets, col("user_id"), col("event_type"))
-      .sortWithinPartitions("user_id", "event_type", "ts")
+      .sortWithinPartitions("day", "user_id", "event_type", "ts")
       .write
       .partitionBy("day")
       .mode("overwrite")

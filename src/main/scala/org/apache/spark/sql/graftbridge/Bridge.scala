@@ -25,4 +25,9 @@ object Bridge {
 
   /** The analyzed logical plan of a DataFrame. */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** Block until every event posted so far has reached the SparkListeners
+    * (the bus is `private[spark]`), so a listener's maps are complete. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -25,43 +25,17 @@ class MinHashLSHSpec extends SparkSpecBase {
     assert(lsh === exact)
   }
 
-  test("hot-bucket salting changes the plan, never the output") {
-    // hotMin=1 makes EVERY bucket hot, so the salted join path (sub-key on
-    // the left, salt-way replication on the right) carries the entire
-    // fixture — the strongest equality check the fixture can express; a
-    // synthetic identical-doc cluster additionally pins the adversarial
-    // case end to end
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val salt = MinHashLSH.Salt(salt = 4, hotMin = 1)
-    assert(pairSet(MinHashLSH.verifiedPairs(docs, 0.8, s = salt)) ===
-           pairSet(MinHashLSH.verifiedPairs(docs, 0.8)))
-    assert(pairSet(MinHashLSH.candidatePairs(docs, s = salt)) ===
-           pairSet(MinHashLSH.candidatePairs(docs)))
-    // adversarial corpus: 60 identical docs + 60 distinct ones
+  test("an identical-doc cluster yields the full pair square") {
+    // adversarial corpus: 60 identical docs + 60 distinct ones — every
+    // cluster member shares every band key, so one bucket per band holds
+    // the whole cluster
     val ident = (1 to 30).map(j => s"c$j").mkString(" ")
     val hostile = spark.range(120).select(col("id"))
       .withColumn("toks", when(col("id") < 60, split(lit(ident), " "))
         .otherwise(expr("transform(sequence(1, 30), j -> concat('u', cast(id * 100 + j as string)))")))
-    val salted = pairSet(MinHashLSH.verifiedPairs(hostile, 0.8, s = salt))
-    assert(salted === pairSet(MinHashLSH.verifiedPairs(hostile, 0.8)))
-    assert(salted.size === 60 * 59 / 2, "identical cluster must yield the full pair square")
-  }
-
-  test("bucket-aggregate candidate generation == the band self-join " +
-       "(the r17 measured-and-rejected alternative stays output-identical)") {
-    // candidatePairsSizedGrouped is NOT on any query path (Dev x93exp2
-    // measured it 1.6–2.4× slower end-to-end; scaladoc records why) — this
-    // pin keeps the committed experiment honest: same (id_a, id_b, sz)
-    // set as the production join at both a dense and a sparse threshold.
-    def quad(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b", "sz_a", "sz_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).toSet
-    for (t <- Seq(0.5, 0.8)) {
-      val p = MinHashLSH.Params()
-      assert(quad(MinHashLSH.candidatePairsSizedGrouped(docs, t, p)) ===
-             quad(MinHashLSH.candidatePairsSized(docs, t, p)), s"threshold $t")
-    }
+    val pairs = MinHashLSH.verifiedPairs(hostile, 0.8)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs.size === 60 * 59 / 2, "identical cluster must yield the full pair square")
   }
 
   test("x38 dedup-first collapses the identical-copy pair square") {
