@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed connected components by min-label propagation over a
   * CONTRACTED quotient graph — the cluster-resolution stage a dedup
@@ -27,9 +29,11 @@ import org.apache.spark.sql.functions._
   * rare for near-dup relations, whose similarity is near-transitive —
   * contract in a constant number of outer rounds over the big edge list.
   * Each round's tables are eagerly checkpointed (read more than once,
-  * plan truncated to a leaf) and the previous round's blocks are
+  * lineage truncated to a leaf) and the previous round's blocks are
   * explicitly released — peak storage is one round's working set, not the
-  * whole iteration's (see `labels` for the mechanics). At 100 TB pass
+  * whole iteration's. The rounds run on key-partitioned RDD state, not
+  * DataFrames — the per-job scheduling floor (see `labels` for the
+  * mechanics and the numbers). At 100 TB pass
   * `checkpointDir = Some(hdfsPath)`: rounds then persist through a
   * reliable `checkpoint`, so lineage truncates, the iteration survives
   * executor churn, and the job can recompute from the last round instead
@@ -51,13 +55,6 @@ object ConnectedComponents {
         struct(col(b).as(outA), col(a).as(outB)))).as("e"))
       .select(col(s"e.$outA").as(outA), col(s"e.$outB").as(outB))
 
-  /** Drop an eagerly local-checkpointed frame's blocks: its plan IS a
-    * LogicalRDD leaf, and unpersisting that leaf's RDD frees them. */
-  private[graft] def releaseLocal(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-    case _ => ()
-  }
-
   /** Two independent eager materializations submitted CONCURRENTLY
     * (guide §2.6 — actions are sequential only because the driver calls
     * them sequentially): at sf the contracted tables are tiny and each
@@ -68,13 +65,13 @@ object ConnectedComponents {
     * thread. When one branch fails, the other's completed result is
     * `release`d before the error propagates; when both fail, f2's error is
     * thrown with f1's attached as suppressed. */
-  private[graft] def par2(f1: => DataFrame, f2: => DataFrame,
-                          release: DataFrame => Unit): (DataFrame, DataFrame) = {
-    var r1: DataFrame = null
+  private[graft] def par2[A <: AnyRef](f1: => A, f2: => A,
+                                       release: A => Unit): (A, A) = {
+    var r1: A = null.asInstanceOf[A]
     var err: Throwable = null
     val th = new Thread(() => try r1 = f1 catch { case e: Throwable => err = e })
     th.start()
-    def fail(e: Throwable, sibling: DataFrame): Nothing = {
+    def fail(e: Throwable, sibling: A): Nothing = {
       if (sibling != null)
         try release(sibling) catch { case x: Throwable => e.addSuppressed(x) }
       throw e
@@ -93,128 +90,135 @@ object ConnectedComponents {
     * Returns (id, comp) with comp = min id of the node's component.
     * `checkpointDir`: when set, per-round lineage truncation uses reliable
     * `checkpoint` into that directory (survives executor loss) instead of
-    * driver/executor-local blocks. Labels are identical either way — the
-    * checkpoint strategy only changes where intermediates are stored
-    * (ConnectedComponentsSpec asserts this). */
+    * driver/executor-local blocks; the session's prior checkpoint dir is
+    * restored on return. Labels are identical either way — the checkpoint
+    * strategy only changes where intermediates are stored
+    * (ConnectedComponentsSpec asserts this).
+    *
+    * Why the rounds run on RDDs: the 400-node `text_dedup` graph writes
+    * about 12 KB of shuffle, yet its `cc` op took 41 Spark jobs and
+    * 2.5–3.5 s in the DataFrame form of these rounds, half of it driver
+    * time between jobs. Each round was several Catalyst actions (the hook
+    * probe, one count per pointer-doubling jump, two eager checkpoints),
+    * and AQE submitted every shuffle stage of every action as its own job
+    * and re-planned between them. Here the state is (key, value) long
+    * pairs hash-partitioned once per call by
+    * [[IterCheckpoint.partitioner]], and the round steps are
+    * [[LongPairs]]: every table a round reads is co-partitioned on its
+    * join key, so the hook aggregate and the lookups on the hook side are
+    * narrow, and each action is ONE multi-stage job with no planning in
+    * between — 15 jobs for that op, its own result checkpoint included.
+    * Frames come in once (`nodes`, `edges`) and go out once (the returned
+    * labels). */
   def labels(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 50,
              checkpointDir: Option[String] = None): DataFrame = {
     // Rounds are materialized through eager checkpoints — each table is
-    // read several times AND its plan must truncate to a leaf, or every
-    // round's plan would embed the previous round's THREE times (hook
-    // appears as h1, h2, and in the label join): 3^rounds logical-plan
-    // growth, which OOMs the driver if rounds climb (a cache()-based
-    // variant did exactly that). But a localCheckpoint's blocks have no
-    // Dataset-level release (they free only when the JVM GCs the
-    // underlying RDD), so R rounds held ~3R materialized tables —
-    // including the 2|E|-row round-0 edge list — for the whole run, and
-    // consecutive runs in one session compounded the leak (x33 re-run in
-    // a warm JVM: 15 s vs 9.6 s cold, measured 2026-08-13). `release`
-    // closes the gap: an eagerly checkpointed frame's plan IS a
-    // LogicalRDD leaf, and unpersisting that leaf's RDD drops the blocks
-    // the moment the round that produced them is superseded.
-    val ckpt: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        nodes.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint(true)
-      case None => df => df.localCheckpoint(true)
-    }
-    // no-op in reliable mode: those rounds live as checkpoint FILES (the
-    // recover-from-executor-churn point of that mode), not storage blocks
-    val release: DataFrame => Unit =
-      if (checkpointDir.isDefined) _ => () else releaseLocal
-    var (lab, g) = par2(
-      ckpt(nodes.select(col("id"), col("id").as("comp"))),
-      // symmetric edges between current representatives (initially the
-      // nodes) — [[symmetrize]]: ONE pass of the (often unmaterialized)
-      // edge plan, not a self-union (r13 verdict item 3)
-      ckpt(symmetrize(edges, "id_a", "id_b", "a", "b")), release)
-    var round = 0
-    var converged = false
-    while (!converged) {
-      // each rep hooks to the minimum of itself and its neighbor reps; the
-      // hook pointers form a forest (every pointer strictly decreases, and
-      // every hop is an edge or self, so targets stay in-component).
-      // CACHE, not checkpoint (r16 verdict item 5 — fewer eager jobs per
-      // round): the count() below materializes the cache AND doubles as
-      // the convergence probe — hook is empty iff the contracted edge
-      // list is, so the old per-round `g.count()` job is gone too. The
-      // lineage-truncation invariant is untouched: lab/g still checkpoint
-      // to leaves each round, and this cached hook sits at bounded depth
-      // above g's leaf (re-derivable after executor churn in reliable
-      // mode — one agg over the checkpoint file).
-      val hookPre = g.groupBy(col("a").as("rep")).agg(min("b").as("nmin"))
-        .select(col("rep"), least(col("rep"), col("nmin")).as("to")).cache()
-      if (hookPre.count() == 0) {
-        converged = true
-        hookPre.unpersist(false)
-      } else {
-        if (round >= maxRounds) { // failing: free this call's blocks first
+    // read several times AND its lineage must truncate to a leaf, or every
+    // round's RDD DAG would embed all the previous rounds' (and a lost
+    // block would replay the whole iteration). But a local checkpoint's
+    // blocks free only when the JVM GCs the RDD, so R rounds held ~2R
+    // materialized tables — including the 2|E|-row round-0 edge list — for
+    // the whole run, and consecutive runs in one session compounded the
+    // leak (x33 re-run in a warm JVM: 15 s vs 9.6 s cold, measured
+    // 2026-08-13). [[IterCheckpoint.release]] closes the gap: a superseded
+    // round's blocks (or reliable checkpoint files) are dropped the moment
+    // its successor is materialized, and the final empty edge table at
+    // convergence — so a call leaves exactly the returned labels behind.
+    val s = nodes.sparkSession
+    val ck = new IterCheckpoint(s, checkpointDir)
+    val part = ck.partitioner
+    val drop = (r: RDD[(Long, Long)]) => ck.release(r)
+    try {
+      // lab: (comp, id) keyed by label; g: symmetric edges (a, b) between
+      // current representatives (initially the nodes), keyed by a — both
+      // orientations emitted map-side from ONE pass of the (often
+      // unmaterialized) edge plan, [[symmetrize]]'s r13 lesson
+      var (lab, g) = par2(
+        ck(LongPairs.of(nodes, "id", "id").partitionBy(part)),
+        ck(LongPairs.of(edges, "id_a", "id_b")
+          .flatMap { case (a, b) => Iterator((a, b), (b, a)) }.partitionBy(part)),
+        drop)
+      var round = 0
+      var converged = false
+      while (!converged) {
+        // each rep hooks to the minimum of itself and its neighbor reps
+        // (narrow: g is already keyed by a under `part`); the hook pointers
+        // form a forest (every pointer strictly decreases, and every hop is
+        // an edge or self, so targets stay in-component). CACHED, not
+        // checkpointed: its count() materializes the cache AND is the
+        // convergence probe — hook is empty iff the contracted edge list
+        // is. It sits at bounded depth above g's checkpoint.
+        val hookPre = LongPairs.reduce(g.mapPartitions(
+            _.map { case (a, b) => (a, math.min(a, b)) }, preservesPartitioning = true))(math.min)
+          .cache()
+        if (hookPre.count() == 0) {
+          converged = true
           hookPre.unpersist(false)
-          release(lab)
-          release(g)
+          ck.release(g) // the empty final edge table — nothing reads it
+        } else {
+          if (round >= maxRounds) { // failing: free this call's blocks first
+            hookPre.unpersist(false)
+            ck.release(lab)
+            ck.release(g)
+          }
+          require(round < maxRounds,
+            s"connected components did not converge in $maxRounds rounds")
+          // path-compress the forest by pointer doubling: jump each pointer
+          // to its target's target until idempotent. Path lengths halve per
+          // jump, so chains collapse in O(log n) joins over the |reps|-sized
+          // hook table — without this, a k-hop chain costs k OUTER rounds
+          // over the full edge list. Each jump is one job: (to, rep) shuffles
+          // onto the hook's partitioning, the lookup side is narrow, and the
+          // result is re-keyed by rep.
+          var hook: RDD[(Long, Long)] = hookPre
+          var jumping = 1L
+          var prevCached: RDD[_] = null
+          while (jumping > 0) {
+            val nxt = LongPairs.lookup(hook.map(_.swap).partitionBy(part), hook) {
+                case (m, (to, rep)) => val to2 = m.getOrElse(to, to); Some((rep, (to2, to2 < to)))
+              }.partitionBy(part).cache()
+            jumping = nxt.filter(_._2._2).count()
+            // the count() above fully materialized nxt's cache, so the
+            // previous jump's blocks are dead weight — freeing them bounds
+            // peak STORAGE at two iterations instead of all O(log n) hook
+            // tables (an eviction replays the jumps back to this round's
+            // checkpoint, which keeps the replay within one round)
+            if (prevCached != null) prevCached.unpersist(false)
+            prevCached = nxt
+            hook = nxt.mapValues(_._1)
+          }
+          // per-node labels compose through the hook (reps absent from the
+          // quotient graph — singletons or already-contracted — keep
+          // theirs): a narrow lookup, then re-keyed by the new label. Edge
+          // contraction rewrites g onto the new reps: a narrow lookup of a,
+          // a shuffle onto b for its lookup, then self-loops dropped and
+          // duplicates merged map-side on the way back to keying by a. The
+          // two checkpoints are independent — submit them concurrently.
+          val byB = LongPairs.lookup(g, hook) { case (m, (a, b)) => m.get(a).map(ta => (b, ta)) }
+          val (labN, gN) = par2(
+            ck(LongPairs.lookup(lab, hook) { case (m, (comp, id)) => Some((m.getOrElse(comp, comp), id)) }
+              .partitionBy(part)),
+            ck(LongPairs.distinct(LongPairs.distinct(
+              LongPairs.lookup(byB.partitionBy(part), hook) {
+                case (m, (b, ta)) => m.get(b).filter(_ != ta).map(tb => (ta, tb))
+              }).partitionBy(part))),
+            drop)
+          // this round's lab/g are checkpointed; the previous round's
+          // tables and the hooks that produced them are dead weight
+          ck.release(lab)
+          ck.release(g)
+          lab = labN
+          g = gN
+          prevCached.unpersist(false)
+          hookPre.unpersist(false)
+          round += 1
         }
-        require(round < maxRounds,
-          s"connected components did not converge in $maxRounds rounds")
-        val oldLab = lab
-        val oldG = g
-        // path-compress the forest by pointer doubling: jump each pointer to
-        // its target's target until idempotent. Path lengths halve per jump,
-        // so chains collapse in O(log n) inner joins over the |reps|-sized
-        // hook table — without this, a k-hop chain costs k OUTER rounds over
-        // the full edge list
-        var hook: DataFrame = hookPre
-        var jumping = 1L
-        var prevCached: DataFrame = null
-        while (jumping > 0) {
-          val nxt = hook.select(col("rep"), col("to"))
-            .join(hook.select(col("rep").as("r2"), col("to").as("to2")),
-                  col("to") === col("r2"), "left")
-            .select(col("rep"), coalesce(col("to2"), col("to")).as("to"),
-                    (col("to2") < col("to")).as("moved"))
-            .cache()
-          jumping = nxt.filter(col("moved")).count()
-          // the count() above fully materialized nxt's cache, so the previous
-          // jump's blocks are dead weight — freeing them here bounds peak
-          // STORAGE at two iterations instead of all O(log n) hook tables.
-          // (It does not bound recompute depth: a later eviction of nxt_k
-          // replays the k self-joins back to the round's checkpoint, since
-          // the predecessors are no longer cached — acceptable, because
-          // eviction of these small hook tables is rare and the checkpoint
-          // keeps the replay within one round.)
-          if (prevCached != null) prevCached.unpersist(false)
-          prevCached = nxt
-          hook = nxt.drop("moved")
-        }
-        // the flattened hook stays a CACHED table for its three readers
-        // this round (one lab join, two edge-rewrite joins) — the r16
-        // shape re-checkpointed it here, paying a third eager job per
-        // round for a frame whose lineage is already bounded (k self-joins
-        // over this round's g leaf)
-        // per-node labels compose through the hook (reps absent from the
-        // quotient graph — singletons or already-contracted — keep theirs);
-        // edge contraction rewrites g onto the new reps. The two
-        // checkpoints are independent — submit them concurrently.
-        val h1 = hook.select(col("rep").as("ra"), col("to").as("ta"))
-        val h2 = hook.select(col("rep").as("rb"), col("to").as("tb"))
-        val (labN, gN) = par2(
-          ckpt(lab.join(hook, lab("comp") === hook("rep"), "left")
-            .select(col("id"), coalesce(col("to"), col("comp")).as("comp"))),
-          ckpt(g.join(h1, col("a") === col("ra")).join(h2, col("b") === col("rb"))
-            .select(col("ta").as("a"), col("tb").as("b"))
-            .filter(col("a") =!= col("b"))
-            .distinct()), release)
-        lab = labN
-        g = gN
-        // this round's lab/g are checkpointed leaves; the previous round's
-        // tables and the hooks that produced them are dead weight from here
-        release(oldLab)
-        release(oldG)
-        if (prevCached != null) prevCached.unpersist(false)
-        hookPre.unpersist(false)
-        round += 1
       }
-    }
-    lab
+      val nullable = nodes.schema("id").nullable
+      s.createDataFrame(lab.map { case (comp, id) => Row(id, comp) },
+        StructType(Seq(StructField("id", LongType, nullable),
+                       StructField("comp", LongType, nullable))))
+    } finally ck.restore()
   }
 
   /** Incremental label maintenance — the production continuation of x42's

@@ -1,11 +1,13 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.MinHashLSH
+import graft.functions.{IterCheckpoint, LongPairs, MinHashLSH}
 import graft.functions.Rounding.dround
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** SURVEY.md §2.10 text side (Q52/Q53/Q55/Q56) plus the training-data
   * pipeline extras (x-series): SimHash, char-n-gram near-dup, language-ID,
@@ -1681,64 +1683,15 @@ object TextOps {
     * round budget — the pipeline entry point and the spec's knob.
     * `checkpointDir`: reliable per-round checkpoints for executor-loss
     * survival (see the scaladoc above). */
-  /** The iterative operators' checkpoint harness — ONE implementation of
-    * the ckpt/release/restore discipline x186 converged on (r15 review:
-    * it had been copy-pasted into x187, and the next fix to the subtle
-    * LogicalRDD/getCheckpointFile/getParent details would have had to
-    * land twice). Returns:
-    *  - `ckpt`: eager per-round lineage truncation — reliable
-    *    `checkpoint` into `checkpointDir` (survives executor loss) when
-    *    set, else `localCheckpoint`;
-    *  - `release`: drops a SUPERSEDED round's storage — deletes its
-    *    checkpoint files (cleaner.referenceTracking.cleanCheckpoints is
-    *    off by default) or unpersists its blocks — call only after the
-    *    successor is materialized;
-    *  - `restore`: put back the session's prior checkpoint dir (the
-    *    CONFIGURED parent — getCheckpointDir returns the minted
-    *    <dir>/<uuid> path); when none existed the new one stays set
-    *    (SparkContext has no public unset — documented residue). Call
-    *    from a finally. */
-  private def iterCkptHarness(s: SparkSession, checkpointDir: Option[String])
-      : (DataFrame => DataFrame, DataFrame => Unit, () => Unit) = {
-    val prior = s.sparkContext.getCheckpointDir
-    val ckpt: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        s.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint(true)
-      case None => df => df.localCheckpoint(true)
-    }
-    val release: DataFrame => Unit =
-      if (checkpointDir.isDefined)
-        df => df.queryExecution.analyzed match {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.getCheckpointFile.foreach { f =>
-              val p = new org.apache.hadoop.fs.Path(f)
-              p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-            }
-          case _ => ()
-        }
-      else df => df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-        case _ => ()
-      }
-    val restore: () => Unit = () =>
-      if (checkpointDir.isDefined)
-        prior.foreach { p =>
-          s.sparkContext.setCheckpointDir(
-            new org.apache.hadoop.fs.Path(p).getParent.toString)
-        }
-    (ckpt, release, restore)
-  }
-
   private[graft] def x187From(s: SparkSession, d: String, pairs: DataFrame,
                               maxRounds: Int = 4,
                               checkpointDir: Option[String] = None): DataFrame = {
-    val (ckpt, release, restore) = iterCkptHarness(s, checkpointDir)
+    val ck = new IterCheckpoint(s, checkpointDir)
     try {
-      val edges = ckpt(graft.functions.ConnectedComponents
+      val edges = ck(graft.functions.ConnectedComponents
         .symmetrize(pairs, "id_a", "id_b", "src", "dst"))
       val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
-      var state = ckpt(docs.filter(col("doc_id") % 10 === 0)
+      var state = ck(docs.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id").as("id"), col("lang").as("pred_lang"),
                 lit(0).as("hops")))
       var round = 0
@@ -1763,22 +1716,22 @@ object TextOps {
           .cache()
         growing = best.count() > 0
         if (growing) {
-          val next = ckpt(state.union(best)) // eager — folds best in
-          release(state)
+          val next = ck(state.union(best)) // eager — folds best in
+          ck.release(state)
           state = next
         }
         best.unpersist(false) // folded into state (or empty) — safe to drop
       }
       // edges are not referenced by the returned plan (state is a
       // materialized leaf) — drop the 2|E| snapshot now, not at JVM GC
-      release(edges)
+      ck.release(edges)
       state.filter(col("id") % 10 =!= 0)
         .join(docs.select(col("doc_id"), col("lang").as("true_lang")),
               col("id") === col("doc_id"))
         .select(col("doc_id"), col("pred_lang"), col("hops"), col("true_lang"),
                 (col("pred_lang") === col("true_lang")).cast("int").as("hit"))
         .orderBy("doc_id")
-    } finally restore()
+    } finally ck.restore()
   }
 
   /** x93 containment near-dup — the subset-duplication readout Jaccard
@@ -2957,7 +2910,7 @@ object TextOps {
     * 278 nodes at k = 64). Scale: each round is one degree aggregate +
     * two semi-joins on the CURRENT edge set (monotonically shrinking);
     * rounds are a fixed constant — the x14/x45/x51 bounded-iteration
-    * discipline — and each round's frame is eagerly checkpointed (the
+    * discipline — and each round's edge set is eagerly checkpointed (the
     * CC lineage rule). */
   def x186KCore(s: SparkSession, d: String): DataFrame =
     x186KCoreFrom(s, d, MinHashLSH.verifiedPairs(docTokens(s, d), 0.8))
@@ -2977,39 +2930,56 @@ object TextOps {
     * round's checkpoint files (otherwise up to maxRounds full edge-set
     * snapshots accumulate per call). Reliable mode's setCheckpointDir is
     * session-global; the prior dir is restored after the peel (or left
-    * set when none existed — documented residue). */
+    * set when none existed — documented residue). All of it is
+    * [[graft.functions.IterCheckpoint]], the harness CC and x187 share.
+    *
+    * Why the rounds run on RDDs (the CC reasoning, see
+    * [[graft.functions.ConnectedComponents.labels]]): on the 400-doc
+    * `text_dedup` corpus the `kcore` op (peel and output) took 19 Spark
+    * jobs and 1.3–1.6 s, mostly per-job scheduling and AQE re-planning:
+    * each round was a degree aggregate, two semi-joins and an eager
+    * checkpoint plus a count, and AQE split every shuffle stage into its
+    * own job. Here the edge set is [[graft.functions.LongPairs]] state
+    * under one hash partitioner: the degree table lands on that
+    * partitioner, so the first semi-join of a round is narrow, the second
+    * costs one shuffle, and the checkpoint's count is the round's only
+    * job — 6 jobs for that op. Frames come in once (`pairs`) and go out
+    * once (the degree table, ordered by `doc_id`). */
   def x186KCoreFrom(s: SparkSession, d: String, pairs: DataFrame,
                     k: Int = 64, maxRounds: Int = 8,
                     checkpointDir: Option[String] = None): DataFrame = {
-    // ckpt/release/restore: the shared [[iterCkptHarness]] discipline
-    // (reliable mode mutates the SESSION-GLOBAL checkpoint dir for the
-    // loop's duration and deletes superseded rounds' snapshots; a context
-    // shared by two simultaneous checkpointing jobs needs external
-    // coordination either way)
-    val (ckpt, release, restore) = iterCkptHarness(s, checkpointDir)
+    val ck = new IterCheckpoint(s, checkpointDir)
+    val part = ck.partitioner
+    // within-subgraph degree of every endpoint, keyed under `part`
+    def degrees(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      LongPairs.reduce(LongPairs.reduce(
+        e.flatMap { case (a, b) => Iterator((a, 1L), (b, 1L)) })(_ + _).partitionBy(part))(_ + _)
     try {
-      var edges = ckpt(pairs.select(col("id_a"), col("id_b")))
-      var n = edges.count()
+      // edge state: each pair ONCE, keyed by one endpoint. The peel and
+      // the output degrees are orientation-free, so each round re-keys the
+      // survivors by the endpoint it checked second — the next round's
+      // first check is then narrow.
+      var edges = LongPairs.of(pairs, "id_a", "id_b").partitionBy(part)
+      var n = ck.count(edges)
       var done = false
       var r = 0
       while (r < maxRounds && !done) {
-        val deg = edges.select(col("id_a").as("id"))
-          .unionAll(edges.select(col("id_b").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("dg"))
-        val keep = deg.filter(col("dg") >= k.toLong).select("id")
-        val next = ckpt(edges
-          .join(keep.select(col("id").as("id_a")), Seq("id_a"), "left_semi")
-          .join(keep.select(col("id").as("id_b")), Seq("id_b"), "left_semi"))
-        val m = next.count() // materializes next — the old round is now safe to drop
-        release(edges)
+        val keep = degrees(edges).filter(_._2 >= k.toLong)
+        val next = LongPairs.lookup(
+            LongPairs.lookup(edges, keep) { case (m, e) => Option.when(m.contains(e._1))(e.swap) }
+              .partitionBy(part),
+            keep, keepsKeys = true) { case (m, e) => Option.when(m.contains(e._1))(e) }
+        val m = ck.count(next) // materializes next — the old round is now safe to drop
+        ck.release(edges)
         done = m == n
         edges = next; n = m; r += 1
       }
-      edges.select(col("id_a").as("doc_id"))
-        .unionAll(edges.select(col("id_b").as("doc_id")))
-        .groupBy("doc_id").agg(count(lit(1)).as("core_deg"))
+      val nullable = Seq("id_a", "id_b").exists(c => pairs.schema(c).nullable)
+      s.createDataFrame(degrees(edges).map { case (id, dg) => Row(id, dg) },
+          StructType(Seq(StructField("doc_id", LongType, nullable),
+                         StructField("core_deg", LongType, nullable = false))))
         .orderBy("doc_id")
-    } finally restore()
+    } finally ck.restore()
     // (the surviving round is already materialized via count(), so the
     // restore cannot strand its files mid-write)
   }

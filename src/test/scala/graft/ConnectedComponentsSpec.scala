@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.ConnectedComponents
+import graft.functions.{ConnectedComponents, IterCheckpoint}
 import graft.operators.TextOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -21,6 +21,26 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     case other => fail(s"not a checkpointed leaf: $other")
   }
 
+  private val releaseLocal = (df: DataFrame) => new IterCheckpoint(spark, None).release(df)
+
+  /** The RDD under a frame's plan leaf (an eager checkpoint or a frame
+    * built from RDD state). */
+  private def leafRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed.collectLeaves() match {
+      case Seq(l: LogicalRDD) => l.rdd
+      case other => fail(s"not a single RDD leaf: $other")
+    }
+
+  /** `rdd` and every RDD it depends on. */
+  private def lineage(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+    rdd +: rdd.dependencies.flatMap(d => lineage(d.rdd))
+
+  private def rddDirs(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory)
+      (if (f.getName.startsWith("rdd-")) Seq(f) else Nil) ++
+        Option(f.listFiles).toSeq.flatten.flatMap(rddDirs)
+    else Nil
+
   /** One par2 call: each branch either checkpoints a small frame (kept
     * for inspection) or throws. */
   private def par2(fail1: Boolean, fail2: Boolean) = {
@@ -29,7 +49,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       if (fails) throw new IllegalStateException(s"branch ${i + 1} failed")
       else { made(i) = spark.range(50).toDF("id").localCheckpoint(true); made(i) }
     val result = scala.util.Try(ConnectedComponents.par2(
-      branch(0, fail1), branch(1, fail2), ConnectedComponents.releaseLocal))
+      branch(0, fail1), branch(1, fail2), releaseLocal))
     (result, made.toSeq)
   }
 
@@ -55,7 +75,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     assert((a eq made(0)) && (b eq made(1)))
     assert(holdsBlocks(a) && holdsBlocks(b))
     assert(a.count() === 50 && b.count() === 50)
-    Seq(a, b).foreach(ConnectedComponents.releaseLocal)
+    Seq(a, b).foreach(releaseLocal)
   }
 
   test("labels past maxRounds fails with the convergence error") {
@@ -104,6 +124,45 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
+  }
+
+  test("reliable-mode labels restore the prior checkpoint dir and keep only " +
+       "the returned frame's checkpoint files") {
+    val nodes = (0L until 40L).toDF("id")
+    val edges = (0L until 38L).map(i => (i, i + 2)).toDF("id_a", "id_b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-reliable").toFile
+    val priorDir = java.nio.file.Files.createTempDirectory("graft-cc-prior").toFile
+    try {
+      spark.sparkContext.setCheckpointDir(priorDir.toString)
+      val out = ConnectedComponents.labels(nodes, edges, checkpointDir = Some(dir.toString))
+      val now = spark.sparkContext.getCheckpointDir.get
+      assert(new org.apache.hadoop.fs.Path(now).getParent.getName === priorDir.getName,
+        s"prior checkpoint dir was not restored (now $now)")
+      val read = lineage(leafRdd(out)).flatMap(_.getCheckpointFile).distinct
+        .map(f => new org.apache.hadoop.fs.Path(f).getName)
+      assert(read.size === 1, s"the returned frame reads $read")
+      assert(rddDirs(dir).map(_.getName) === read,
+        "superseded rounds' checkpoint files were left in the reliable dir")
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        (0L until 40L).map(i => i -> i % 2).toMap)
+    } finally Seq(dir, priorDir).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  test("local-mode labels leave only the returned frame's blocks persisted") {
+    val nodes = (0L until 60L).toDF("id")
+    val edges = (0L until 58L).map(i => (i, i + 2)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val marker = sc.parallelize(1 to 10).cache()
+    marker.count()
+    val before = sc.getPersistentRDDs.keySet
+    val out = ConnectedComponents.labels(nodes, edges)
+    val added = sc.getPersistentRDDs.keySet -- before
+    try {
+      assert(sc.getPersistentRDDs.contains(marker.id), "the call unpersisted a foreign RDD")
+      val leaf = lineage(leafRdd(out)).map(_.id).filter(added).toSet
+      assert(leaf.size === 1, s"the returned frame reads persisted RDDs $leaf")
+      assert(added === leaf, s"labels left ${added -- leaf} persisted beyond its result")
+    } finally { marker.unpersist(); added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist())) }
   }
 
   test("x14 clusters are consistent with q53's edge list") {

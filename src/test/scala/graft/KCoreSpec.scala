@@ -1,6 +1,9 @@
 package graft
 
 import graft.operators.TextOps
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** x186's fixed-round k-core contract: the 8-round budget must reach the
@@ -28,6 +31,30 @@ class KCoreSpec extends SparkSpecBase {
       assert(r8.agg(min("core_deg")).head.getLong(0) >= 64L,
         "a survivor's within-core degree fell below k")
     } finally { r8.unpersist(); () }
+  }
+
+  test("local-mode peel leaves only the returned frame's blocks persisted") {
+    val toks = Tables.documents(spark, sfDir)
+      .select(col("doc_id").as("id"), split(col("text"), " ").as("toks"))
+    val pairs = graft.functions.MinHashLSH.verifiedPairs(toks, 0.8)
+      .select("id_a", "id_b").localCheckpoint(true)
+    val sc = spark.sparkContext
+    def leafRdds(df: DataFrame): Seq[RDD[_]] = df.queryExecution.analyzed.collectLeaves().map {
+      case l: LogicalRDD => l.rdd
+      case other => fail(s"not an RDD leaf: $other")
+    }
+    def lineage(rdd: RDD[_]): Seq[RDD[_]] = rdd +: rdd.dependencies.flatMap(d => lineage(d.rdd))
+    val before = sc.getPersistentRDDs.keySet
+    val core = TextOps.x186KCoreFrom(spark, sfDir, pairs)
+    val added = sc.getPersistentRDDs.keySet -- before
+    try {
+      assert(leafRdds(pairs).forall(r => sc.getPersistentRDDs.contains(r.id)),
+        "the peel unpersisted its input")
+      val leaf = leafRdds(core).flatMap(lineage).map(_.id).filter(added).toSet
+      assert(leaf.size === 1, s"the returned frame reads persisted RDDs $leaf")
+      assert(added === leaf, s"the peel left ${added -- leaf} persisted beyond its result")
+      assert(core.count() > 0)
+    } finally added.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
   }
 
   test("reliable-checkpoint mode peels identical cores to local mode, " +
