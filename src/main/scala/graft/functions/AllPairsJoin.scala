@@ -26,9 +26,8 @@ import org.apache.spark.sql.functions._
   *     prefix SET is partitioning-independent);
   *  3. prefix explode (≤ (1−t)·sz + 1 rows per doc) → equi-join on the
   *     prefix token → size-compat prune → pair distinct;
-  *  4. exact verify: the same xxhash64-sorted set arrays + early-exit
-  *     [[VectorExpressions.SortedIntersectAtLeast]] merge as
-  *     [[MinHashLSH.verifiedPairsDetailed]].
+  *  4. exact verify: [[MinHashLSH.verify]] over [[MinHashLSH.tokenSets]],
+  *     the same step the LSH paths end in.
   *
   * FP discipline at the t-boundary (the class q53's −1 slack guards):
   * the prefix length uses `floor(t·sz) + 1 ≥ ⌈t·sz⌉` extra-token-safe
@@ -47,7 +46,7 @@ object AllPairsJoin {
     * `threshold` over `items` = (id, toks) — bit-compatible with
     * [[MinHashLSH.verifiedPairs]]' output contract. */
   def exactPairs(items: DataFrame, threshold: Double): DataFrame = {
-    val n = items.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = MinHashLSH.width(items)
     val tok = items.select(col("id"), explode(array_distinct(col("toks"))).as("tok"))
     val dfreq = tok.groupBy("tok").agg(count(lit(1)).as("df"))
     // Explicit full-width pin (REPARTITION_BY_NUM — AQE never coalesces
@@ -94,31 +93,18 @@ object AllPairsJoin {
     val cand = probe.join(index, "tok")
       .filter(col("sz_y") < col("sz_x")
         || (col("sz_y") === col("sz_x") && col("id_y") < col("id_x")))
-      .filter(least(col("sz_x"), col("sz_y")).cast("double") >=
-              lit(threshold) * greatest(col("sz_x"), col("sz_y")).cast("double") - lit(1.0))
+      .filter(MinHashLSH.sizeCompatible(threshold, col("sz_x"), col("sz_y")))
       // positional filter (ppjoin): past this shared token, at most
       // min(remaining suffix) + 1 tokens can still overlap — below the
       // intersection bound the pair cannot reach j ≥ t
       .filter((lit(1) + least(col("sz_x") - col("pos_x"), col("sz_y") - col("pos_y")))
-        .cast("double") >=
-        (lit(threshold / (1 + threshold))
-          * (col("sz_x") + col("sz_y")).cast("double") - lit(1.0)))
+        .cast("double") >= MinHashLSH.overlapBound(threshold, col("sz_x"), col("sz_y")))
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"),
         when(col("id_x") < col("id_y"), col("sz_x")).otherwise(col("sz_y")).as("sz_a"),
         when(col("id_x") < col("id_y"), col("sz_y")).otherwise(col("sz_x")).as("sz_b"))
       .distinct()
-    val sets = items.select(col("id"),
-      array_sort(transform(array_distinct(col("toks")), t => xxhash64(t))).as("set"))
-    cand
-      .join(sets.select(col("id").as("id_a"), col("set").as("set_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("set").as("set_b")), "id_b")
-      .withColumn("inter",
-        VectorExpressions.sortedIntersectAtLeast(col("set_a"), col("set_b"),
-          MinHashLSH.minRequired(threshold)).cast("double"))
-      .withColumn("uni", (col("sz_a") + col("sz_b")).cast("double") - col("inter"))
-      .withColumn("jac", col("inter") / col("uni"))
-      .filter(col("jac") >= threshold)
-      .select(col("id_a"), col("id_b"), Rounding.dround(col("jac"), 4).as("j"))
+    val sets = MinHashLSH.tokenSets(items)
+    MinHashLSH.verify(cand, sets, sets, threshold).select(col("id_a"), col("id_b"), col("j"))
   }
 }

@@ -89,117 +89,155 @@ object MinHashLSH {
         VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
       .filter(col("bands").isNotNull)
 
-  /** Self-join of banded rows on (band, sig) with id_a < id_b. Callers
-    * project from aliases "a"/"b". A cluster of identical docs puts every
-    * member in one bucket per band; AQE's skew-join split divides that
-    * partition (BASELINE.md round-6 skew stress), and exact dedup (q52)
-    * before near-dup collapses the cluster first. OPTIMIZATION_r17.md
-    * (VERDICT item 4) records why this join beat generating each bucket's
-    * pairs from an aggregate. */
-  private def selfBandJoin(banded: DataFrame): DataFrame =
-    banded.as("a").join(banded.as("b"),
-      col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-        col("a.id") < col("b.id"))
+  /** The session's shuffle width — the one explicit pin width of every
+    * near-dup path. */
+  private[graft] def width(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
 
-  /** Distinct candidate pairs (id_a < id_b) sharing ≥1 band bucket.
+  /** Banded rows: every column of `h` (id, …, bands) plus one (band, sig)
+    * row per entry of its `bands` array. */
+  private def exploded(h: DataFrame): DataFrame =
+    h.select(h.columns.map(col) :+ posexplode(col("bands")).as(Seq("band", "sig")): _*)
+
+  /** |distinct tokens| — the set size both the size prune and the verify's
+    * union arithmetic read. */
+  private def distinctSize: Column = size(array_distinct(col("toks"))).as("sz")
+
+  /** `items` (id, toks) pinned to full width BEFORE the band kernel, then
+    * banded: (id, cols…, bands, band, sig).
     *
-    * Two scale decisions:
-    *  - The probe side is explicitly repartitioned to full cluster width
-    *    BEFORE the explode+join: the signature stage upstream is a
-    *    zero-shuffle scan ([[bandKeys]]) emitting few, tiny rows, so AQE
-    *    would run the pipelined stage DOWNSTREAM (band explode →
-    *    band-bucket join) — where the row explosion happens — at the
-    *    scan's parallelism.
-    *  - Each pair is emitted from its FIRST hash-equal band only
-    *    ([[FirstMatchIndex]] over the two band arrays, a map-side codegen
-    *    filter): on a dense corpus a true pair collides in ~`bands`·j² ≈ 20
-    *    of the 32 buckets, so the old `distinct()` shuffled ~20× the pair
-    *    count in duplicate rows; first-match dedup is exact (a pair appears
-    *    in bucket k iff its band hashes agree at k, which is precisely what
-    *    the filter tests) and costs one array scan per collision row. */
-  def candidatePairs(items: DataFrame, p: Params = Params()): DataFrame = {
-    val n = items.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // pin BEFORE the kernel (r17): with the pin after it, the whole
-    // signature+banding kernel evaluated inside the scan stage — one task
-    // when the corpus is one small file (see candidatePairsSized). The
-    // kernel is projected WITHOUT bandKeys' isNotNull filter: the filter
-    // is redundant under posexplode (a null array emits no rows), and the
-    // optimizer pushed it through the repartition into the SCAN as a
-    // DataFilter that re-evaluated the whole kernel single-task (guide
-    // §4.4's duplicated-expensive-expression trap, Catalyst edition).
-    val hashed = items.repartition(n)
-      .select(col("id"),
-        VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
-    val banded = hashed.select(col("id"), col("bands"),
-      posexplode(col("bands")).as(Seq("band", "sig")))
-    selfBandJoin(banded)
+    * The pin sits before the kernel (r17): a projection below a
+    * repartition evaluates MAP-SIDE, so with the pin after it the whole
+    * minhash/banding kernel ran inside the scan stage — ONE task when the
+    * corpus is one small parquet file (taskprof: x02's kernel + set build
+    * was a lone 5.5 s task inside its 7.8 s; every LSH row paid 0.5–1.5 s
+    * the same way). Pinning the raw rows first puts the kernel in the wide
+    * stage with the explode+join it feeds, where the row explosion
+    * happens. At scale both formulations are wide; the pin only moves
+    * ~|corpus| narrow rows.
+    *
+    * No isNotNull(bands) filter (r17, unlike [[bandKeys]]): it is redundant
+    * under posexplode (a null band array emits zero rows), and the
+    * optimizer pushed it through the repartition into the parquet scan as
+    * a DataFilter that re-evaluated the ENTIRE kernel inside the
+    * single-task scan stage (x02's executed plan carried
+    * `isnotnull(minhash_band_keys(char_grams(text)))` in DataFilters, a
+    * lone 4–6 s task — guide §4.4's duplicated-expensive-expression trap). */
+  private def pinnedBands(items: DataFrame, p: Params, cols: Column*): DataFrame =
+    exploded(items.repartition(width(items)).select((col("id") +: cols) :+
+      VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"): _*))
+
+  /** The first-match band join every banded near-dup path runs (MinHash
+    * here, SimHash in x01, signed random projections in x12). `a`/`b` are
+    * banded rows (id, …, bands, band, key): the doc id first, the whole
+    * band array, and the exploded (band, key) last. They join on (band,
+    * key) — a hash join on a high-cardinality key, |buckets| local joins
+    * instead of the O(n²) comparison. The same frame on both sides is a
+    * self-join and keeps id_a < id_b; two frames (disjoint corpora) keep
+    * every cross pair. `prune` — a pair predicate over "a"/"b", such as
+    * [[sizeCompatible]] — lands in the join condition ahead of the
+    * first-match filter, so an incompatible pair costs two int compares.
+    * Output: (id_a, id_b), plus (sz_a, sz_b) when the rows carry `sz`.
+    *
+    * First-match dedup: a pair colliding in k band buckets appears k times
+    * in the join; only the row whose band is the pair's FIRST hash-equal
+    * band ([[FirstMatchIndex]] over the two arrays) survives. That is exact
+    * — a pair meets in bucket k iff its band keys agree at k, which is
+    * precisely what the filter tests — and it costs one array scan per
+    * collision row, map-side, where the `distinct()` it replaced shuffled
+    * ~`bands`·j² ≈ 20× the pair count on a dense corpus.
+    *
+    * A cluster of identical docs puts every member in one bucket per band;
+    * AQE's skew-join split divides that partition (BASELINE.md round-6 skew
+    * stress), and exact dedup (q52) before near-dup collapses the cluster
+    * first. OPTIMIZATION_r17.md (VERDICT item 4) records why this join beat
+    * generating each bucket's pairs from an aggregate. */
+  private[graft] def firstMatchJoin(a: DataFrame, b: DataFrame,
+                                    prune: Column = lit(true)): DataFrame = {
+    val (id, key) = (a.columns.head, a.columns.last)
+    val on = col("a.band") === col("b.band") && col(s"a.$key") === col(s"b.$key")
+    val sized =
+      if (a.columns.contains("sz")) Seq(col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+      else Nil
+    a.as("a").join(b.as("b"), if (a eq b) on && col(s"a.$id") < col(s"b.$id") else on)
+      .filter(prune)
       .filter(VectorExpressions.firstMatchIndex(col("a.bands"), col("b.bands")) === col("a.band"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .select(col(s"a.$id").as("id_a") +: col(s"b.$id").as("id_b") +: sized: _*)
+  }
+
+  /** J(a,b) ≤ min(|a|,|b|)/max(|a|,|b|), so a pair with `min < t·max − 1`
+    * cannot reach threshold t (the one-element margin makes double
+    * rounding irrelevant). */
+  private[graft] def sizeCompatible(threshold: Double, sa: Column, sb: Column): Column =
+    least(sa, sb).cast("double") >= lit(threshold) * greatest(sa, sb).cast("double") - lit(1.0)
+
+  /** Distinct candidate pairs (id_a < id_b) sharing ≥1 band bucket. */
+  def candidatePairs(items: DataFrame, p: Params = Params()): DataFrame = {
+    val banded = pinnedBands(items, p)
+    firstMatchJoin(banded, banded)
   }
 
   /** [[candidatePairs]] that also carries each side's DISTINCT-token set
-    * size and prunes size-incompatible pairs before the payload joins:
-    * J(a,b) ≤ min(|a|,|b|)/max(|a|,|b|), so any pair with
-    * `min < t·max − 1` (one-element margin makes double rounding
-    * irrelevant) cannot reach threshold t and is dropped for the cost of
-    * two int compares — BEFORE the first-match band scan and, crucially,
-    * before the verify join drags both token arrays across the shuffle.
+    * size and drops size-incompatible pairs ([[sizeCompatible]]) before
+    * the first-match band scan and, crucially, before the verify join
+    * drags both token arrays across the shuffle.
     * Output: (id_a, id_b, sz_a, sz_b). */
   private[graft] def candidatePairsSized(items: DataFrame, threshold: Double,
                                   p: Params): DataFrame = {
-    val n = items.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // The width pin sits BEFORE the signature kernel (r17 — it used to sit
-    // after): a projection below a repartition evaluates MAP-SIDE, so the
-    // whole minhash/banding kernel ran inside the scan stage — ONE task
-    // when the corpus is one small parquet file (taskprof: x02's kernel +
-    // set build was a lone 5.5 s task inside its 7.8 s; every LSH row paid
-    // 0.5–1.5 s the same way). Pinning the raw (id, toks) rows first puts
-    // the kernel in the 32-wide stage with the explode+join it feeds. At
-    // scale both formulations are wide (many input splits); the pin only
-    // moves ~|corpus| narrow rows.
-    // No isNotNull(bands) filter here (r17): it is REDUNDANT under the
-    // posexplode below (a null band array emits zero rows), and the
-    // optimizer pushed it through the repartition into the parquet scan
-    // as a DataFilter that re-evaluated the ENTIRE minhash kernel inside
-    // the single-task scan stage — x02's executed plan carried
-    // `isnotnull(minhash_band_keys(char_grams(text)))` in DataFilters,
-    // a lone 4–6 s task (guide §4.4's duplicated-expensive-expression
-    // trap; taskprof measured it, the re-dump shows the scan clean).
-    val hashed = items.repartition(n)
-      .select(col("id"),
-        size(array_distinct(col("toks"))).as("sz"),
-        VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
-    val banded = hashed.select(col("id"), col("sz"), col("bands"),
-      posexplode(col("bands")).as(Seq("band", "sig")))
-    selfBandJoin(banded)
-      .filter(least(col("a.sz"), col("b.sz")).cast("double") >=
-              lit(threshold) * greatest(col("a.sz"), col("b.sz")).cast("double") - lit(1.0))
-      .filter(VectorExpressions.firstMatchIndex(col("a.bands"), col("b.bands")) === col("a.band"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-              col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
+    val banded = pinnedBands(items, p, distinctSize)
+    firstMatchJoin(banded, banded, sizeCompatible(threshold, col("a.sz"), col("b.sz")))
   }
 
-  /** Lower bound on the intersection of any pair passing `j ≥ t`:
-    * i/(sa+sb−i) ≥ t ⟺ i ≥ t·(sa+sb)/(1+t); floor−1 gives the early-exit
-    * kernels a margin of one whole element over any double rounding. */
-  private[graft] def minRequired(threshold: Double): Column =
-    (lit(threshold / (1 + threshold)) * (col("sz_a") + col("sz_b")).cast("double") - lit(1.0))
-      .cast("int")
+  /** Lower bound on the intersection of a pair of set sizes `sa`, `sb`
+    * passing `j ≥ t`: i/(sa+sb−i) ≥ t ⟺ i ≥ t·(sa+sb)/(1+t); the −1 gives
+    * a margin of one whole element over any double rounding. */
+  private[graft] def overlapBound(threshold: Double, sa: Column, sb: Column): Column =
+    lit(threshold / (1 + threshold)) * (sa + sb).cast("double") - lit(1.0)
+
+  /** The exact verify every Jaccard near-dup path ends in. `cand`: (id_a,
+    * id_b, sz_a, sz_b) with DISTINCT-token set sizes; `ls`/`rs`: (id, set)
+    * sorted token-id arrays for the a and b sides (ARRAY<BIGINT> hashes or
+    * ARRAY<INT> dictionary ids — any token↔id bijection gives the same
+    * counts). Output: (id_a, id_b, j = round(jaccard, 4), inter = |A∩B|,
+    * sz_a, sz_b), pairs with jaccard ≥ threshold only.
+    *
+    * Per pair: the early-exit merge ([[SortedIntersectAtLeast]], bound
+    * [[overlapBound]] as an INT) counts the intersection exactly when the
+    * pair can still pass and returns -1 (jac negative, the same threshold
+    * filter drops it) when it cannot, so survivors are bitwise-identical to
+    * the plain count; |A ∪ B| = |A| + |B| − |A ∩ B| from the sizes, no union
+    * materialized.
+    *
+    * The set joins are UNHINTED: the per-doc set table is O(corpus), so
+    * forcing broadcast() here would OOM every executor at 100 TB. Left to
+    * the planner, AQE broadcasts while the measured build side is small
+    * and falls back to a shuffled join on the id keys once it isn't.
+    *
+    * No repartition between candidates and verify: the band join upstream
+    * is already pinned at full width and first-match dedup emits each pair
+    * exactly once map-side, so the verify joins fuse into that same wide
+    * stage (at corpus scale the id-keyed shuffle join IS the reshuffle).
+    * The historical explicit repartition here guarded a `distinct()` whose
+    * tiny rows AQE coalesced to one partition — the distinct is gone, and
+    * at sf0.1 the redundant 12M-pair shuffle cost x14 4s of its 11.5s. */
+  private[graft] def verify(cand: DataFrame, ls: DataFrame, rs: DataFrame,
+                            threshold: Double): DataFrame =
+    cand
+      .join(ls.select(col("id").as("id_a"), col("set").as("set_a")), "id_a")
+      .join(rs.select(col("id").as("id_b"), col("set").as("set_b")), "id_b")
+      .withColumn("inter",
+        VectorExpressions.sortedIntersectAtLeast(col("set_a"), col("set_b"),
+          overlapBound(threshold, col("sz_a"), col("sz_b")).cast("int")).cast("double"))
+      .withColumn("uni", (col("sz_a") + col("sz_b")).cast("double") - col("inter"))
+      .withColumn("jac", col("inter") / col("uni"))
+      .filter(col("jac") >= threshold)
+      .select(col("id_a"), col("id_b"), Rounding.dround(col("jac"), 4).as("j"),
+        col("inter").cast("long").as("inter"), col("sz_a"), col("sz_b"))
 
   /** Candidates verified with EXACT Jaccard over the token sets; only pairs
     * with jaccard ≥ threshold survive. Output: (id_a, id_b, j = round(.,4)).
     * The token-set arrays ride along the (small) candidate list, so the
-    * exact verification never touches non-candidate pairs.
-    *
-    * No repartition between candidates and verify: the band join upstream
-    * is already pinned at full width ([[candidatePairsSized]]'s explicit
-    * repartition ahead of the explode), and the first-match dedup emits
-    * each pair exactly once map-side, so the verify joins fuse into that
-    * same wide stage (AQE broadcasts the set table while it is measurably
-    * small; at corpus scale the id-keyed shuffle join IS the reshuffle).
-    * The historical explicit repartition here guarded a `distinct()` whose
-    * tiny rows AQE coalesced to one partition — the distinct is gone, and
-    * at sf0.1 the redundant 12M-pair shuffle cost x14 4s of its 11.5s. */
+    * exact verification never touches non-candidate pairs. */
   def verifiedPairs(items: DataFrame, threshold: Double,
                     p: Params = Params()): DataFrame =
     verifiedPairsDetailed(items, threshold, p)
@@ -214,47 +252,11 @@ object MinHashLSH {
     * sf0.1's 6M pairs that second pass was ~40% of x93's wall. */
   def verifiedPairsDetailed(items: DataFrame, threshold: Double,
                             p: Params = Params()): DataFrame = {
-    // Per-doc ONCE: distinct tokens → 64-bit hashes → sorted array. The
-    // per-pair exact intersection is then a codegen'd two-pointer merge
-    // (SortedIntersectCount) instead of array_intersect's interpreted
-    // per-pair hash-set build — the dominant cost when the corpus is dense
-    // with near-dups and candidates ≈ output pairs. xxhash64 collisions
-    // across a ~100-element union are ~1e-16 per pair — below any ROUND(4)
-    // boundary's practical risk. |a ∪ b| = |a| + |b| − |a ∩ b| from
-    // precomputed sizes (no union materialization).
-    //
-    // Payload joins are UNHINTED: the per-doc token-set table is O(corpus),
-    // so forcing broadcast() here would OOM every executor at 100 TB. Left
-    // to the planner, AQE broadcasts while the measured build side is small
-    // and falls back to a shuffled join on the id keys once it isn't — the
-    // candidate list is already repartitioned wide, and the payload join is
-    // linear either way.
-    //
-    // Verify = early-exit merge ([[VectorExpressions.SortedIntersectAtLeast]]):
-    // a candidate that cannot reach the j ≥ t intersection bound returns -1
-    // (jac goes negative, the SAME threshold filter drops it); a candidate
-    // that can is counted exactly — survivors are bitwise-identical to the
-    // plain kernel (MinHashLSHSpec asserts it). No repartition between
-    // candidates and verify: the band join upstream is already pinned at
-    // full width, and first-match dedup emits each pair exactly once
-    // map-side, so the verify joins fuse into that same wide stage.
-    val cand = candidatePairsSized(items, threshold, p)
-    // same pre-kernel width pin as candidatePairsSized: the sorted-hash
-    // set build is per-doc kernel work that otherwise runs in the scan's
+    // same pre-kernel width pin as the band rows: the sorted-hash set
+    // build is per-doc kernel work that otherwise runs in the scan's
     // (possibly single) task before feeding the broadcast
-    val n = items.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val sets = tokenSets(items.repartition(n))
-    cand
-      .join(sets.select(col("id").as("id_a"), col("set").as("set_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("set").as("set_b")), "id_b")
-      .withColumn("inter",
-        VectorExpressions.sortedIntersectAtLeast(col("set_a"), col("set_b"),
-          minRequired(threshold)).cast("double"))
-      .withColumn("uni", (col("sz_a") + col("sz_b")).cast("double") - col("inter"))
-      .withColumn("jac", col("inter") / col("uni"))
-      .filter(col("jac") >= threshold)
-      .select(col("id_a"), col("id_b"), Rounding.dround(col("jac"), 4).as("j"),
-        col("inter").cast("long").as("inter"), col("sz_a"), col("sz_b"))
+    val sets = tokenSets(items.repartition(width(items)))
+    verify(candidatePairsSized(items, threshold, p), sets, sets, threshold)
   }
 
   /** [[verifiedPairs]] across TWO disjoint corpora — the INCREMENTAL-dedup
@@ -279,11 +281,9 @@ object MinHashLSH {
     * oracle); X42IncrementalSpec pins the equivalence to the full-corpus
     * pair list so the composition stays honest.
     *
-    * Same guarantees as [[verifiedPairs]]: first-match band dedup (a cross
-    * pair meets once, at the first band where the two arrays agree — the
-    * same [[VectorExpressions.FirstMatchIndex]] filter, evaluated on the
-    * two sides' band arrays), size-compatibility pruning before any
-    * payload movement, early-exit exact verify, unhinted payload joins. */
+    * Same guarantees as [[verifiedPairs]]: the same [[firstMatchJoin]] over
+    * the two sides' band arrays, size pruning before any payload
+    * movement, and the same [[verify]]. */
   def crossVerifiedPairs(left: DataFrame, right: DataFrame, threshold: Double,
                          p: Params = Params()): DataFrame =
     crossVerifiedFromHashed(hashedDocs(left, p), tokenSets(left),
@@ -301,13 +301,14 @@ object MinHashLSH {
     * more than the whole direct recompute. The array-per-doc layout keeps
     * the map-side filter and the store.) */
   def hashedDocs(items: DataFrame, p: Params = Params()): DataFrame =
-    items.select(col("id"),
-        size(array_distinct(col("toks"))).as("sz"),
+    items.select(col("id"), distinctSize,
         VectorExpressions.minhashBandKeys(col("toks"), p.numPerm, p.rows).as("bands"))
       .filter(col("bands").isNotNull)
 
-  /** (id, set) per doc — sorted 64-bit token-hash arrays, the exact-verify
-    * payload (see [[verifiedPairs]] for the collision math). */
+  /** (id, set) per doc — distinct tokens → xxhash64 → sorted ARRAY<BIGINT>,
+    * the exact-verify payload. xxhash64 collisions across a ~100-element
+    * union are ~1e-16 per pair — below any ROUND(4) boundary's practical
+    * risk. */
   def tokenSets(items: DataFrame): DataFrame =
     items.select(col("id"),
       array_sort(transform(array_distinct(col("toks")), t => xxhash64(t))).as("set"))
@@ -320,26 +321,10 @@ object MinHashLSH {
   private[graft] def crossVerifiedFromHashed(lh: DataFrame, ls: DataFrame,
                                              rh: DataFrame, rs: DataFrame,
                                              threshold: Double): DataFrame = {
-    val n = lh.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    def banded(h: DataFrame) = h.repartition(n)
-      .select(col("id"), col("sz"), col("bands"),
-        posexplode(col("bands")).as(Seq("band", "sig")))
-    banded(lh).as("a").join(banded(rh).as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
-      .filter(least(col("a.sz"), col("b.sz")).cast("double") >=
-              lit(threshold) * greatest(col("a.sz"), col("b.sz")).cast("double") - lit(1.0))
-      .filter(VectorExpressions.firstMatchIndex(col("a.bands"), col("b.bands")) === col("a.band"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-              col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-      .join(ls.select(col("id").as("id_a"), col("set").as("set_a")), "id_a")
-      .join(rs.select(col("id").as("id_b"), col("set").as("set_b")), "id_b")
-      .withColumn("inter",
-        VectorExpressions.sortedIntersectAtLeast(col("set_a"), col("set_b"),
-          minRequired(threshold)).cast("double"))
-      .withColumn("uni", (col("sz_a") + col("sz_b")).cast("double") - col("inter"))
-      .withColumn("jac", col("inter") / col("uni"))
-      .filter(col("jac") >= threshold)
-      .select(col("id_a"), col("id_b"), Rounding.dround(col("jac"), 4).as("j"))
+    val n = width(lh)
+    val cand = firstMatchJoin(exploded(lh.repartition(n)), exploded(rh.repartition(n)),
+      sizeCompatible(threshold, col("a.sz"), col("b.sz")))
+    verify(cand, ls, rs, threshold).select(col("id_a"), col("id_b"), col("j"))
   }
 
   /** [[verifiedPairs]] with DICTIONARY-ENCODED token sets — for bounded
@@ -365,12 +350,11 @@ object MinHashLSH {
     * scaling liability. */
   def verifiedPairsDict(items: DataFrame, threshold: Double,
                         p: Params = Params()): DataFrame = {
-    val cand = candidatePairsSized(items, threshold, p)
     val w = org.apache.spark.sql.expressions.Window
     // pre-explode width pin (r17 taskprof): the token explode + vocab join
     // + per-doc set aggregation otherwise pipeline inside the single-task
     // scan stage (1.5 M gram rows in one task on the sf0.1 single file)
-    val n = items.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = width(items)
     val tok = items.repartition(n)
       .select(col("id"), explode(array_distinct(col("toks"))).as("tok"))
     val vocab = tok.select("tok").distinct()
@@ -386,15 +370,7 @@ object MinHashLSH {
     val sets = tok.join(broadcast(vocab), "tok")
       .repartition(n, col("id"))
       .groupBy("id").agg(array_sort(collect_list(col("tid"))).as("set"))
-    cand
-      .join(sets.select(col("id").as("id_a"), col("set").as("set_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("set").as("set_b")), "id_b")
-      .withColumn("inter",
-        VectorExpressions.sortedIntersectAtLeastInt(col("set_a"), col("set_b"),
-          minRequired(threshold)).cast("double"))
-      .withColumn("uni", (col("sz_a") + col("sz_b")).cast("double") - col("inter"))
-      .withColumn("jac", col("inter") / col("uni"))
-      .filter(col("jac") >= threshold)
-      .select(col("id_a"), col("id_b"), Rounding.dround(col("jac"), 4).as("j"))
+    verify(candidatePairsSized(items, threshold, p), sets, sets, threshold)
+      .select(col("id_a"), col("id_b"), col("j"))
   }
 }

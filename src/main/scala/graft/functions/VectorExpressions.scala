@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression, XXH64, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftbridge.Bridge
@@ -71,7 +72,7 @@ case class FloatDotProduct(left: Expression, right: Expression)
   * estimating J over millions of candidate pairs costs ~64 long-compares
   * each, no interpreted lambdas and no per-row allocation. This is the
   * estimate-only path for corpora where an approximate Jaccard suffices
-  * (the exact path is [[SortedIntersectCount]]; on THIS fixture the true
+  * (the exact path is [[SortedIntersectAtLeast]]; on THIS fixture the true
   * pair density makes exact verification affordable, so the contract query
   * uses exact — but at 100 TB an estimate-first pipeline with
   * `sigMatches/64 ≥ t+ε` can skip most exact checks).
@@ -114,140 +115,67 @@ case class SigMatchCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Intersection size of two SORTED ARRAY<BIGINT> (distinct elements) via a
+/** Intersection size of two SORTED, distinct-element arrays via a
   * codegen'd two-pointer merge scan — O(|a|+|b|) primitive compares, no
   * per-row hash-set allocation. This replaces `array_intersect` (which
   * builds an OpenHashSet per pair, interpreted) in the exact-Jaccard
-  * verification of [[MinHashLSH.verifiedPairs]], where millions of candidate
-  * pairs each need an intersection count: token sets are pre-hashed once per
-  * document (xxhash64) and pre-sorted, so the per-pair cost collapses to a
-  * branch-predictable long-compare loop inside whole-stage codegen.
+  * verify of [[MinHashLSH.verify]], where millions of candidate pairs each
+  * need an intersection count: token sets are hashed once per document and
+  * pre-sorted, so the per-pair cost is a branch-predictable compare loop
+  * inside whole-stage codegen.
+  *
+  * Element type: ARRAY<BIGINT> (xxhash64 token sets) or ARRAY<INT>
+  * (dictionary-encoded sets — for a bounded universe such as char n-grams
+  * the 4-byte width halves the verify bytes per candidate). Both arrays
+  * must share it; the generated loop reads it from the children.
+  *
+  * Early exit: returns the exact count when the pair can still reach
+  * `minReq` (the INT third argument), or -1 the moment `count-so-far +
+  * min(remaining_a, remaining_b) < minReq` proves it cannot.
+  * Threshold-verify workloads (keep pairs with Jaccard ≥ t) reject almost
+  * every candidate — x02's fixture verifies ~10M candidates for ~900
+  * survivors — and a failing merge stops as soon as failure is certain
+  * (≈40-60% through for typical J≈0.3-0.5 pairs vs t=0.7) instead of
+  * draining both arrays. A pair that can still pass is NEVER exited early,
+  * so downstream `j ≥ t` filters see bitwise-identical survivors provided
+  * `minReq` is a valid lower bound on the intersection of any passing pair;
+  * callers derive it as `floor(t·(|a|+|b|)/(1+t)) − 1` — the algebraic
+  * bound minus one whole element, which makes double-rounding in the
+  * derivation irrelevant. Non-positive `minReq` disables the exit: the
+  * plain count (SQL `sorted_intersect_count`).
   */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val na = x.numElements(); val nb = y.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < na && j < nb) {
-      val xv = x.getLong(i); val yv = y.getLong(j)
-      if (xv < yv) i += 1
-      else if (xv > yv) j += 1
-      else { c += 1; i += 1; j += 1 }
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |final int $na = $a.numElements();
-         |final int $nb = $b.numElements();
-         |int $i = 0, $j = 0, $c = 0;
-         |while ($i < $na && $j < $nb) {
-         |  final long $xv = $a.getLong($i);
-         |  final long $yv = $b.getLong($j);
-         |  if ($xv < $yv) { $i++; }
-         |  else if ($xv > $yv) { $j++; }
-         |  else { $c++; $i++; $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SortedIntersectCount]] over ARRAY<INT> — for dictionary-encoded token
-  * sets where the universe is bounded (char n-grams: ≤ |alphabet|ⁿ ids at
-  * ANY corpus size), element width halves the per-pair verify bytes that
-  * dominate dense near-dup joins. */
-case class SortedIntersectCountInt(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_count_int"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val na = x.numElements(); val nb = y.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < na && j < nb) {
-      val xv = x.getInt(i); val yv = y.getInt(j)
-      if (xv < yv) i += 1
-      else if (xv > yv) j += 1
-      else { c += 1; i += 1; j += 1 }
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |final int $na = $a.numElements();
-         |final int $nb = $b.numElements();
-         |int $i = 0, $j = 0, $c = 0;
-         |while ($i < $na && $j < $nb) {
-         |  final int $xv = $a.getInt($i);
-         |  final int $yv = $b.getInt($j);
-         |  if ($xv < $yv) { $i++; }
-         |  else if ($xv > $yv) { $j++; }
-         |  else { $c++; $i++; $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedIntersectCountInt =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SortedIntersectCount]] with an early-exit lower bound. Returns the
-  * exact intersection count when the pair can still reach `minReq`, or -1
-  * the moment `count-so-far + min(remaining_a, remaining_b) < minReq`
-  * proves it cannot. Threshold-verify workloads (keep pairs with Jaccard
-  * ≥ t) reject almost every candidate — x02's fixture verifies ~10M
-  * candidates for ~900 survivors — and a failing merge now stops as soon
-  * as failure is certain (≈40-60% through for typical J≈0.3-0.5 pairs vs
-  * t=0.7) instead of draining both arrays. A pair that can still pass is
-  * NEVER exited early, so downstream `j ≥ t` filters see bitwise-identical
-  * survivors provided `minReq` is a valid lower bound on the intersection
-  * of any passing pair; callers derive it as
-  * `floor(t·(|a|+|b|)/(1+t)) − 1` — the algebraic bound minus one whole
-  * element, which makes double-rounding in the derivation irrelevant.
-  * Non-positive `minReq` disables the exit (bound can't trigger). */
 case class SortedIntersectAtLeast(first: Expression, second: Expression,
                                   third: Expression)
     extends TernaryExpression {
 
   override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_at_least"
+  // SQL callers keep the name they called (NanosRangePushdown tags it)
+  override def prettyName: String =
+    getTagValue(FunctionRegistry.FUNC_ALIAS).getOrElse("sorted_intersect_at_least")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (first.dataType, second.dataType, third.dataType) match {
+      case (ArrayType(x, _), ArrayType(y, _), IntegerType)
+          if x == y && (x == IntegerType || x == LongType) => TypeCheckResult.TypeCheckSuccess
+      case (x, y, m) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName takes two sorted arrays of one element type, INT or BIGINT, " +
+          s"and an INT bound; got ${x.catalogString}, ${y.catalogString}, ${m.catalogString}")
+    }
+
+  private def elementType: DataType = first.dataType.asInstanceOf[ArrayType].elementType
 
   override def nullSafeEval(a: Any, b: Any, m: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val minReq = m.asInstanceOf[Int]
+    val wide = elementType == LongType
     val na = x.numElements(); val nb = y.numElements()
     var i = 0; var j = 0; var c = 0
     while (i < na && j < nb) {
       val remMin = math.min(na - i, nb - j)
       if (c + remMin < minReq) return -1
-      val xv = x.getLong(i); val yv = y.getLong(j)
+      val xv = if (wide) x.getLong(i) else x.getInt(i).toLong
+      val yv = if (wide) y.getLong(j) else y.getInt(j).toLong
       if (xv < yv) i += 1
       else if (xv > yv) j += 1
       else { c += 1; i += 1; j += 1 }
@@ -255,7 +183,9 @@ case class SortedIntersectAtLeast(first: Expression, second: Expression,
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val et = elementType
+    val jt = CodeGenerator.javaType(et)
     nullSafeCodeGen(ctx, ev, (a, b, m) => {
       val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
       val i = ctx.freshName("i"); val j = ctx.freshName("j")
@@ -268,8 +198,8 @@ case class SortedIntersectAtLeast(first: Expression, second: Expression,
          |while ($i < $na && $j < $nb) {
          |  final int $rem = ($na - $i < $nb - $j) ? $na - $i : $nb - $j;
          |  if ($c + $rem < $m) { $c = -1; break; }
-         |  final long $xv = $a.getLong($i);
-         |  final long $yv = $b.getLong($j);
+         |  final $jt $xv = ${CodeGenerator.getValue(a, et, i)};
+         |  final $jt $yv = ${CodeGenerator.getValue(b, et, j)};
          |  if ($xv < $yv) { $i++; }
          |  else if ($xv > $yv) { $j++; }
          |  else { $c++; $i++; $j++; }
@@ -277,65 +207,11 @@ case class SortedIntersectAtLeast(first: Expression, second: Expression,
          |${ev.value} = $c;
        """.stripMargin
     })
+  }
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): SortedIntersectAtLeast =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** [[SortedIntersectAtLeast]] over sorted ARRAY<INT> (dictionary-encoded
-  * token sets — see [[MinHashLSH.verifiedPairsDict]]). */
-case class SortedIntersectAtLeastInt(first: Expression, second: Expression,
-                                     third: Expression)
-    extends TernaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_at_least_int"
-
-  override def nullSafeEval(a: Any, b: Any, m: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val minReq = m.asInstanceOf[Int]
-    val na = x.numElements(); val nb = y.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < na && j < nb) {
-      val remMin = math.min(na - i, nb - j)
-      if (c + remMin < minReq) return -1
-      val xv = x.getInt(i); val yv = y.getInt(j)
-      if (xv < yv) i += 1
-      else if (xv > yv) j += 1
-      else { c += 1; i += 1; j += 1 }
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, m) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val rem = ctx.freshName("rem")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |final int $na = $a.numElements();
-         |final int $nb = $b.numElements();
-         |int $i = 0, $j = 0, $c = 0;
-         |while ($i < $na && $j < $nb) {
-         |  final int $rem = ($na - $i < $nb - $j) ? $na - $i : $nb - $j;
-         |  if ($c + $rem < $m) { $c = -1; break; }
-         |  final int $xv = $a.getInt($i);
-         |  final int $yv = $b.getInt($j);
-         |  if ($xv < $yv) { $i++; }
-         |  else if ($xv > $yv) { $j++; }
-         |  else { $c++; $i++; $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): SortedIntersectAtLeastInt =
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
@@ -641,23 +517,15 @@ object VectorExpressions {
   def sigMatches(a: Column, b: Column): Column =
     Bridge.column(SigMatchCount(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Codegen'd merge-scan intersection count over two sorted ARRAY<BIGINT>. */
-  def sortedIntersect(a: Column, b: Column): Column =
-    Bridge.column(SortedIntersectCount(Bridge.expression(a), Bridge.expression(b)))
-
   /** Codegen'd first index where two ARRAY<BIGINT> agree (-1 if none). */
   def firstMatchIndex(a: Column, b: Column): Column =
     Bridge.column(FirstMatchIndex(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Early-exit intersect over sorted ARRAY<BIGINT>: exact count, or -1 once
-    * the pair provably cannot reach `minReq` (INT column). */
+  /** Early-exit intersect over two sorted ARRAY<BIGINT> or ARRAY<INT>: exact
+    * count, or -1 once the pair provably cannot reach `minReq` (INT column;
+    * `lit(0)` for the plain count). */
   def sortedIntersectAtLeast(a: Column, b: Column, minReq: Column): Column =
     Bridge.column(SortedIntersectAtLeast(
-      Bridge.expression(a), Bridge.expression(b), Bridge.expression(minReq)))
-
-  /** [[sortedIntersectAtLeast]] over sorted ARRAY<INT>. */
-  def sortedIntersectAtLeastInt(a: Column, b: Column, minReq: Column): Column =
-    Bridge.column(SortedIntersectAtLeastInt(
       Bridge.expression(a), Bridge.expression(b), Bridge.expression(minReq)))
 
   /** splitmix64-mixed permutation `i` of a 64-bit hash column. */

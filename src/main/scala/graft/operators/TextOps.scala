@@ -128,24 +128,18 @@ object TextOps {
     // AQE partition, but the band join's row explosion must run cluster-wide
     val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val sig = sigBits.select((col("id") +: bandKeys): _*).repartition(nPart)
-    // first-matching-band dedup (see MinHashLSH.candidatePairs): a hamming≤3
-    // pair matches in up to all 4 bands; emitting from the first equal band
-    // only replaces the distinct() shuffle with a map-side codegen filter
+    // a hamming≤3 pair matches in up to all 4 bands; the first-match band
+    // join (MinHashLSH.firstMatchJoin) emits it once, from the first
     val banded = sig.select(col("id"),
         array((0 until 4).map(k => col(s"k$k")): _*).as("bands"))
       .select(col("id"), col("bands"), posexplode(col("bands")).as(Seq("band", "key")))
     val hamming = (0 until 4)
       .map(k => bit_count(col(s"a.k$k").bitwiseXOR(col(s"b.k$k"))))
       .reduce(_ + _).cast("long")
-    banded.as("ab").join(banded.as("bb"),
-        col("ab.band") === col("bb.band") && col("ab.key") === col("bb.key") &&
-          col("ab.id") < col("bb.id"))
-      .filter(graft.functions.VectorExpressions
-        .firstMatchIndex(col("ab.bands"), col("bb.bands")) === col("ab.band"))
-      .select(col("ab.id").as("id_a"), col("bb.id").as("id_b"))
+    MinHashLSH.firstMatchJoin(banded, banded)
       // unhinted payload rejoins: the signature table is O(corpus), so a
       // forced broadcast would OOM at scale — AQE broadcasts only while the
-      // measured build side is actually small (see MinHashLSH.verifiedPairs)
+      // measured build side is actually small (see MinHashLSH.verify)
       .join(sig.as("a"), col("id_a") === col("a.id"))
       .join(sig.as("b"), col("id_b") === col("b.id"))
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), hamming.as("hamming"))

@@ -450,19 +450,10 @@ object VectorOps {
         graft.functions.VectorExpressions.signSketchBands(col("embedding")).as("bands"))
       .select(col("vec_id"), col("bands"),
         posexplode(col("bands")).as(Seq("band", "key")))
-    // first-matching-band dedup (see MinHashLSH.candidatePairs): emit each
-    // colliding pair once, from its first hash-equal band — no distinct()
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-            col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-              col("a.vec_id") < col("b.vec_id"))
-      .filter(graft.functions.VectorExpressions
-        .firstMatchIndex(col("a.bands"), col("b.bands")) === col("a.band"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
     // no repartition before the payload joins: the band join is already
     // wide (round-robin upstream of the sketch) and first-match dedup emits
-    // each pair once map-side — same reasoning as MinHashLSH.verifiedPairs
-    cand
+    // each pair once map-side — same reasoning as MinHashLSH.verify
+    graft.functions.MinHashLSH.firstMatchJoin(banded, banded)
       .join(payload.select(col("vec_id").as("id_a"), col("embedding").as("e_a")), "id_a")
       .join(payload.select(col("vec_id").as("id_b"), col("embedding").as("e_b")), "id_b")
       .withColumn("cos", dround(cosine(col("e_a"), col("e_b")), 4))

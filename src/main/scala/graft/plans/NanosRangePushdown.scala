@@ -131,10 +131,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           require(children.size == 2, s"$name takes 2 arguments")
           f(children(0), children(1))
         }))
-    binary("sorted_intersect_count", classOf[graft.functions.SortedIntersectCount],
-      graft.functions.SortedIntersectCount(_, _))
-    binary("sorted_intersect_count_int", classOf[graft.functions.SortedIntersectCountInt],
-      graft.functions.SortedIntersectCountInt(_, _))
+    // both count spellings build the one intersection kernel with its early
+    // exit off (bound 0); the alias tag keeps the called name in the
+    // expression's SQL and in its type-check errors
+    Seq("sorted_intersect_count", "sorted_intersect_count_int").foreach { name =>
+      binary(name, classOf[graft.functions.SortedIntersectAtLeast], (a, b) => {
+        val e = graft.functions.SortedIntersectAtLeast(a, b, Literal(0))
+        e.setTagValue(org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FUNC_ALIAS, name)
+        e
+      })
+    }
     binary("sig_match_count", classOf[graft.functions.SigMatchCount],
       graft.functions.SigMatchCount(_, _))
     binary("first_match_index", classOf[graft.functions.FirstMatchIndex],

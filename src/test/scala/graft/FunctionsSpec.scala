@@ -95,7 +95,8 @@ class FunctionsSpec extends SparkSpecBase {
     val pairs = docs.crossJoin(docs.select(col("doc_id").as("id2"), col("set").as("set2")))
       .filter(col("doc_id") < col("id2"))
     val cmp = pairs.select(
-      graft.functions.VectorExpressions.sortedIntersect(col("set"), col("set2")).as("fast"),
+      graft.functions.VectorExpressions
+        .sortedIntersectAtLeast(col("set"), col("set2"), lit(0)).as("fast"),
       size(array_intersect(col("set"), col("set2"))).as("ref"))
     assert(cmp.filter(col("fast") =!= col("ref")).count() === 0)
   }

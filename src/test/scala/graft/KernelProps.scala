@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{FloatDotProduct, SigMatchCount, SignSketchBands, SortedIntersectCount}
+import graft.functions.{FloatDotProduct, SigMatchCount, SignSketchBands, SortedIntersectAtLeast}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
@@ -30,11 +30,16 @@ object KernelProps extends Properties("graft.kernels") {
       got.asInstanceOf[Double].compareTo(expected) == 0
     }
 
+  // the count form (SQL's sorted_intersect_count): the one intersection
+  // kernel with its early exit off (bound 0)
+  private def count(a: Literal, b: Literal) =
+    SortedIntersectAtLeast(a, b, Literal(0)).eval(null)
+
   property("SortedIntersectCount == set intersection size on sorted distinct arrays") =
     Prop.forAll(genLongs, genLongs) { (a, b) =>
       val sa = a.distinct.sorted
       val sb = b.distinct.sorted
-      val got = SortedIntersectCount(longArr(sa), longArr(sb)).eval(null)
+      val got = count(longArr(sa), longArr(sb))
       got == sa.toSet.intersect(sb.toSet).size
     }
 
@@ -42,14 +47,13 @@ object KernelProps extends Properties("graft.kernels") {
     Prop.forAll(genLongs, genLongs) { (a, b) =>
       val sa = a.distinct.sorted
       val sb = b.distinct.sorted
-      SortedIntersectCount(longArr(sa), longArr(sb)).eval(null) ==
-        SortedIntersectCount(longArr(sb), longArr(sa)).eval(null)
+      count(longArr(sa), longArr(sb)) == count(longArr(sb), longArr(sa))
     }
 
   property("SortedIntersectCount with itself == array size (Jaccard(x,x)=1)") =
     Prop.forAll(genLongs) { a =>
       val sa = a.distinct.sorted
-      SortedIntersectCount(longArr(sa), longArr(sa)).eval(null) == sa.size
+      count(longArr(sa), longArr(sa)) == sa.size
     }
 
   private val genMinReq = Gen.chooseNum(-5, 200)
@@ -59,32 +63,38 @@ object KernelProps extends Properties("graft.kernels") {
       val sa = a.distinct.sorted
       val sb = b.distinct.sorted
       val exact = sa.toSet.intersect(sb.toSet).size
-      val got = graft.functions.SortedIntersectAtLeast(
-        longArr(sa), longArr(sb), Literal(m)).eval(null)
+      val got = SortedIntersectAtLeast(longArr(sa), longArr(sb), Literal(m)).eval(null)
       if (exact >= m) got == exact else got == exact || got == -1
     }
 
   property("SortedIntersectAtLeast: non-positive minReq degenerates to the plain kernel") =
-    Prop.forAll(genLongs, genLongs) { (a, b) =>
+    Prop.forAll(genLongs, genLongs, Gen.chooseNum(-5, 0)) { (a, b, m) =>
       val sa = a.distinct.sorted
       val sb = b.distinct.sorted
-      graft.functions.SortedIntersectAtLeast(longArr(sa), longArr(sb), Literal(0))
-        .eval(null) ==
-        SortedIntersectCount(longArr(sa), longArr(sb)).eval(null)
+      SortedIntersectAtLeast(longArr(sa), longArr(sb), Literal(m)).eval(null) ==
+        sa.toSet.intersect(sb.toSet).size
     }
 
   private val genInts = Gen.listOf(Gen.chooseNum(Int.MinValue, Int.MaxValue))
   private def intArr(a: Seq[Int]) =
     Literal.create(a, ArrayType(org.apache.spark.sql.types.IntegerType))
 
-  property("SortedIntersectAtLeastInt: exact count whenever it reaches minReq, -1 only below") =
+  property("SortedIntersectAtLeast over INT: exact count whenever it reaches minReq, -1 only below") =
     Prop.forAll(genInts, genInts, genMinReq) { (a, b, m) =>
       val sa = a.distinct.sorted
       val sb = b.distinct.sorted
       val exact = sa.toSet.intersect(sb.toSet).size
-      val got = graft.functions.SortedIntersectAtLeastInt(
-        intArr(sa), intArr(sb), Literal(m)).eval(null)
+      val got = SortedIntersectAtLeast(intArr(sa), intArr(sb), Literal(m)).eval(null)
       if (exact >= m) got == exact else got == exact || got == -1
+    }
+
+  property("SortedIntersectAtLeast: INT and BIGINT inputs of the same values agree for every minReq") =
+    Prop.forAll(genInts, genInts, genMinReq) { (a, b, m) =>
+      val sa = a.distinct.sorted
+      val sb = b.distinct.sorted
+      SortedIntersectAtLeast(intArr(sa), intArr(sb), Literal(m)).eval(null) ==
+        SortedIntersectAtLeast(longArr(sa.map(_.toLong)), longArr(sb.map(_.toLong)),
+          Literal(m)).eval(null)
     }
 
   property("SigMatchCount == positionwise equality count over min length") =
