@@ -472,15 +472,7 @@ object Bench {
       scrubLight()
       d
     }
-    // SPARK_GRAFT_ORDER=reverse runs the declared pass in reverse name
-    // order — the r14 verdict item 3 bisect experiment: if a late heavy
-    // row times at its isolated median when it runs EARLY, the shared
-    // drift is order-dependent sediment, not the row's plan.
-    val declaredOrder = queries.toSeq.sortBy(_._1) match {
-      case s if sys.env.get("SPARK_GRAFT_ORDER").contains("reverse") => s.reverse
-      case s => s
-    }
-    val timedAll = declaredOrder.map { case (name, fn) =>
+    val timedAll = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val d1 = timeOne(name, fn)
       val d2 = if (twice) Some(timeOne(name, fn)) else None
       (name, d1, d2)

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.VectorOps
+import graft.sources.{AtomicRename, GenDir, StagedAppend, WriterLease}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,64 +39,49 @@ class VectorStore(spark: SparkSession, dir: String) {
 
   // the FILESYSTEM of the store ROOT (not the session default — store
   // roots legitimately live on s3a/gs while defaultFS is HDFS)
-  private def fsOf: org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fsOf: FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The LIVE vectors directory — pointer-resolved: after an object-store
-    * compact the current generation is named by `_vectors_gen`
-    * ([[graft.sources.GenDir]]); rename-swapped stores keep the classic
-    * `vectors` name (no pointer — resolution falls through). */
-  private def vecDir: String =
-    graft.sources.GenDir.livePath(fsOf, dir, "vectors").toString
+  /** The LIVE vectors directory — pointer-resolved ([[GenDir]]): after an
+    * object-store compact `_vectors_gen` names the current generation;
+    * rename-swapped stores keep the classic `vectors` name. */
+  private def vecDir: String = GenDir.livePath(fsOf, dir, "vectors").toString
 
   /** Build the store from a (vec_id, embedding) corpus: derive + persist
     * the codebook, assign cells, write the partitioned layout. */
-  def build(src: DataFrame): Unit =
-      graft.sources.WriterLease.withLease(spark, dir) {
+  def build(src: DataFrame): Unit = WriterLease.withLease(spark, dir) {
     invalidateVerdicts()
-    // a rebuild resets the ingest protocol: stale fence watermarks or
-    // staged/ready dirs from a previous store here must not leak in
     val fsys = fsOf
-    val rootP = new org.apache.hadoop.fs.Path(dir)
-    if (fsys.exists(rootP))
-      fsys.listStatus(rootP).map(_.getPath)
-        .filter(q => q.getName.startsWith("_admitted") || // floor + b<id> markers
-                     q.getName.startsWith("_append_") ||
-                     q.getName.startsWith("_fence_lock"))
-        .foreach(q => fsys.delete(q, true))
+    StagedAppend.reset(fsys, dir)
     // a survivor generation pointer would aim the fresh build's writes
-    // (and reads) at the PREVIOUS store's retired generation — reset it
-    // so the classic `vectors` layout starts clean (we hold the lease)
-    graft.sources.GenDir.reset(fsys, dir, "vectors")
-    val cents = VectorOps.seedCents(src)
-    cents.write.mode("overwrite").parquet(centDir)
-    VectorOps.assignCells(src, centroids)
+    // (and reads) at the PREVIOUS store's retired generation
+    GenDir.reset(fsys, dir, "vectors")
+    VectorOps.seedCents(src).write.mode("overwrite").parquet(centDir)
+    writeCells(src, vecDir)
+  }
+
+  /** `vecs` assigned against the persisted codebook, written as the
+    * `cell=<id>/` layout under `path`. */
+  private def writeCells(vecs: DataFrame, path: String): Unit =
+    VectorOps.assignCells(vecs, centroids)
       .withColumnRenamed("cluster", "cell")
-      .write.partitionBy("cell").mode("overwrite").parquet(vecDir)
-  }
+      .write.partitionBy("cell").mode("overwrite").parquet(path)
 
-  /** Live-directory resolver for [[graft.sources.StagedAppend]] —
-    * pointer-aware: a staged batch's `vectors` files must drain into the
-    * CURRENT generation dir, not the classic name a compact may have
-    * retired (resolution happens at publish time, the SignatureStore
-    * catalog-resolution rule). */
-  private def liveFor(name: String): org.apache.hadoop.fs.Path =
-    if (name == "vectors") new org.apache.hadoop.fs.Path(vecDir)
-    else new org.apache.hadoop.fs.Path(s"$dir/$name")
+  /** Live-directory resolver for [[StagedAppend]], resolved at publish
+    * time: a staged batch's `vectors` files must drain into the CURRENT
+    * generation, not the classic name a compact may have retired. */
+  private def liveFor(name: String): Path =
+    if (name == "vectors") new Path(vecDir) else new Path(s"$dir/$name")
 
-  /** Drain the staged-append protocol: publish committed-but-undrained
-    * batches (crash between commit and publish); writers also discard
-    * orphan stage dirs. Metadata-only when clean. A drain changes the
-    * store contents, so it invalidates any cached arbitration verdict. */
-  private def healAppends(dropStages: Boolean): Seq[String] = {
-    val drained = graft.sources.StagedAppend.heal(spark, dir, liveFor, dropStages)
-    if (drained.nonEmpty) invalidateVerdicts()
-    drained
-  }
+  /** [[StagedAppend.heal]]; a drain changes the store contents, so it
+    * invalidates any cached arbitration verdict. */
+  private def healAppends(dropStages: Boolean): Unit =
+    if (StagedAppend.heal(spark, dir, liveFor, dropStages).nonEmpty) invalidateVerdicts()
 
   /** Incrementally index a new (vec_id, embedding) batch against the
-    * persisted codebook — new files in existing cell directories only.
+    * persisted codebook — new files in existing cell directories only,
+    * through the [[StagedAppend]] protocol, so a partial batch is never
+    * served.
     *
     * `batchId` (streaming ingest) arms the [[graft.sources.AdmitFence]]
     * replay fence: a batch whose append already completed is skipped, so
@@ -102,136 +89,45 @@ class VectorStore(spark: SparkSession, dir: String) {
     * double-indexes the batch on replay (duplicate rows at identical
     * distances would occupy duplicate rank positions at search time and
     * could displace the k-th distinct neighbor). Batch-mode callers omit
-    * it and keep plain append semantics.
-    *
-    * The append runs the [[graft.sources.StagedAppend]] two-phase
-    * protocol (round 12): the batch's cell files stage under the store
-    * root, one atomic rename commits them, the fence advances, then the
-    * files move into the live `cell=<id>/` directories — a crash at ANY
-    * point leaves either nothing (stage discarded, replay re-runs once)
-    * or a committed batch the next read/append/compact drains to
-    * completion (replay recognized by its `b<id>` token, never re-run).
-    * Partial batches are never served. */
+    * it and keep plain append semantics. */
   def append(batch: DataFrame, batchId: Option[Long] = None): Unit =
-      graft.sources.WriterLease.withLease(spark, dir) {
+      WriterLease.withLease(spark, dir) {
     // heal an interrupted compact first: appending into an absent vecDir
     // would fork a fresh store and orphan every resident row
-    val fsys = fsOf
-    recover(fsys, underLease = true) // append: NO generation sweep (reader grace)
+    recover(fsOf)
     healAppends(dropStages = true)
-    // the heal advanced the fence for any drained committed batch, so this
-    // one check covers every replay path — including our own batch
-    // committed by an attempt that crashed before its fence write
-    if (!batchId.exists(id => graft.sources.AdmitFence.admitted(spark, dir, id))) {
-      val token = batchId.map("b" + _).getOrElse("t" + java.lang.System.nanoTime())
-      stageAppend(batch, token)
-      graft.sources.StagedAppend.commit(spark, dir, token)
-      batchId.foreach(id => graft.sources.AdmitFence.advance(spark, dir, id))
-      graft.sources.StagedAppend.publish(spark, dir, token, liveFor)
+    if (StagedAppend.append(spark, dir, batchId, liveFor)(stageAppend(batch, _)))
       invalidateVerdicts()
-    }
   }
 
-  /** Phase 1 of the append protocol (exposed for the crash-injection
-    * specs, which kill here or after the commit rename). */
+  /** The append's stage step (exposed for the crash-injection specs,
+    * which kill here or after the commit). */
   private[graft] def stageAppend(batch: DataFrame, token: String): Unit =
-    VectorOps.assignCells(batch, centroids)
-      .withColumnRenamed("cluster", "cell")
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"${graft.sources.StagedAppend.stagePath(dir, token)}/vectors")
+    writeCells(batch, s"${StagedAppend.stagePath(dir, token)}/vectors")
 
   /** Collapse append generations: each `append` lands one new file per
     * touched cell directory, so a long ingest tail decays into the
-    * small-files regime every other index family already guards against
-    * (SignatureStore/VersionedStore/PostingsStore.compact — this closes
-    * the LAST store without it). Same stage-swap shape: rewrite into a
-    * sibling staging dir (one sorted file generation per cell — vec_id
-    * order gives cheap id-range skipping inside a cell), atomically
-    * retire-and-publish via two renames, delete the old tree; a crash
-    * between the renames is healed by [[recover]] — reads, appends and
-    * the next compact roll the retire back (spec-injected). The
+    * small-files regime every other index family already guards against.
+    * The [[GenDir.rewrite]] writes one sorted file generation per cell
+    * (vec_id order gives cheap id-range skipping inside a cell). The
     * codebook is untouched — compaction never changes assignments, so
     * reads through [[searchTopK]] are equal before and after
     * (VectorStoreSpec pins read-equality and the file-count collapse). */
-  def compact(): Unit =
-      graft.sources.WriterLease.withLease(spark, dir) {
-    val fsys = fsOf
-    recover(fsys, underLease = true, sweepGens = true) // heal an interrupted prior compact first
-    // drain committed appends: a compact from a store missing a committed
-    // pending batch would silently drop it from the rewrite
+  def compact(): Unit = WriterLease.withLease(spark, dir) {
+    recover(fsOf) // first: the drain below would publish into an absent vecDir
     healAppends(dropStages = true)
-    val root = new org.apache.hadoop.fs.Path(vecDir)
-    val gen = java.lang.System.nanoTime()
-    if (graft.sources.AtomicRename.isAtomic(spark, dir)) {
-      val staged = new org.apache.hadoop.fs.Path(s"$dir/vectors_compact_$gen")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/vectors_old_$gen")
-      spark.read.parquet(root.toString)
+    GenDir.rewrite(spark, dir, Seq(GenDir.Swap("vectors", new Path(vecDir), (src, dst) =>
+      spark.read.parquet(src)
         .repartition(col("cell"))
         .sortWithinPartitions("vec_id")
-        .write.partitionBy("cell").mode("overwrite").parquet(staged.toString)
-      require(fsys.rename(root, old), s"compact: could not retire $root")
-      require(fsys.rename(staged, root), s"compact: could not publish $staged")
-      fsys.delete(old, true)
-      ()
-    } else {
-      // flat object store: stage a fresh GENERATION dir and flip the
-      // `_vectors_gen` pointer — one small-object write, no directory
-      // rename anywhere ([[graft.sources.GenDir]]); crash garbage
-      // (unpublished generations, undeleted predecessors) is swept by
-      // the next writer's recover
-      val newGen = s"vectors_g$gen"
-      spark.read.parquet(root.toString)
-        .repartition(col("cell"))
-        .sortWithinPartitions("vec_id")
-        .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/$newGen")
-      graft.sources.GenDir.publish(fsys, dir, "vectors", newGen)
-    }
+        .write.partitionBy("cell").mode("overwrite").parquet(dst))))
   }
 
-  /** Heal the two-rename window: a compact that crashed between its
-    * retire and publish renames leaves `vectors/` absent and the last
-    * published tree under `vectors_old_<gen>` — roll the retire BACK
-    * (rename old → vectors) and drop any orphan staging trees, so the
-    * next read or compact sees exactly the pre-crash store. Single-writer
-    * like compaction itself; called by every mutator and resolver. */
-  private def recover(fsys: org.apache.hadoop.fs.FileSystem,
-                      underLease: Boolean = false,
-                      sweepGens: Boolean = false): Unit = {
-    if (!graft.sources.AtomicRename.isAtomic(spark, dir)) {
-      // pointer mode: the live dir is never absent (the flip is one
-      // atomic small-object write), so there is no retire to roll back —
-      // only crash garbage to sweep, and ONLY the lease-holding COMPACT
-      // may sweep (sweepGens): a lease-free reader's sweep could race a
-      // live compact's staging generation, and an APPEND sweeping would
-      // collapse publish()'s one-compact-cycle reader grace to the gap
-      // between a compact and the next micro-batch (r15 review finding)
-      if (underLease && sweepGens) graft.sources.GenDir.sweep(fsys, dir, "vectors")
-      return
-    }
-    val root = new org.apache.hadoop.fs.Path(vecDir)
-    if (!fsys.exists(root)) {
-      val dirP = new org.apache.hadoop.fs.Path(dir)
-      if (fsys.exists(dirP)) {
-        fsys.listStatus(dirP).map(_.getPath)
-          .filter(_.getName.startsWith("vectors_old_"))
-          .sortBy(_.getName.stripPrefix("vectors_old_").toLong)
-          .lastOption.foreach { newest =>
-            // concurrent lease-free readers can BOTH see the crash window
-            // and race this roll-back — the loser's vanished source +
-            // present root means the other reader completed the restore
-            val rolled = graft.sources.AtomicRename
-              .renameOrVanished(fsys, newest, root)
-            require(rolled || fsys.exists(root),
-              s"recover: could not restore $newest")
-          }
-      }
-    }
-    if (fsys.exists(new org.apache.hadoop.fs.Path(dir)))
-      fsys.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath)
-        .filter(p => (p.getName.startsWith("vectors_old_") ||
-                      p.getName.startsWith("vectors_compact_")) && fsys.exists(root))
-        .foreach(p => fsys.delete(p, true))
-  }
+  /** Heal an interrupted compact ([[GenDir.rollBack]]); the pointer
+    * posture has no window to heal. */
+  private def recover(fsys: FileSystem): Unit =
+    if (AtomicRename.isAtomic(spark, dir))
+      GenDir.rollBack(fsys, dir, "vectors", new Path(vecDir))
 
   /** The persisted codebook (cent_id, c_emb) — √n rows. */
   def centroids: DataFrame = spark.read.parquet(centDir)
@@ -246,7 +142,7 @@ class VectorStore(spark: SparkSession, dir: String) {
     // does, and a reader resolves one consistent generation)
     val fsys = fsOf
     val live = vecDir
-    if (!fsys.exists(new org.apache.hadoop.fs.Path(live))) recover(fsys)
+    if (!fsys.exists(new Path(live))) recover(fsys)
     healAppends(dropStages = false)
     spark.read.parquet(live)
   }
@@ -309,9 +205,8 @@ class VectorStore(spark: SparkSession, dir: String) {
 
   private def invalidateVerdicts(): Unit = synchronized { verdicts = Map.empty }
 
-  private def contentFingerprint(
-      fsys: org.apache.hadoop.fs.FileSystem): Long = {
-    val root = new org.apache.hadoop.fs.Path(vecDir)
+  private def contentFingerprint(fsys: FileSystem): Long = {
+    val root = new Path(vecDir)
     // a compact/build in ANOTHER process can retire `vectors/` (rename)
     // or remove files between hasNext and next — a vanished entry means
     // "contents changed mid-listing", so re-list instead of throwing out

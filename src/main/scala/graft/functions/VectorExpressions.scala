@@ -3,12 +3,12 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression, XXH64, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, TernaryExpression, UnaryExpression, XXH64, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, NullType, ShortType, StringType}
 
 /** Native Catalyst expressions for the vector/LSH packages (SURVEY §7.3 "v2").
   *
@@ -66,6 +66,26 @@ case class FloatDotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The input rule of the two ARRAY<BIGINT> signature kernels below: arrays
+  * of integral elements widen to ARRAY<BIGINT> (the analyzer inserts the
+  * cast), anything else fails at analysis with the function's name. A bare
+  * ARRAY<BIGINT> expectation is not enough: the coercion rules would cast
+  * an ARRAY<DOUBLE> to it and truncate every element. */
+trait LongArrayInputs extends ImplicitCastInputTypes { self: BinaryExpression =>
+
+  override def inputTypes: Seq[DataType] = children.map(_.dataType match {
+    case ArrayType(ByteType | ShortType | IntegerType | LongType, _) | NullType =>
+      ArrayType(LongType)
+    case other => other // left uncast for the check below to reject
+  })
+
+  override def checkInputDataTypes(): TypeCheckResult = children.map(_.dataType) match {
+    case Seq(ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case ts => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName takes two arrays of integral elements; got ${ts.map(_.catalogString).mkString(", ")}")
+  }
+}
+
 /** Count of positions where two ARRAY<BIGINT> agree — the MinHash-signature
   * match counter. `matches / numPerm` is an unbiased estimate of Jaccard
   * similarity, evaluated here as a codegen'd primitive loop so that
@@ -78,7 +98,7 @@ case class FloatDotProduct(left: Expression, right: Expression)
   * `sigMatches/64 ≥ t+ε` can skip most exact checks).
   */
 case class SigMatchCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with LongArrayInputs {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "sig_match_count"
@@ -367,7 +387,7 @@ case class MinHashBandKeys(child: Expression, numPerm: Int, rows: Int)
   * (20-30× the pair count on a dense corpus) with a map-side filter.
   */
 case class FirstMatchIndex(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with LongArrayInputs {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "first_match_index"

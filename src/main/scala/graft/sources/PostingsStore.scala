@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,31 +45,31 @@ class PostingsStore(spark: SparkSession, dir: String) {
       .withColumn("tb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
   }
 
-  def build(docs: DataFrame, buckets: Int = 64): Unit =
-      WriterLease.withLease(spark, dir) {
-    // a rebuild resets the ingest protocol: stale fence watermarks or
-    // staged/ready dirs from a previous store here must not leak in
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    if (fsys.exists(dirP))
-      fsys.listStatus(dirP).map(_.getPath)
-        .filter(q => q.getName.startsWith("_admitted") || // floor + b<id> markers
-                     q.getName.startsWith("_append_") ||
-                     q.getName.startsWith("_fence_lock"))
-        .foreach(q => fsys.delete(q, true))
-    // survivor generation pointers would aim the fresh build at a
-    // previous store's retired generations — reset (we hold the lease)
-    GenDir.reset(fsys, dir, "postings")
-    GenDir.reset(fsys, dir, "stats")
-    postingsOf(docs, buckets)
+  /** The postings layout: one shuffle into term-hash buckets, rows sorted
+    * by (term, doc_id) inside each so the row-group clustering holds. */
+  private def writePostings(postings: DataFrame, path: String): Unit =
+    postings
       .repartition(col("tb"))
       .sortWithinPartitions("term", "doc_id")
-      .write.partitionBy("tb").mode("overwrite").parquet(s"$dir/postings")
-    // stats are ADDITIVE (n_docs, sum_len) — avglen derives at query time,
-    // so append can grow them by addition instead of a corpus re-agg
+      .write.partitionBy("tb").mode("overwrite").parquet(path)
+
+  /** Stats are ADDITIVE (n_docs, sum_len) — avglen derives at query time,
+    * so append grows them by a delta row instead of a corpus re-agg. */
+  private def writeStats(docs: DataFrame, path: String): Unit =
     docs.select(size(split(col("text"), " ")).cast("long").as("len"))
       .agg(count(lit(1)).as("n_docs"), sum("len").as("sum_len"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    val o = fsys.create(new org.apache.hadoop.fs.Path(s"$dir/buckets"), true)
+      .coalesce(1).write.mode("overwrite").parquet(path)
+
+  def build(docs: DataFrame, buckets: Int = 64): Unit =
+      WriterLease.withLease(spark, dir) {
+    StagedAppend.reset(fsys, dir)
+    // survivor generation pointers would aim the fresh build at a
+    // previous store's retired generations
+    GenDir.reset(fsys, dir, "postings")
+    GenDir.reset(fsys, dir, "stats")
+    writePostings(postingsOf(docs, buckets), s"$dir/postings")
+    writeStats(docs, s"$dir/stats")
+    val o = fsys.create(new Path(s"$dir/buckets"), true)
     o.write(buckets.toString.getBytes("UTF-8")); o.close()
   }
 
@@ -81,58 +82,39 @@ class PostingsStore(spark: SparkSession, dir: String) {
     * stats could crash between the postings append and the stats write
     * and leave avglen permanently inconsistent).
     *
-    * Round 12: the whole batch — postings files AND the stats delta —
-    * runs the [[StagedAppend]] two-phase protocol (stage → atomic commit
-    * rename → fence → publish), so a crash at any point yields nothing
-    * or exactly-once and a partial batch is never served. With `batchId`
-    * the [[AdmitFence]] makes REPLAY exactly-once too (the pre-r12 "not
-    * idempotent under replay" caveat is closed for fenced callers);
-    * unfenced retries remain the caller's coordination, and ST27's
-    * file-sink manifest stays the continuous path. */
+    * The postings files AND the stats delta run one [[StagedAppend]]
+    * cycle, so they land together or not at all. With `batchId` the
+    * [[AdmitFence]] makes REPLAY exactly-once too; unfenced retries
+    * remain the caller's coordination, and ST27's file-sink manifest
+    * stays the continuous path. */
   def append(docs: DataFrame, batchId: Option[Long] = None): Unit =
       WriterLease.withLease(spark, dir) {
     // heal an interrupted compact first: appending into an absent
     // postings/ would fork a fresh index and orphan every resident row
-    recover(underLease = true)
+    recover()
     healAppends(dropStages = true)
-    // the heal advanced the fence for any drained committed batch, so
-    // this one check covers every replay path (StagedAppend's rule)
-    if (!batchId.exists(id => AdmitFence.admitted(spark, dir, id))) {
-      val token = batchId.map("b" + _).getOrElse("t" + java.lang.System.nanoTime())
-      stageAppend(docs, token)
-      StagedAppend.commit(spark, dir, token)
-      batchId.foreach(id => AdmitFence.advance(spark, dir, id))
-      StagedAppend.publish(spark, dir, token, liveFor)
-    }
+    StagedAppend.append(spark, dir, batchId, liveFor)(stageAppend(docs, _))
   }
 
-  /** Phase 1 of the append protocol (exposed for the crash-injection
-    * specs, which kill here or after the commit rename). */
+  /** The append's stage step (exposed for the crash-injection specs,
+    * which kill here or after the commit). */
   private[graft] def stageAppend(docs: DataFrame, token: String): Unit = {
     val stage = StagedAppend.stagePath(dir, token).toString
-    val n = bucketCount
-    postingsOf(docs, n)
-      .repartition(col("tb"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.partitionBy("tb").mode("overwrite").parquet(s"$stage/postings")
-    docs.select(size(split(col("text"), " ")).cast("long").as("len"))
-      .agg(count(lit(1)).as("n_docs"), sum("len").as("sum_len"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/stats")
+    writePostings(postingsOf(docs, bucketCount), s"$stage/postings")
+    writeStats(docs, s"$stage/stats")
   }
 
-  private def liveFor(name: String): org.apache.hadoop.fs.Path =
-    if (name == "postings" || name == "stats")
-      new org.apache.hadoop.fs.Path(liveDir(name)) // current generation
-    else new org.apache.hadoop.fs.Path(s"$dir/$name")
+  private def liveFor(name: String): Path =
+    if (name == "postings" || name == "stats") new Path(liveDir(name)) // current generation
+    else new Path(s"$dir/$name")
 
   /** Drain the staged-append protocol (see [[StagedAppend.heal]]). */
-  private def healAppends(dropStages: Boolean): Seq[String] =
+  private def healAppends(dropStages: Boolean): Unit =
     StagedAppend.heal(spark, dir, liveFor, dropStages)
 
   // the FILESYSTEM of the store ROOT (not the session default — store
   // roots legitimately live on s3a/gs while defaultFS is HDFS)
-  private def fsys = new org.apache.hadoop.fs.Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fsys = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The LIVE dir for a compacted base ("postings"/"stats") —
     * pointer-resolved: after an object-store compact the current
@@ -147,47 +129,27 @@ class PostingsStore(spark: SparkSession, dir: String) {
     if (base == "stats") s else p
   }
 
-  /** [[GenDir.sweep]] for the stats generations, with the derived-pair
-    * twist: queries resolve stats from the POSTINGS pointer's suffix
-    * ([[resolveBoth]]), while the stats pointer is sweep bookkeeping — so
-    * a sweep must keep BOTH names alive (after a crash between the two
-    * pointer publishes they differ, and deleting the derived one would
-    * break readers for the duration of the healing compact). */
-  private def sweepStats(): Unit = {
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    if (!fsys.exists(dirP)) return
-    val p = GenDir.currentName(fsys, dir, "postings")
-    val derived =
-      if (p == "postings") "stats" else s"stats_g${p.stripPrefix("postings_g")}"
-    val cur = GenDir.currentName(fsys, dir, "stats")
-    fsys.listStatus(dirP).map(_.getPath)
-      .filter(q => (q.getName.startsWith("stats_g") || q.getName == "stats") &&
-                   q.getName != cur && q.getName != derived)
-      .foreach(q =>
-        try { fsys.delete(q, true); () }
-        catch { case _: java.io.IOException => () }) // next sweep retries
-  }
-
   /** Resolve the postings AND stats generation dirs as one consistent
     * pair from ONE pointer read: both generations of a pointer-mode
     * compact share the same `_g<nanos>` suffix and BOTH are fully
-    * written before either pointer flips (see [[compact]]'s ordering),
-    * so `postings_gN` implies `stats_gN` exists — the postings pointer
-    * alone names the pair, and no interleaving of reads with a
-    * concurrent flip can mix generations (the r15 review showed the
-    * previous re-read loop could not actually close that window: a
-    * stable postings pointer after the flip still paired with a
-    * pre-flip stats read). A pointer-free store resolves to the classic
-    * names. The stats pointer still exists, but only as [[GenDir.sweep]]
-    * bookkeeping — no query path reads it. */
-  private def resolveBoth(fsOnce: org.apache.hadoop.fs.FileSystem): (String, String) = {
+    * written before either pointer flips ([[GenDir.rewrite]] publishes
+    * `stats` before `postings`), so `postings_gN` implies `stats_gN`
+    * exists — the postings pointer alone names the pair, and no
+    * interleaving of reads with a concurrent flip can mix generations
+    * (the r15 review showed the previous re-read loop could not actually
+    * close that window: a stable postings pointer after the flip still
+    * paired with a pre-flip stats read). A pointer-free store resolves
+    * to the classic names. The stats pointer still exists, but only as
+    * sweep bookkeeping — no query path reads it, and the sweep keeps the
+    * derived stats dir alive as well. */
+  private def resolveBoth(fsOnce: FileSystem): (String, String) = {
     val p = GenDir.currentName(fsOnce, dir, "postings")
     if (p == "postings") (s"$dir/postings", s"$dir/stats")
     else (s"$dir/$p", s"$dir/stats_g${p.stripPrefix("postings_g")}")
   }
 
   private def bucketCount: Int = {
-    val in = fsys.open(new org.apache.hadoop.fs.Path(s"$dir/buckets"))
+    val in = fsys.open(new Path(s"$dir/buckets"))
     try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
   }
 
@@ -200,17 +162,11 @@ class PostingsStore(spark: SparkSession, dir: String) {
     * surviving bucket means no posting can match, so the result is the
     * empty top-k, not an error. */
   def bm25(terms: Seq[String], k: Int = 20): DataFrame = {
-    // heal the two-rename window first: a compact that crashed between
-    // retire and publish leaves postings/ absent and the last published
-    // tree under postings_old_<gen> (see recover)
     // ONE FileSystem handle per query (the hot serving path): `fsys` is a
     // def and each pointer resolution costs an exists+read, so repeated
-    // resolution is wasted object-store round-trips. The postings/stats
-    // PAIR resolves from the single postings pointer (resolveBoth: both
-    // generations share one `_g<nanos>` suffix and are fully written
-    // before the pointer flips), so no interleaving with a concurrent
-    // compact can serve mixed generations — the consistency is
-    // structural, not retry-based.
+    // resolution is wasted object-store round-trips. An absent postings
+    // dir is an interrupted compact (see recover); the postings/stats
+    // PAIR resolves from the single postings pointer (resolveBoth).
     val fsOnce = fsys
     if (!fsOnce.exists(GenDir.livePath(fsOnce, dir, "postings"))) recover()
     healAppends(dropStages = false) // never serve a half-published batch
@@ -222,7 +178,7 @@ class PostingsStore(spark: SparkSession, dir: String) {
       .select(pmod(xxhash64(col("term")), lit(n.toLong)).as("tb"))
       .distinct().collect().map(_.getLong(0)).sorted
     val paths = tbs.map(t => s"$postingsDir/tb=$t")
-      .filter(p => fsOnce.exists(new org.apache.hadoop.fs.Path(p)))
+      .filter(p => fsOnce.exists(new Path(p)))
     if (paths.isEmpty) return PostingsStore.emptyResult(spark)
     val p = spark.read.option("basePath", postingsDir).parquet(paths: _*)
       .filter(col("term").isin(terms: _*))
@@ -236,136 +192,35 @@ class PostingsStore(spark: SparkSession, dir: String) {
     * SignatureStore.compact analogue closing `append`'s small-files
     * decay (each append lands a new file set beside the residents of
     * every touched bucket; after B batches a bucket holds B generations
-    * and the per-query open cost grows linearly for no data reason).
-    *
-    * Shape: stage the full rewrite into a fresh sibling directory (one
-    * shuffle into term-hash buckets, the build's own layout — re-sorted
-    * so the (term, doc_id) row-group clustering survives), then swap by
-    * two renames and delete the old generation. A crash before the
-    * second rename leaves the old `postings` dir live (stage dirs are
-    * invisible to readers — bm25 only ever lists `postings/`); a crash
-    * between the renames leaves the root absent for the instant until
-    * [[recover]] heals it — readers, append, and the next compact all
-    * roll the retire back automatically (spec-injected); single-writer
-    * as SignatureStore.compact documents. Stats and the bucket
-    * count are untouched — compaction moves bytes, never meaning. */
-  /** Heal the two-rename window: roll an interrupted compact's retire
-    * BACK (newest `postings_old_<gen>` → `postings`) and drop orphan
-    * staging/retired trees once a live root exists. Same single-writer
-    * assumption as compaction; called by readers and mutators that find
-    * the root absent, and by compact itself before staging anew. */
-  private def recover(underLease: Boolean = false,
-                      sweepGens: Boolean = false): Unit = {
-    if (!AtomicRename.isAtomic(spark, dir)) {
-      // pointer mode: the live dirs are never absent (the generation
-      // flip is one atomic small-object write) — nothing to roll back,
-      // only crash garbage to sweep. ONLY the lease-holding COMPACT may
-      // sweep (sweepGens): a lease-free reader's sweep could race a live
-      // compact's staging generation, and an APPEND sweeping would
-      // collapse publish()'s one-compact-cycle reader grace to the gap
-      // between a compact and the next micro-batch (r15 review finding —
-      // a reader that resolved the pre-flip generation would have its
-      // files deleted mid-scan by the very next append's heal).
-      if (underLease && sweepGens) {
-        GenDir.sweep(fsys, dir, "postings")
-        sweepStats()
-      }
-      return
-    }
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    if (!fsys.exists(dirP)) return
-    // both compacted roots heal the same way (stats got its own two-rename
-    // swap in round 12, when appends made it a multi-file additive table).
-    // The root is POINTER-RESOLVED: a store migrated from an object-store
-    // posture carries a surviving `_<base>_gen` pointer, and healing the
-    // classic name there would "restore" a dir no reader resolves
-    Seq("postings", "stats").foreach { base =>
-      val root = new org.apache.hadoop.fs.Path(liveDir(base))
-      if (!fsys.exists(root))
-        fsys.listStatus(dirP).map(_.getPath)
-          .filter(_.getName.startsWith(s"${base}_old_"))
-          .sortBy(_.getName.stripPrefix(s"${base}_old_").toLong)
-          .lastOption.foreach { newest =>
-            // two lease-free readers can race this roll-back — the
-            // loser's vanished source + present root means the other
-            // reader completed the restore
-            val rolled = AtomicRename.renameOrVanished(fsys, newest, root)
-            require(rolled || fsys.exists(root),
-              s"recover: could not restore $newest")
-          }
-      if (fsys.exists(root))
-        fsys.listStatus(dirP).map(_.getPath)
-          .filter(p => p.getName.startsWith(s"${base}_old_") ||
-                       p.getName.startsWith(s"${base}_compact_"))
-          .foreach(p => fsys.delete(p, true))
-    }
+    * and the per-query open cost grows linearly for no data reason). One
+    * [[GenDir.rewrite]] of both bases: postings in the build's own layout,
+    * and the stats' additive delta rows (one per append) folded back to
+    * one row. The bucket count is untouched — compaction moves bytes,
+    * never meaning. The live dirs are POINTER-RESOLVED: a store migrated
+    * from the object-store posture keeps its generation pointers, and
+    * compacting the classic names there would rewrite a dir no reader
+    * resolves. */
+  def compact(): Unit = WriterLease.withLease(spark, dir) {
+    recover() // first: the drain below would publish into an absent live dir
+    healAppends(dropStages = true)
+    val (postings, stats) = resolveBoth(fsys)
+    GenDir.rewrite(spark, dir, Seq(
+      // the rewrite targets a sibling dir, so the read and the write never
+      // touch the same files — no eager checkpoint needed
+      GenDir.Swap("postings", new Path(postings), (src, dst) =>
+        writePostings(spark.read.parquet(src), dst)),
+      GenDir.Swap("stats", new Path(stats), (src, dst) =>
+        spark.read.parquet(src)
+          .agg(sum("n_docs").as("n_docs"), sum("sum_len").as("sum_len"))
+          .coalesce(1).write.mode("overwrite").parquet(dst))))
   }
 
-  def compact(): Unit =
-      WriterLease.withLease(spark, dir) {
-    recover(underLease = true, sweepGens = true)
-    // drain committed appends first — a compact from a store missing a
-    // committed pending batch would silently drop it from the rewrite
-    healAppends(dropStages = true)
-    val gen = java.lang.System.nanoTime()
-    val atomic = AtomicRename.isAtomic(spark, dir)
-    if (atomic) {
-      // roots are POINTER-RESOLVED (liveDir): a store migrated from an
-      // object-store posture carries surviving generation pointers, and
-      // compacting the classic names there would rewrite a dir no reader
-      // resolves (or throw on the absent classic root). The rewrite then
-      // publishes AT the resolved name, so the pointer — when one exists —
-      // stays valid throughout (the VectorStore.compact shape).
-      val root = new org.apache.hadoop.fs.Path(liveDir("postings"))
-      val staged = new org.apache.hadoop.fs.Path(s"$dir/postings_compact_$gen")
-      val old = new org.apache.hadoop.fs.Path(s"$dir/postings_old_$gen")
-      // eager checkpoint is NOT needed here: the rewrite targets a sibling
-      // dir, so the read and the write never touch the same files
-      spark.read.parquet(root.toString)
-        .repartition(col("tb"))
-        .sortWithinPartitions("term", "doc_id")
-        .write.partitionBy("tb").mode("overwrite").parquet(staged.toString)
-      require(fsys.rename(root, old), s"compact: could not retire $root")
-      require(fsys.rename(staged, root), s"compact: could not publish $staged")
-      fsys.delete(old, true)
-      // stats collapse (round 12): appends accumulate one additive delta
-      // row per batch — fold them back to one row with the same two-rename
-      // swap (recover heals stats_old_/stats_compact_ exactly like postings)
-      val statsRoot = new org.apache.hadoop.fs.Path(liveDir("stats"))
-      val statsStaged = new org.apache.hadoop.fs.Path(s"$dir/stats_compact_$gen")
-      val statsOld = new org.apache.hadoop.fs.Path(s"$dir/stats_old_$gen")
-      spark.read.parquet(statsRoot.toString)
-        .agg(sum("n_docs").as("n_docs"), sum("sum_len").as("sum_len"))
-        .coalesce(1).write.mode("overwrite").parquet(statsStaged.toString)
-      require(fsys.rename(statsRoot, statsOld), s"compact: could not retire $statsRoot")
-      require(fsys.rename(statsStaged, statsRoot), s"compact: could not publish $statsStaged")
-      fsys.delete(statsOld, true)
-      ()
-    } else {
-      // flat object store: stage fresh GENERATION dirs and flip the
-      // pointers — one small-object write each, no directory rename
-      // anywhere ([[GenDir]]); crash garbage is swept by the next
-      // writer's recover. ORDER is the consistency contract
-      // ([[resolveBoth]]): BOTH generations (same `_g<gen>` suffix) are
-      // fully written before either pointer flips, and the stats pointer
-      // (sweep bookkeeping) flips BEFORE the postings pointer (the one
-      // queries read) — so whenever the postings pointer names
-      // `postings_g<gen>`, `stats_g<gen>` already exists, and a crash
-      // between the publishes leaves readers on the consistent OLD pair.
-      val (src, statsSrc) = resolveBoth(fsys)
-      val newPostings = s"postings_g$gen"
-      spark.read.parquet(src)
-        .repartition(col("tb"))
-        .sortWithinPartitions("term", "doc_id")
-        .write.partitionBy("tb").mode("overwrite").parquet(s"$dir/$newPostings")
-      val newStats = s"stats_g$gen"
-      spark.read.parquet(statsSrc)
-        .agg(sum("n_docs").as("n_docs"), sum("sum_len").as("sum_len"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$newStats")
-      GenDir.publish(fsys, dir, "stats", newStats)
-      GenDir.publish(fsys, dir, "postings", newPostings)
-    }
-  }
+  /** Heal an interrupted compact ([[GenDir.rollBack]]) for both bases, at
+    * their pointer-resolved live dirs; the pointer posture has no window
+    * to heal. */
+  private def recover(): Unit =
+    if (AtomicRename.isAtomic(spark, dir))
+      Seq("postings", "stats").foreach(b => GenDir.rollBack(fsys, dir, b, new Path(liveDir(b))))
 }
 
 object PostingsStore {

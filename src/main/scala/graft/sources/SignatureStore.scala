@@ -76,18 +76,8 @@ object SignatureStore {
     // root — across filesystems, if the old store was local and this one
     // is an object store (caught live in the r14 flat-object soak)
     spark.sql("DROP TABLE IF EXISTS sig_splits")
-    // a rebuild resets the ingest protocol: a stale fence watermark or
-    // staged/ready dir from a previous store at this path must not leak
-    // into the new one (a stale fence would silently skip early batches)
-    val fsys = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootP = new org.apache.hadoop.fs.Path(path)
-    if (fsys.exists(rootP))
-      fsys.listStatus(rootP).map(_.getPath)
-        .filter(q => q.getName.startsWith("_admitted") || // floor + b<id> markers
-                     q.getName.startsWith("_append_") ||
-                     q.getName.startsWith("_fence_lock"))
-        .foreach(q => fsys.delete(q, true))
+    StagedAppend.reset(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
     MinHashLSH.hashedDocs(toks, p)
       .write.format("parquet")
       .option("path", s"$path/sig_docs")
@@ -109,21 +99,21 @@ object SignatureStore {
       spark.sessionState.catalog.getTableMetadata(TableIdentifier(name)).location)
   }
 
-  /** Drain the staged-append protocol (publish committed batches; writers
-    * also discard orphan stages) and refresh the catalog's file listings
-    * when anything moved. Metadata-only when there is nothing to heal —
-    * one listStatus of the store root. */
-  private def healAppends(spark: SparkSession, dropStages: Boolean): Seq[String] = {
-    val drained = StagedAppend.heal(spark, storeRoot(spark), sigLive(spark), dropStages)
-    if (drained.nonEmpty) {
-      import org.apache.spark.sql.catalyst.TableIdentifier
-      Seq("sig_docs", "sig_sets", "sig_splits").foreach { t =>
-        if (spark.sessionState.catalog.tableExists(TableIdentifier(t)))
-          spark.catalog.refreshTable(t)
-      }
+  /** Drain the staged-append protocol ([[StagedAppend.heal]]) and refresh
+    * the catalog's file listings when anything moved. Metadata-only when
+    * there is nothing to heal — one listStatus of the store root. */
+  private def healAppends(spark: SparkSession, dropStages: Boolean): Unit =
+    if (StagedAppend.heal(spark, storeRoot(spark), sigLive(spark), dropStages).nonEmpty)
+      refreshTables(spark)
+
+  /** Published files reach a table's readers only once its cached file
+    * listing is refreshed. */
+  private def refreshTables(spark: SparkSession): Unit =
+    Seq("sig_docs", "sig_sets", "sig_splits").foreach { t =>
+      if (spark.sessionState.catalog.tableExists(
+            org.apache.spark.sql.catalyst.TableIdentifier(t)))
+        spark.catalog.refreshTable(t)
     }
-    drained
-  }
 
   /** The increment: near-dup pairs (batch id, corpus id) at `threshold`,
     * with every corpus-side artifact read from the store instead of
@@ -139,17 +129,12 @@ object SignatureStore {
   }
 
   /** Append a batch's signatures to the store — the admit step of the
-    * continuous-ingest loop. Runs the [[StagedAppend]] two-phase protocol:
-    * every file stages under the store root, one atomic rename commits,
-    * then the files publish into the live tables — so a crash at ANY
-    * point inside the multi-file append leaves either nothing (stage
-    * discarded) or a committed batch the next reader drains to completion;
-    * partial batches are never served and a fenced replay can never
-    * double-append (the ready token carries the batch id). `sig_docs`
-    * grows by |batch| rows, `sig_sets` gets one more file per bucket (the
-    * staged write re-declares the catalog's bucket spec, so an append can
-    * never silently change the bucketing — bucket ids ride the staged
-    * FILE NAMES through the publish move). The per-append cost is the
+    * continuous-ingest loop, through the [[StagedAppend]] protocol, so a
+    * partial batch is never served. `sig_docs` grows by |batch| rows,
+    * `sig_sets` gets one more file per bucket (the staged write
+    * re-declares the catalog's bucket spec, so an append can never
+    * silently change the bucketing — bucket ids ride the staged FILE
+    * NAMES through the publish move). The per-append cost is the
     * per-row kernels over the BATCH only — the whole point of the store:
     * corpus work is never redone, at any corpus size. */
   def append(spark: SparkSession, toks: DataFrame,
@@ -167,25 +152,15 @@ object SignatureStore {
     val root = storeRoot(spark)
     WriterLease.withLease(spark, root) {
       healAppends(spark, dropStages = true)
-      // the heal advanced the fence for any drained committed batch, so
-      // this one check covers every replay path — including our own batch
-      // committed by an attempt that crashed before its fence write
-      if (!batchId.exists(id => AdmitFence.admitted(spark, root, id))) {
-        val token = batchId.map("b" + _).getOrElse("t" + java.lang.System.nanoTime())
-        stageAppend(spark, root, token, toks, p, splits)
-        StagedAppend.commit(spark, root, token)
-        batchId.foreach(id => AdmitFence.advance(spark, root, id))
-        StagedAppend.publish(spark, root, token, sigLive(spark))
-        spark.catalog.refreshTable("sig_docs")
-        spark.catalog.refreshTable("sig_sets")
-        if (splits.isDefined) spark.catalog.refreshTable("sig_splits")
-      }
+      if (StagedAppend.append(spark, root, batchId, sigLive(spark))(
+            stageAppend(spark, root, _, toks, p, splits)))
+        refreshTables(spark)
     }
   }
 
-  /** Phase 1 of the protocol: write the batch's files under the stage dir
-    * (exposed for the crash-injection specs, which kill the append here
-    * or after [[StagedAppend.commit]] and assert convergence). */
+  /** The append's stage step (exposed for the crash-injection specs,
+    * which kill the append here or after [[StagedAppend.commit]] and
+    * assert convergence). */
   private[graft] def stageAppend(spark: SparkSession, root: String,
                                    token: String, toks: DataFrame,
                                    p: MinHashLSH.Params,
@@ -243,16 +218,9 @@ object SignatureStore {
     * already completed ([[AdmitFence]] watermark beside the store) is not
     * re-run — the pairs come back from the durable sink (written BEFORE
     * the fence ever advances, so a fenced batch's pairs always exist) and
-    * the store does not grow. The append itself runs the [[StagedAppend]]
-    * two-phase protocol (round 12 — closing the residual window the r11
-    * fence scaladoc named): the batch's files stage beside the store, one
-    * atomic rename commits them, the fence advances, and only then do the
-    * files move into the live tables — so a crash at ANY point yields
-    * either "batch never happened" (stage discarded, fence unmoved,
-    * replay re-runs once) or "batch committed" (ready dir drained by the
-    * next reader/writer, replay recognized by its token and not re-run).
-    * Partial batches are never served. Batch-mode callers omit `batchId`
-    * and keep unfenced (but still stage-committed) semantics. */
+    * the store does not grow. The append itself is one [[StagedAppend]]
+    * cycle. Batch-mode callers omit `batchId` and keep unfenced (but still
+    * stage-committed) semantics. */
   def admit(spark: SparkSession, batch: DataFrame, threshold: Double,
             pairsDir: String,
             p: MinHashLSH.Params = MinHashLSH.Params(),

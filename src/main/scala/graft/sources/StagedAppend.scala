@@ -3,12 +3,13 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Two-phase crash-safe append for the append-only stores (SignatureStore,
-  * VectorStore) — closes the "crash inside the multi-file append" window
-  * that AdmitFence's scaladoc names as the last at-least-once hole: with a
-  * plain `mode("append")` write, a crash inside the commit's rename loop
-  * leaves a PARTIAL subset of the batch's files in the live directory,
-  * which the next read serves and the replayed batch then duplicates.
+/** Two-phase crash-safe append for the append-only index stores
+  * (SignatureStore, VectorStore, PostingsStore) — closes the "crash inside
+  * the multi-file append" window that AdmitFence's scaladoc names as the
+  * last at-least-once hole: with a plain `mode("append")` write, a crash
+  * inside the commit's rename loop leaves a PARTIAL subset of the batch's
+  * files in the live directory, which the next read serves and the
+  * replayed batch then duplicates.
   *
   * Protocol (the ST28 stage-swap / BucketedLayout-manifest shape, applied
   * to appends):
@@ -44,7 +45,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * drained to completion first. Only WRITERS pass dropStages = true — a
   * reader must not delete a stage dir the single writer is still filling.
   * Same single-writer assumption as every compact in this repo, enforced
-  * by [[WriterLease]] on the store entry points. */
+  * by [[WriterLease]] on the store entry points.
+  *
+  * Shared entry points — each store supplies only what it writes:
+  *  - [[append]]: the whole fenced cycle (fence check → token → stage →
+  *    commit → fence advance → publish) around the store's
+  *    `stageAppend`, called by `SignatureStore.appendStaged`,
+  *    `VectorStore.append` and `PostingsStore.append`;
+  *  - [[heal]]: the drain every reader and writer of those stores runs
+  *    first;
+  *  - [[reset]]: the protocol reset of a rebuild (`SignatureStore.write`,
+  *    `VectorStore.build`, `PostingsStore.build`). */
 object StagedAppend {
 
   // resolve the FILESYSTEM FROM THE ROOT, not the session default: store
@@ -201,5 +212,39 @@ object StagedAppend {
       publish(spark, root, t, live)
     }
     tokens
+  }
+
+  /** One fenced append cycle. A batch whose id the fence already admitted
+    * is skipped — callers heal first, and the heal advanced the fence for
+    * every drained committed batch, so this one check covers every replay
+    * path, including a batch committed by an attempt that crashed before
+    * its fence write. Otherwise `stage` writes the batch under
+    * [[stagePath]] for the token (`b<id>` when fenced, so a replay
+    * recognizes its own committed batch), then commit, fence advance and
+    * publish run in that order. Returns whether the batch landed, for the
+    * caller's own follow-up (cache invalidation, catalog refresh). */
+  def append(spark: SparkSession, root: String, batchId: Option[Long],
+             live: String => Path)(stage: String => Unit): Boolean =
+    if (batchId.exists(id => AdmitFence.admitted(spark, root, id))) false
+    else {
+      val token = batchId.map("b" + _).getOrElse("t" + java.lang.System.nanoTime())
+      stage(token)
+      commit(spark, root, token)
+      batchId.foreach(id => AdmitFence.advance(spark, root, id))
+      publish(spark, root, token, live)
+      true
+    }
+
+  /** A rebuild's protocol reset: a stale fence watermark or batch marker
+    * (`_admitted*`), staged/ready/commit entries (`_append_*`) or fence
+    * lock (`_fence_lock*`) from a previous store at `root` must not leak
+    * into the new one — a stale fence would silently skip early batches.
+    * Lease-held callers only. */
+  def reset(fsys: FileSystem, root: String): Unit = {
+    val rootP = new Path(root)
+    if (fsys.exists(rootP))
+      fsys.listStatus(rootP).map(_.getPath)
+        .filter(q => Seq("_admitted", "_append_", "_fence_lock").exists(q.getName.startsWith))
+        .foreach(q => fsys.delete(q, true))
   }
 }

@@ -9,7 +9,11 @@ import graft.sources.GenDir
   * lease-free reader that resolved the old name an instant before the
   * flip can finish its scan; and a pointer that vanishes between
   * currentName's existence probe and its open (a rebuild's reset racing
-  * a read) falls back to the classic base name instead of throwing. */
+  * a read) falls back to the classic base name instead of throwing.
+  *
+  * The shared swap: a rewrite that dies in any writer publishes nothing
+  * in either posture, the next rewrite clears its orphan, and rollBack
+  * restores the newest retired generation. */
 class GenDirSpec extends SparkSpecBase {
 
   private def localFs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -70,5 +74,61 @@ class GenDirSpec extends SparkSpecBase {
     // documented safe fallback (classic base) must apply, not propagate —
     // the only writers that delete the pointer restore the classic layout
     assert(GenDir.currentName(racy, dir, "postings") === "postings")
+  }
+
+  private def content(fsys: org.apache.hadoop.fs.FileSystem, dir: String, base: String) = {
+    val in = fsys.open(new Path(GenDir.livePath(fsys, dir, base), "part-0"))
+    try scala.io.Source.fromInputStream(in).mkString finally in.close()
+  }
+
+  /** Rewrites bases `a` and `b` of `dir`; each writer writes `<base>-<tag>`,
+    * and the one for `failOn` throws before writing anything. */
+  private def rewriteAB(fsys: org.apache.hadoop.fs.FileSystem, dir: String,
+                        tag: String, failOn: Option[String] = None): Unit =
+    GenDir.rewrite(spark, dir, Seq("a", "b").map(base =>
+      GenDir.Swap(base, GenDir.livePath(fsys, dir, base), (_, dst) => {
+        if (failOn.contains(base)) sys.error(s"writer of $base died")
+        val o = fsys.create(new Path(s"$dst/part-0"), true)
+        try o.write(s"$base-$tag".getBytes("UTF-8")) finally o.close()
+      })))
+
+  private def failedRewritePublishesNothing(scheme: String): Unit = {
+    val local = java.nio.file.Files.createTempDirectory("gendir-rw").toString
+    val dir = scheme + local
+    val fsys = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def names() = new java.io.File(local).list().toSet
+    mkGen(local, "a"); mkGen(local, "b")
+    intercept[RuntimeException](rewriteAB(fsys, dir, "1", failOn = Some("b")))
+    assert(Seq("a", "b").map(content(fsys, dir, _)) === Seq("a", "b"),
+      "a rewrite that died in its second writer changed a live dir")
+    assert(!names().exists(_.endsWith("_gen")), "a pointer was written")
+    val orphans = names() -- Set("a", "b")
+    assert(orphans.size === 1 && orphans.head.startsWith("a_"),
+      s"expected the first writer's staged dir as the only orphan: $orphans")
+    rewriteAB(fsys, dir, "2")
+    assert(Seq("a", "b").map(content(fsys, dir, _)) === Seq("a-2", "b-2"))
+    assert((orphans & names()).isEmpty, "the next rewrite left the orphan behind")
+  }
+
+  test("rewrite: a writer failure leaves the live dirs in place on an " +
+       "atomic-rename filesystem, and the next rewrite clears the orphan") {
+    failedRewritePublishesNothing("file://")
+  }
+
+  test("rewrite: a writer failure leaves live dirs and pointers in place on " +
+       "a flat object store, and the next rewrite clears the orphan") {
+    spark.sparkContext.hadoopConfiguration.set("fs.s3a.impl", classOf[FlatObjectFs].getName)
+    failedRewritePublishesNothing("s3a://test")
+  }
+
+  test("rollBack restores the newest of two retired generations and drops " +
+       "the rest") {
+    val dir = java.nio.file.Files.createTempDirectory("gendir-rb").toString
+    val fsys = localFs
+    Seq("a_old_5", "a_old_12", "a_compact_12").foreach(mkGen(dir, _))
+    GenDir.rollBack(fsys, dir, "a", new Path(s"$dir/a"))
+    // 12 is the newer generation even though "a_old_5" sorts after it
+    assert(content(fsys, dir, "a") === "a_old_12")
+    assert(new java.io.File(dir).list().toSet === Set("a"))
   }
 }

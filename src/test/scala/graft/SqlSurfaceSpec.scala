@@ -100,6 +100,19 @@ class SqlSurfaceSpec extends SparkSpecBase {
     }
   }
 
+  test("sig_match_count and first_match_index widen INT arrays and reject " +
+       "non-integral elements at analysis") {
+    assert(spark.sql("SELECT sig_match_count(array(9, 8, 7), array(9, 0, 7))")
+      .collect().head.getInt(0) === 2)
+    assert(spark.sql("SELECT first_match_index(array(1, 2), array(9, 2))")
+      .collect().head.getInt(0) === 1)
+    Seq("sig_match_count", "first_match_index").foreach { f =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $f(array(1.5D, 2.5D), array(1.5D, 3.5D))").collect())
+      assert(e.getMessage.contains(f), e.getMessage)
+    }
+  }
+
   // —— the TS-package TVF surface (r13 verdict item 8): each TVF hands its
   // arguments to the Column-API operator and returns THAT plan, so SQL ≡
   // Column holds at the optimized-plan level (canonicalized — exprIds are
