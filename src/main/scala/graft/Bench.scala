@@ -203,6 +203,19 @@ object Bench {
   private def jsonObj[V](kvs: Seq[(String, V)])(num: V => String): String =
     kvs.map { case (k, v) => jsonStr(k) + ":" + num(v) }.mkString("{", ",", "}")
 
+  /** Generated-class compiles, their total compile time and the codegen
+    * cache capacity. */
+  private[graft] case class Codegen(compiles: Long, compileMs: Long, cacheMax: Int) {
+    def since(start: Codegen): Codegen =
+      copy(compiles = compiles - start.compiles, compileMs = compileMs - start.compileMs)
+  }
+
+  /** This JVM's codegen counters so far. */
+  private def codegenNow(spark: SparkSession): Codegen = Codegen(
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L,
+    spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt)
+
   /** Per-row (median cold, median warm) over the fresh-JVM children. */
   private def isolatedMedians(runs: Seq[(String, Seq[(Double, Option[Double])])])
       : Seq[(String, Double, Option[Double])] =
@@ -237,14 +250,18 @@ object Bench {
     *    "pending" at an incremental write, so even a kill -9 leaves an
     *    artifact that names its own holes. Always present.
     *  - `host_load` (r15 verdict item 6): start, pre-isolation, and the
-    *    max sampled before any child. */
+    *    max sampled before any child.
+    *  - `codegen`: this JVM's generated-class compiles and their compile
+    *    time after the warm-up, and the codegen cache capacity — so a row
+    *    that paid for recompiles is visible in the artifact. */
   private[graft] def fullLine(rows: Seq[(String, Double)], declaredRows: Int,
                               declaredTotal: Double, warm: Seq[(String, Double)],
                               isoRuns: Seq[(String, Seq[(Double, Option[Double])])],
                               flagged: Seq[(String, Double)],
                               history: Option[(Seq[(String, Double)], Int)],
                               skipped: Seq[(String, String)],
-                              load: Seq[(String, Double)], sf: String): String = {
+                              load: Seq[(String, Double)], sf: String,
+                              codegen: Codegen): String = {
     val isolated = isolatedMedians(isoRuns)
     val isoStats = isoRuns.map { case (n, rs) =>
       val colds = rs.map(_._1).sorted
@@ -267,6 +284,8 @@ object Bench {
       history.fold("") { case (flags, n) =>
         s""","vs_history_flags":${jsonObj(flags)(jsonNum(_, 2))},"history_rows":$n""" } +
       s""","isolation_skipped":${jsonObj(skipped)(jsonStr)}""" +
+      s""","codegen":{"compiles":${codegen.compiles},"compile_ms":${codegen.compileMs},""" +
+      s""""cache_max":${codegen.cacheMax}}""" +
       s""","host_load":${jsonObj(load)(jsonNum(_, 2))},"sf":${jsonStr(sf)}}"""
   }
 
@@ -339,9 +358,15 @@ object Bench {
     try GraftCatalog.install(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"[bench] analyze skipped: ${e.getMessage}") }
     // Warm EVERY query once on the smallest sf (50-6000 rows, seconds total)
-    // so the timed run measures each plan, not its first-call codegen compile
-    // + JIT — e.g. x12's SRP kernel costs ~3s of one-time compilation that a
-    // single global warmup query never touches. An ONLY/isolation run warms
+    // so the timed run skips the first-call codegen compile + JIT of each
+    // plan it shares with the warm-up — e.g. x12's SRP kernel costs ~3s of
+    // one-time compilation that a single global warmup query never touches.
+    // Only in part: a full run generates thousands of classes, more than the
+    // codegen cache holds, and some plans differ between sf0.001 and the
+    // timed sf. One full sf0.01 run (4 cores) still compiled 5,413 classes
+    // (96 s) in its timed rows at Spark's 100-entry default and 3,423 (51 s)
+    // at GraftSession.CodegenCacheMaxEntries — the artifact's `codegen`
+    // object carries the count. An ONLY/isolation run warms
     // 3×: a full pass's 90+ sibling warmups cross C2 compile thresholds on
     // shared code paths that one warmup doesn't, and the gap is real — x14
     // (multi-job CC iteration, the worst case) timed 9.8 s in a fresh JVM
@@ -355,6 +380,7 @@ object Bench {
         catch { case _: Throwable => () }
       }
     }
+    val codegenStart = codegenNow(spark)
     // SPARK_GRAFT_TWICE (set by the isolation pass's children): time each
     // query a second time in the same JVM and emit it as a "warm" map —
     // the first number is the cold fresh-JVM figure, the second is the
@@ -956,6 +982,9 @@ object Bench {
     // re-rendered incrementally after every child)
     var loadPreIso: Option[Double] = None
     var maxChildLoad: Option[Double] = None
+    // read once: the isolation children run in their own JVMs, after this
+    // session stops
+    val codegen = codegenNow(spark).since(codegenStart)
     def renderLine(): String = fullLine(
       allRows, results.size, results.map(_._2).sum, warmRows ++ stagedWarm,
       isoRuns, flaggedNow, if (only.isEmpty) Some((histFlags, history.size)) else None,
@@ -963,7 +992,7 @@ object Bench {
         .map(n => n -> skipReasons.getOrElse(n, "pending")),
       Seq("start" -> loadStart) ++ loadPreIso.map("pre_isolation" -> _) ++
         maxChildLoad.map("max_pre_child" -> _),
-      sfDir)
+      sfDir, codegen)
     // The driver's artifact keeps only the stdout TAIL, which truncates the
     // per-query map on a 95-query run — persist the complete line to a file
     // (override path via SPARK_GRAFT_BENCH_OUT) so every round's numbers

@@ -196,7 +196,8 @@ class BenchSpec extends AnyFunSuite {
       val full = mapper.readTree(Bench.fullLine(rows, 1, 1.5, Seq("plain" -> 0.5),
         Seq("q\"quoted\\row" -> Seq((1.25, Some(1.0)), (1.5, None))),
         Seq("q\"quoted\\row" -> 2.5), Some((Seq("plain" -> 3.25), 7)),
-        Seq("x\"skipped" -> "budget"), Seq("start" -> 0.5), "/data/sf\"0.1"))
+        Seq("x\"skipped" -> "budget"), Seq("start" -> 0.5), "/data/sf\"0.1",
+        Bench.Codegen(12, 3456, 1000)))
       assert(full.get("queries").get("q\"quoted\\row").asDouble === 1.5)
       assert(full.get("staged_total_sec").asDouble === 0.25)
       assert(full.get("isolated_stats").get("q\"quoted\\row").get("max").asDouble === 1.5)
@@ -207,6 +208,9 @@ class BenchSpec extends AnyFunSuite {
       assert(full.get("isolation_skipped").get("x\"skipped").asText === "budget")
       assert(full.get("host_load").get("start").asDouble === 0.5)
       assert(full.get("sf").asText === "/data/sf\"0.1")
+      val codegen = full.get("codegen")
+      assert(codegen.get("compiles").asLong === 12 && codegen.get("compile_ms").asLong === 3456)
+      assert(codegen.get("cache_max").asInt === 1000)
     } finally java.util.Locale.setDefault(prev)
   }
 }

@@ -1,6 +1,10 @@
 package graft
 
-/** Session tuning composes with the host application's conf. */
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.{col, lit}
+
+/** Session tuning composes with the host application's conf, and the
+  * session keeps a repeated pipeline's generated classes. */
 class GraftSessionSpec extends SparkSpecBase {
 
   private val excluded = "spark.sql.optimizer.excludedRules"
@@ -22,5 +26,19 @@ class GraftSessionSpec extends SparkSpecBase {
     host.conf.unset(excluded)
     GraftSession.tune(host)
     assert(host.conf.get(excluded) === GraftSession.ExcludedOptimizerRules)
+  }
+
+  test("a pipeline run again after 150 others reuses its generated classes") {
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the int literal is inlined into the generated code, so each i is a
+    // distinct class in the codegen cache
+    def pipeline(i: Int) = spark.range(1).select(col("id") + lit(i)).collect()
+    pipeline(-1)
+    val first = compiles
+    (0 until 150).foreach(pipeline)
+    assert(compiles - first >= 150, "the distinct pipelines did not compile")
+    val before = compiles
+    assert(pipeline(-1).head.getLong(0) === -1L)
+    assert(compiles - before === 0, "the first pipeline's classes were evicted and recompiled")
   }
 }

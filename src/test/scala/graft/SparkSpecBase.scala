@@ -40,6 +40,7 @@ object SparkSpecBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheMaxEntries)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()
