@@ -85,8 +85,7 @@ object AdmitFence {
     if (ids.isEmpty) return
     val floor = readFloor(fsys, storeDir)
     val newFloor = math.max(floor, ids.max)
-    val out = fsys.create(markPath(storeDir), true)
-    try out.write(newFloor.toString.getBytes("UTF-8")) finally out.close()
+    SmallFile.write(fsys, markPath(storeDir), newFloor.toString)
     ids.filter(_ < newFloor)
       .foreach(id => try { fsys.delete(markerPath(storeDir, id), false); () }
         catch { case _: java.io.IOException => () }) // next fold retries
@@ -95,17 +94,11 @@ object AdmitFence {
   private def readFloor(fsys: org.apache.hadoop.fs.FileSystem,
                         storeDir: String): Long = {
     val p = markPath(storeDir)
-    if (!fsys.exists(p)) -1L
-    else {
-      val in = fsys.open(p)
-      val raw = try scala.io.Source.fromInputStream(in).mkString.trim
-                finally in.close()
-      raw.toLongOption.getOrElse {
-        System.err.println(s"[AdmitFence] unparsable watermark at $p " +
-          s"('$raw') — treating as -1 (replay-at-least-once)")
-        -1L
-      }
-    }
+    SmallFile.text(fsys, p).fold(-1L)(raw => raw.toLongOption.getOrElse {
+      System.err.println(s"[AdmitFence] unparsable watermark at $p " +
+        s"('$raw') — treating as -1 (replay-at-least-once)")
+      -1L
+    })
   }
 
   // per-store JVM locks (fast path for the common one-process case),
@@ -202,9 +195,7 @@ object AdmitFence {
             // larger one exists), so the MAX never regresses. The lock
             // is kept as a fast-path serializer; correctness no longer
             // rides on it here.
-            val mk = markerPath(storeDir, batchId)
-            val out = fsys.create(mk, true)
-            try out.write("admitted".getBytes("UTF-8")) finally out.close()
+            SmallFile.write(fsys, markerPath(storeDir, batchId), "admitted")
             foldFloor(fsys, storeDir)
             true
           } else {
@@ -217,8 +208,7 @@ object AdmitFence {
             val p = markPath(storeDir)
             val tmp = new org.apache.hadoop.fs.Path(
               s"$storeDir/_admitted_upto.tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-            val out = fsys.create(tmp, true)
-            try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
+            SmallFile.write(fsys, tmp, batchId.toString)
             if (!stillOurs()) { // paused past staleness and reclaimed from
               fsys.delete(tmp, false)
               false // retry the monotonic cycle from scratch
@@ -291,12 +281,8 @@ private[graft] object FenceLock {
     fsys.mkdirs(new org.apache.hadoop.fs.Path(dir))
     val token = java.util.UUID.randomUUID().toString.take(12)
     def holderToken(): Option[String] =
-      try {
-        val in = fsys.open(lock)
-        val raw = try scala.io.Source.fromInputStream(in).mkString.trim
-                  finally in.close()
-        Some(raw.split(' ').headOption.getOrElse(""))
-      } catch { case _: java.io.IOException => None } // vanished/unreadable
+      try SmallFile.text(fsys, lock).map(_.split(' ').headOption.getOrElse(""))
+      catch { case _: java.io.IOException => None } // unreadable
     def mtime(): Option[Long] =
       try Some(fsys.getFileStatus(lock).getModificationTime)
       catch { case _: java.io.IOException => None }

@@ -64,16 +64,9 @@ object BucketedLayout {
     * one atomic step — classic files NOT listed are late appends that
     * arrived after the fold and must still serve (and be folded next). */
   private def readFolded(fs: org.apache.hadoop.fs.FileSystem,
-                         genDir: org.apache.hadoop.fs.Path): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(genDir, "_folded")
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in).getLines().map(_.trim)
-        .filter(_.nonEmpty).toSet
-      finally in.close()
-    }
-  }
+                         genDir: org.apache.hadoop.fs.Path): Set[String] =
+    SmallFile.text(fs, new org.apache.hadoop.fs.Path(genDir, "_folded"))
+      .fold(Set.empty[String])(_.split('\n').map(_.trim).filter(_.nonEmpty).toSet)
 
   /** Read the layout back; `day` arrives as a partition column so time
     * filters prune directories before any file IO.
@@ -367,8 +360,8 @@ object BucketedLayout {
       // the manifest publishes WITH the generation (same pointer flip):
       // classic files folded here are served from the generation and
       // reclaimed by the NEXT compact's sweep
-      val o = fs.create(new org.apache.hadoop.fs.Path(genPath, "_folded"), true)
-      try o.write(foldedNames.mkString("\n").getBytes("UTF-8")) finally o.close()
+      SmallFile.write(fs, new org.apache.hadoop.fs.Path(genPath, "_folded"),
+        foldedNames.mkString("\n"))
       onCompactPoint("manifest")
       GenDir.publish(fs, sinkDir, dayBase, genName)
       onCompactPoint("published")

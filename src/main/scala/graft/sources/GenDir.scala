@@ -53,22 +53,11 @@ object GenDir {
     * pointer's content when one exists, else `base` itself (the classic
     * layout — fully back-compatible). Read failures on a PRESENT pointer
     * propagate: guessing `base` there could serve a retired, possibly
-    * deleted generation. A pointer that VANISHES between the existence
-    * probe and the open is different — the documented safe fallback (the
-    * classic base name) applies, because the only writers that delete the
-    * pointer ([[reset]], a rebuild) restore the classic layout. */
-  def currentName(fsys: FileSystem, dir: String, base: String): String = {
-    val p = pointer(dir, base)
-    if (!fsys.exists(p)) base
-    else {
-      val raw = try {
-        val in = fsys.open(p)
-        try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => base }
-      if (raw.isEmpty) base else raw
-    }
-  }
+    * deleted generation. An absent pointer is read by [[SmallFile]]; the
+    * only writers that delete it ([[reset]], a rebuild) restore the
+    * classic layout. */
+  def currentName(fsys: FileSystem, dir: String, base: String): String =
+    SmallFile.text(fsys, pointer(dir, base)).filter(_.nonEmpty).getOrElse(base)
 
   /** The CURRENT generation directory for `base`. */
   def livePath(fsys: FileSystem, dir: String, base: String): Path =
@@ -83,10 +72,8 @@ object GenDir {
     * Retired generations are reclaimed one compact cycle later, by the
     * NEXT lease-held writer's [[sweep]] — by then every reader that
     * resolved the pre-flip pointer has long finished. */
-  def publish(fsys: FileSystem, dir: String, base: String, genName: String): Unit = {
-    val o = fsys.create(pointer(dir, base), true)
-    try o.write(genName.getBytes("UTF-8")) finally o.close()
-  }
+  def publish(fsys: FileSystem, dir: String, base: String, genName: String): Unit =
+    SmallFile.write(fsys, pointer(dir, base), genName)
 
   /** Drop generation dirs of `base` the pointer does not name — the
     * predecessors [[publish]] deferred (reclaimed here, one compact cycle

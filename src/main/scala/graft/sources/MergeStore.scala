@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +44,12 @@ import org.apache.spark.sql.functions._
   */
 object MergeStore {
 
-  private def metaPath(dir: String) = s"$dir/_graft_meta/buckets"
+  private def metaPath(dir: String) = new Path(s"$dir/_graft_meta/buckets")
+
+  // the FILESYSTEM of the store dir (not the session default — store
+  // dirs legitimately live on s3a/gs while defaultFS is HDFS)
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def bucketOf(buckets: Int) = pmod(col("doc_id"), lit(buckets.toLong))
 
@@ -53,18 +59,12 @@ object MergeStore {
     docs.withColumn("bucket", bucketOf(buckets))
       .repartition(col("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(metaPath(dir)), true)
-    out.write(buckets.toString.getBytes("UTF-8")); out.close()
+    SmallFile.write(fsOf(docs.sparkSession, dir), metaPath(dir), buckets.toString)
   }
 
-  def bucketCount(spark: SparkSession, dir: String): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(metaPath(dir)))
-    val n = scala.io.Source.fromInputStream(in).mkString.trim.toInt
-    in.close(); n
-  }
+  def bucketCount(spark: SparkSession, dir: String): Int =
+    SmallFile.text(fsOf(spark, dir), metaPath(dir))
+      .getOrElse(sys.error(s"no merge store at $dir (no ${metaPath(dir)})")).toInt
 
   /** Full-corpus read (meta sidecar invisible). */
   def read(spark: SparkSession, dir: String): DataFrame =
@@ -104,10 +104,8 @@ object MergeStore {
       .option("partitionOverwriteMode", "dynamic").parquet(dir)
     // buckets emptied by deletes are absent from newData — dynamic
     // overwrite leaves their stale directories; drop them explicitly
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(written).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/bucket=$b"), true)
-    }
+    val fs = fsOf(spark, dir)
+    touched.filterNot(written).foreach(b => fs.delete(new Path(s"$dir/bucket=$b"), true))
     newData.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()

@@ -69,8 +69,7 @@ class PostingsStore(spark: SparkSession, dir: String) {
     GenDir.reset(fsys, dir, "stats")
     writePostings(postingsOf(docs, buckets), s"$dir/postings")
     writeStats(docs, s"$dir/stats")
-    val o = fsys.create(new Path(s"$dir/buckets"), true)
-    o.write(buckets.toString.getBytes("UTF-8")); o.close()
+    SmallFile.write(fsys, new Path(s"$dir/buckets"), buckets.toString)
   }
 
   /** Incremental index growth — the SignatureStore/VectorStore `append`
@@ -148,10 +147,9 @@ class PostingsStore(spark: SparkSession, dir: String) {
     else (s"$dir/$p", s"$dir/stats_g${p.stripPrefix("postings_g")}")
   }
 
-  private def bucketCount: Int = {
-    val in = fsys.open(new Path(s"$dir/buckets"))
-    try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
-  }
+  private def bucketCount: Int =
+    SmallFile.text(fsys, new Path(s"$dir/buckets"))
+      .getOrElse(sys.error(s"no postings store at $dir (no $dir/buckets)")).toInt
 
   /** BM25 top-k over the stored postings for `terms`. Reads only the
     * buckets the query terms hash to (same xxhash64 as the writer). A

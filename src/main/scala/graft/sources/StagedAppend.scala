@@ -90,10 +90,7 @@ object StagedAppend {
     if (AtomicRename.isAtomic(spark, root))
       require(fsys.rename(stagePath(root, token), readyPath(root, token)),
         s"staged append: could not commit $token under $root")
-    else {
-      val o = fsys.create(commitMarkerPath(root, token), true)
-      try o.write("committed".getBytes("UTF-8")) finally o.close()
-    }
+    else SmallFile.write(fsys, commitMarkerPath(root, token), "committed")
   }
 
   /** Move every data file of `src` into `dstRoot`, mirroring the relative

@@ -51,24 +51,19 @@ class VersionedStore(spark: SparkSession, dir: String) {
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def mpath(s: String) = new org.apache.hadoop.fs.Path(s"$dir/_graft_manifest/$s")
 
-  private def writeFile(p: org.apache.hadoop.fs.Path, body: String): Unit = {
-    val o = fs.create(p, true); o.write(body.getBytes("UTF-8")); o.close()
-  }
-  private def readFile(p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in).mkString finally in.close()
-  }
+  private def readFile(p: org.apache.hadoop.fs.Path): String =
+    SmallFile.text(fs, p).getOrElse(sys.error(s"no versioned store at $dir (no $p)"))
 
   /** bucket -> gen, serialized one `bucket:gen` pair per line (no JSON
     * library needed; the format is the contract, pinned by the spec). */
   private def writeManifest(v: Long, m: Map[Long, Long]): Unit =
-    writeFile(mpath(s"v$v.manifest"),
+    SmallFile.write(fs, mpath(s"v$v.manifest"),
       m.toSeq.sorted.map { case (b, g) => s"$b:$g" }.mkString("\n"))
   private def readManifest(v: Long): Map[Long, Long] =
     readFile(mpath(s"v$v.manifest")).split("\n").filter(_.nonEmpty)
       .map { l => val Array(b, g) = l.split(":"); b.toLong -> g.toLong }.toMap
 
-  def currentVersion: Long = readFile(mpath("current")).trim.toLong
+  def currentVersion: Long = readFile(mpath("current")).toLong
 
   /** Publish version `v`: on atomic-rename filesystems, write the pointer
     * to a temp name and rename over `current`; on flat object stores, ONE
@@ -79,12 +74,12 @@ class VersionedStore(spark: SparkSession, dir: String) {
   private def publish(v: Long): Unit =
     if (AtomicRename.isAtomic(spark, dir)) {
       val tmp = mpath(s".current-$v")
-      writeFile(tmp, v.toString)
+      SmallFile.write(fs, tmp, v.toString)
       fs.delete(mpath("current"), false)
       require(fs.rename(tmp, mpath("current")), s"publish of v$v failed")
-    } else writeFile(mpath("current"), v.toString)
+    } else SmallFile.write(fs, mpath("current"), v.toString)
 
-  def buckets: Int = readFile(mpath("buckets")).trim.toInt
+  def buckets: Int = readFile(mpath("buckets")).toInt
 
   private def bucketOf(n: Int) = pmod(col("doc_id"), lit(n.toLong))
 
@@ -94,11 +89,11 @@ class VersionedStore(spark: SparkSession, dir: String) {
     * every footer; here it's one tiny file, the Delta/Iceberg posture).
     * Older stores without a schema file fall back to `mergeSchema`. */
   private def writeSchema(v: Long, schema: org.apache.spark.sql.types.StructType): Unit =
-    writeFile(mpath(s"v$v.schema"), schema.json)
+    SmallFile.write(fs, mpath(s"v$v.schema"), schema.json)
   private def readSchema(v: Long): Option[org.apache.spark.sql.types.StructType] =
-    if (!fs.exists(mpath(s"v$v.schema"))) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(
-      readFile(mpath(s"v$v.schema"))).asInstanceOf[org.apache.spark.sql.types.StructType])
+    SmallFile.text(fs, mpath(s"v$v.schema")).map(
+      org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Initial load: everything lands in gen 0, manifest v0. */
   def write(docs: DataFrame, nBuckets: Int = 16): Unit =
@@ -106,7 +101,7 @@ class VersionedStore(spark: SparkSession, dir: String) {
     docs.withColumn("bucket", bucketOf(nBuckets))
       .repartition(col("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/gen=0")
-    writeFile(mpath("buckets"), nBuckets.toString)
+    SmallFile.write(fs, mpath("buckets"), nBuckets.toString)
     val present = spark.read.parquet(s"$dir/gen=0")
       .select(col("bucket").cast("long")).distinct().collect().map(_.getLong(0))
     writeManifest(0L, present.map(_ -> 0L).toMap)

@@ -106,21 +106,6 @@ object WriterLease {
 
   private def leasePath(root: String) = new Path(s"$root/_writer_lease")
 
-  /** The lease file's raw bytes; None when absent. IOExceptions other
-    * than absence propagate — the caller decides the fail-safe side. */
-  private def readRaw(fsys: FileSystem, p: Path): Option[Array[Byte]] =
-    if (!fsys.exists(p)) None
-    else {
-      val in = fsys.open(p)
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        Some(bos.toByteArray)
-      } finally in.close()
-    }
-
   /** Parse lease bytes into (holderId, epochStamp). Torn or MID-CLAIM
     * content (even an O_EXCL-created lease is visible EMPTY for the
     * microseconds before the claimant's bytes land) is judged by the
@@ -142,8 +127,10 @@ object WriterLease {
       }
     }
 
+  // lease bytes come from SmallFile.read: absent (or vanished mid-read)
+  // is None, and every other IOException is the caller's fail-safe
   private def readHolder(fsys: FileSystem, p: Path): Option[(String, Long)] =
-    parseBytes(fsys, p, readRaw(fsys, p))
+    parseBytes(fsys, p, SmallFile.read(fsys, p))
 
   // when this JVM last CONFIRMED the lease carries its id, per root. The
   // renewal anomaly branches (absent / torn lease) may only REPAIR state
@@ -162,10 +149,7 @@ object WriterLease {
     * fresh ownership confirmation). */
   private def rewriteInPlace(fsys: FileSystem, p: Path): Boolean =
     try {
-      val out = fsys.create(p, true)
-      try out.write(s"$writerId ${java.lang.System.currentTimeMillis()}"
-        .getBytes("UTF-8"))
-      finally out.close()
+      SmallFile.write(fsys, p, s"$writerId ${java.lang.System.currentTimeMillis()}")
       true
     } catch { case _: java.io.IOException => false } // next tick retries
 
@@ -193,10 +177,10 @@ object WriterLease {
   private def renewOnce(fsys: FileSystem, root: String, staleMs: Long): Unit =
     // catch EVERYTHING: scheduleAtFixedRate silently suppresses all
     // subsequent runs after one task throw, so a single transient
-    // IOException (a cross-process delete between exists and open, an
-    // HDFS blip) escaping here would permanently and invisibly stop
-    // renewal — the lease then ages out mid-compact and a second writer
-    // legitimately reclaims it, the exact corruption renewal prevents
+    // IOException (an HDFS blip) escaping here would permanently and
+    // invisibly stop renewal — the lease then ages out mid-compact and a
+    // second writer legitimately reclaims it, the exact corruption
+    // renewal prevents
     try rootLock(root).synchronized {
       // (no early `return` in here: it would throw NonLocalReturnControl
       // through the by-name synchronized body into the catch below)
@@ -323,7 +307,7 @@ object WriterLease {
         val p = leasePath(key)
         var claimed = tryClaim(fsys, p)
         if (!claimed) {
-          val judgedBytes = readRaw(fsys, p) // the exact bytes being judged
+          val judgedBytes = SmallFile.read(fsys, p) // the exact bytes being judged
           val holder = parseBytes(fsys, p, judgedBytes)
           val reclaimable = holder.exists { case (id, ts) =>
             // our own id on disk while the in-JVM map says free = a crashed
@@ -332,7 +316,9 @@ object WriterLease {
             id == writerId ||
               java.lang.System.currentTimeMillis() - ts > staleMs
           }
-          if (reclaimable) {
+          // released between our claim and the read: race the create
+          if (judgedBytes.isEmpty) claimed = tryClaim(fsys, p)
+          else if (reclaimable) {
             // remove the corpse via an atomic RENAME to a tombstone, not
             // a delete: two contenders that both judged it stale would
             // otherwise both run delete+claim, and the slower delete
@@ -362,7 +348,7 @@ object WriterLease {
               // exception-safe verify: an IO blip here must not strand a
               // possibly-live moved lease in the tombstone silently
               try {
-                val movedBytes = readRaw(fsys, tomb)
+                val movedBytes = SmallFile.read(fsys, tomb)
                 // dual verify: bytes AND — for unparsable content — the
                 // rename-preserved mtime. Byte equality alone
                 // false-matches two DIFFERENT torn states with identical

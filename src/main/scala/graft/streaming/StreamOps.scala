@@ -1148,19 +1148,13 @@ object StreamOps {
     * (`base/_upto` — underscore files are invisible to parquet listings),
     * so the folded data and the set of batch ids it covers publish in the
     * SAME rename: no crash can leave a base that disagrees with its
-    * watermark. Reads resolve through [[resolvedBase]], so the watermark
-    * survives the two-rename crash window too. */
+    * watermark. Callers pass the base they resolved ([[resolvedBase]])
+    * and serve: resolving it a second time could pair this watermark with
+    * a base a concurrent compact published in between. */
   private def compactedUpto(fsys: org.apache.hadoop.fs.FileSystem,
-                            storeDir: String): Long =
-    resolvedBase(fsys, storeDir)
-      .map(b => new org.apache.hadoop.fs.Path(b, "_upto"))
-      .filter(fsys.exists) match {
-      case None => -1L
-      case Some(p) =>
-        val in = fsys.open(p)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-    }
+                            base: Option[org.apache.hadoop.fs.Path]): Long =
+    base.flatMap(b => graft.sources.SmallFile.text(fsys,
+      new org.apache.hadoop.fs.Path(b, "_upto"))).fold(-1L)(_.toLong)
 
   private[graft] def applyFingerprintBatch(batch: DataFrame, batchId: Long,
                                            storeDir: String,
@@ -1187,7 +1181,7 @@ object StreamOps {
     // a batch at or below the compaction watermark is already folded into
     // base AND its partial is gone — re-applying it would double-add (the
     // replay-after-compact ordering); skip it instead
-    if (batchId <= compactedUpto(fsys, storeDir)) return
+    if (batchId <= compactedUpto(fsys, resolvedBase(fsys, storeDir))) return
     val dayUs = 86400L * 1000000L
     val part = batch.select(
         graft.functions.SeriesFunctions.floorDiv(unix_micros(col("ts")), dayUs)
@@ -1209,8 +1203,9 @@ object StreamOps {
   def fingerprints(s: SparkSession, storeDir: String): DataFrame = {
     val fsys = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val upto = compactedUpto(fsys, storeDir)
-    val base = resolvedBase(fsys, storeDir).toSeq.map(p =>
+    val liveBase = resolvedBase(fsys, storeDir)
+    val upto = compactedUpto(fsys, liveBase)
+    val base = liveBase.toSeq.map(p =>
       s.read.parquet(p.toString).select(col("day"), col("n"), col("fp")))
     // explicit batch-dir paths, not a parts/-wide partitioned read: the
     // watermark filter happens on the LISTING, so a stale dir (already in
@@ -1292,7 +1287,13 @@ object StreamOps {
     val atomicSwap =
       graft.sources.AtomicRename.isAtomic(s, storeDir) && !pointered
     val partsPath = new org.apache.hadoop.fs.Path(s"$storeDir/parts")
-    val upto0 = compactedUpto(fsys, storeDir)
+    // fold from the RESOLVED base: after a crash between the retire and
+    // publish renames the last published base lives under base_old_<gen>,
+    // and folding from `base`-only would silently rebuild the store from
+    // partials alone — all compacted history lost. resolvedBase heals
+    // both this path and serving.
+    val liveBase = resolvedBase(fsys, storeDir)
+    val upto0 = compactedUpto(fsys, liveBase)
     val listed: Seq[(Long, org.apache.hadoop.fs.Path)] =
       if (!fsys.exists(partsPath)) Nil
       else fsys.listStatus(partsPath).toSeq.map(_.getPath)
@@ -1301,12 +1302,6 @@ object StreamOps {
     val (stale, fold) = listed.partition(_._1 <= upto0)
     val upto1 = fold.foldLeft(upto0)((m, e) => math.max(m, e._1))
     val basePath = new org.apache.hadoop.fs.Path(s"$storeDir/base")
-    // fold from the RESOLVED base: after a crash between the retire and
-    // publish renames the last published base lives under base_old_<gen>,
-    // and folding from `base`-only would silently rebuild the store from
-    // partials alone — all compacted history lost. resolvedBase heals
-    // both this path and serving.
-    val liveBase = resolvedBase(fsys, storeDir)
     val frames =
       liveBase.toSeq.map(p =>
         s.read.parquet(p.toString).select(col("day"), col("n"), col("fp"))) ++
@@ -1324,8 +1319,8 @@ object StreamOps {
     if (atomicSwap) {
       val tmp = new org.apache.hadoop.fs.Path(s"$storeDir/base_staging_$gen")
       staged.write.mode("overwrite").parquet(tmp.toString)
-      val out = fsys.create(new org.apache.hadoop.fs.Path(tmp, "_upto"), true)
-      try out.write(upto1.toString.getBytes("UTF-8")) finally out.close()
+      graft.sources.SmallFile.write(fsys,
+        new org.apache.hadoop.fs.Path(tmp, "_upto"), upto1.toString)
       val old = new org.apache.hadoop.fs.Path(s"$storeDir/base_old_$gen")
       if (fsys.exists(basePath))
         require(fsys.rename(basePath, old), s"compact: could not retire $basePath")
@@ -1343,8 +1338,8 @@ object StreamOps {
       val genName = s"base_g$gen"
       val genPath = new org.apache.hadoop.fs.Path(s"$storeDir/$genName")
       staged.write.mode("overwrite").parquet(genPath.toString)
-      val out = fsys.create(new org.apache.hadoop.fs.Path(genPath, "_upto"), true)
-      try out.write(upto1.toString.getBytes("UTF-8")) finally out.close()
+      graft.sources.SmallFile.write(fsys,
+        new org.apache.hadoop.fs.Path(genPath, "_upto"), upto1.toString)
       graft.sources.GenDir.publish(fsys, storeDir, "base", genName)
     }
     // GC every other retired/staging generation (a crashed run's

@@ -133,4 +133,22 @@ class MergeStoreSpec extends SparkSpecBase {
     assert(got.filter(pmod(col("doc_id"), lit(4L)) === 2).count() === 0)
     assert(got.count() === oldSnap.count() - victims.count())
   }
+
+  test("a store on a flat object store (s3a) writes, merges and cleans " +
+       "emptied buckets through the store dir's filesystem") {
+    spark.sparkContext.hadoopConfiguration.set("fs.s3a.impl", classOf[FlatObjectFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("mergestore-s3a").toString
+    val dir = "s3a://test" + local
+    MergeStore.write(oldSnap, dir, buckets = 4)
+    assert(MergeStore.bucketCount(spark, dir) === 4)
+    MergeStore.merge(spark, dir, upserts, deletes)
+    val got = MergeStore.read(spark, dir)
+    assert(got.except(newSnap).isEmpty && newSnap.except(got).isEmpty)
+    // empty bucket 2: its residue delete must go through the s3a filesystem
+    val victims = newSnap.filter(pmod(col("doc_id"), lit(4L)) === 2).select("doc_id")
+    MergeStore.merge(spark, dir, upserts = victims.limit(0).join(newSnap, "doc_id"),
+      deleteIds = victims)
+    assert(!new java.io.File(s"$local/bucket=2").exists(), "emptied bucket dir must be gone")
+    assert(MergeStore.read(spark, dir).count() === newSnap.count() - victims.count())
+  }
 }
