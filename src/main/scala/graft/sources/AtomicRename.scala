@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   *  - [[StagedAppend.commit]]'s stage → ready directory rename,
   *  - [[AdmitFence.advance]]'s temp → watermark rename,
   *  - [[WriterLease]]'s create-no-overwrite claim and renewal rename,
-  *  - the two-rename compact swaps (VectorStore/PostingsStore/StreamOps).
+  *  - the two-rename compact swaps ([[GenDir.rewrite]] and
+  *    BucketedLayout.compactDay).
   *
   * That atomicity holds on POSIX local filesystems and HDFS-class stores
   * (HDFS, viewfs, Azure ABFS with hierarchical namespace, Ozone). It does

@@ -4,11 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Generation swaps of a store's directories — the compact of
-  * VectorStore (`vectors`) and PostingsStore (`postings` + `stats`) is
-  * one [[rewrite]], and their readers and writers heal its crash window
-  * with [[rollBack]]. Both postures stage the whole rewrite beside the
-  * live dir first, so a crash before the publish leaves only an orphan
-  * the next rewrite clears:
+  * VectorStore (`vectors`), PostingsStore (`postings` + `stats`) and
+  * StreamOps' fingerprint store (`base`) is one [[rewrite]], and their
+  * readers and writers heal its crash window with [[rollBack]]. Both
+  * postures stage the whole rewrite beside the live dir first, so a crash
+  * before the publish leaves only an orphan the next rewrite clears:
   *
   *  - ATOMIC-rename filesystems ([[AtomicRename.isAtomic]]) write into
   *    `<base>_compact_<gen>` and publish with two directory renames, live
@@ -33,9 +33,17 @@ import org.apache.spark.sql.SparkSession
   * torn data. Resolution falls back to `<base>` when no pointer exists,
   * so every store written by the rename-swapped path reads unchanged.
   *
-  * StreamOps.compactFingerprints and BucketedLayout.compactDay use the
-  * pointer half ([[currentName]], [[publish]], [[sweep]]) with their own
-  * staging names.
+  * SignatureStore swaps catalog tables, not dirs, and reclaims their
+  * generation dirs with [[dropGens]]. Two stores stay outside:
+  *
+  *  - BucketedLayout.compactDay: its day dirs sit under parquet partition
+  *    discovery, so its staging and park names must be dot-prefixed —
+  *    `<base>_old_<gen>` would be read as a `day=` value. Its pointer
+  *    posture also carries the `_folded` manifest and late-append rules,
+  *    and its `.old-day=` park is read by the pointer branch, by
+  *    `sweepDay` and by `dropDaysBefore`.
+  *  - VersionedStore never swaps a directory: it only adds generations,
+  *    and its pointer names a version.
   *
   * Single WRITER per store mutates the pointer, same as every compact in
   * this repo ([[WriterLease]]); lease-free readers only resolve it. */
@@ -85,8 +93,11 @@ object GenDir {
   def sweep(fsys: FileSystem, dir: String, base: String): Unit =
     dropGens(fsys, dir, base, Set(currentName(fsys, dir, base)))
 
-  private def dropGens(fsys: FileSystem, dir: String, base: String,
-                       keep: Set[String]): Unit = {
+  /** Drop every `<base>` and `<base>_g<n>` dir under `dir` not named in
+    * `keep` — [[sweep]] for a store whose live name is kept elsewhere
+    * (SignatureStore's catalog location). Same lease-held rule. */
+  def dropGens(fsys: FileSystem, dir: String, base: String,
+               keep: Set[String]): Unit = {
     val dirP = new Path(dir)
     if (!fsys.exists(dirP)) return
     // the classic `<base>` dir is itself a retired generation once the
@@ -132,7 +143,10 @@ object GenDir {
         // publishes AT the live dir the store resolved, so a surviving
         // pointer (a store migrated from the pointer posture) stays valid
         val old = new Path(s"$dir/${s.base}_old_$gen")
-        require(fsys.rename(s.live, old), s"compact: could not retire ${s.live}")
+        // no live dir yet: a fingerprint store's first compact folds
+        // partials only
+        if (fsys.exists(s.live))
+          require(fsys.rename(s.live, old), s"compact: could not retire ${s.live}")
         require(fsys.rename(new Path(s"$dir/${staged(s.base)}"), s.live),
           s"compact: could not publish ${staged(s.base)}")
         fsys.delete(old, true)
@@ -142,9 +156,11 @@ object GenDir {
 
   /** Heal the atomic posture's two-rename window for `base`: when the
     * live dir is gone, restore the newest `<base>_old_<gen>` to it; once a
-    * live dir exists, delete the `_old_`/`_compact_` orphans. Called by
-    * the stores' readers and writers that find the live dir absent or are
-    * about to write into it, and by [[rewrite]]. The pointer posture
+    * live dir exists, delete the `_old_`/`_compact_`/`_staging_` orphans
+    * (the staging name of the fingerprint store's earlier hand-written
+    * swap, which stores on disk may still carry). Called by the stores'
+    * readers and writers that find the live dir absent or are about to
+    * write into it, and by [[rewrite]]. The pointer posture
     * never needs it: its publish is one pointer write and the live dir is
     * never absent. */
   def rollBack(fsys: FileSystem, dir: String, base: String, live: Path): Unit = {
@@ -162,7 +178,7 @@ object GenDir {
           require(rolled || fsys.exists(live), s"recover: could not restore $newest")
         }
     if (fsys.exists(live))
-      named("old", "compact").foreach(p => fsys.delete(p, true))
+      named("old", "compact", "staging").foreach(p => fsys.delete(p, true))
   }
 
   /** Remove the pointer itself — a REBUILD's protocol reset (the store's

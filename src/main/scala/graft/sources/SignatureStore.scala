@@ -34,19 +34,23 @@ import org.apache.spark.sql.functions._
   */
 object SignatureStore {
 
+  /** The store's catalog tables; `sig_splits` only in a routed store. */
+  private val tables = Seq("sig_docs", "sig_sets", "sig_splits")
+
   /** Heal compaction's catalog-swap window: a compact that crashed
     * between `DROP TABLE t` and `ALTER TABLE t_compact RENAME TO t`
     * leaves the live data fully present under the `_compact` name with
     * the serving name absent — complete the rename. (A crash BEFORE the
     * drop leaves both names; the next compact's `DROP IF EXISTS
-    * t_compact` discards the orphan staging as before.) The dropped
-    * generation's directory may leak bytes until the next compact — a
-    * storage leak, never a data loss. Single-writer, like every heal
-    * here; called by the readers/mutators and by compact itself. */
+    * t_compact` discards the orphan catalog entry.) The tables are
+    * EXTERNAL, so a DROP keeps their dirs: the dropped generation's dir,
+    * and an orphan staging's, stay on disk until the next compact's
+    * sweep. Single-writer, like every heal here; called by the
+    * readers/mutators and by compact itself. */
   private def healSwap(spark: SparkSession): Unit = {
     import org.apache.spark.sql.catalyst.TableIdentifier
     val cat = spark.sessionState.catalog
-    Seq("sig_docs", "sig_sets", "sig_splits").foreach { t =>
+    tables.foreach { t =>
       if (!cat.tableExists(TableIdentifier(t)) &&
           cat.tableExists(TableIdentifier(s"${t}_compact")))
         spark.sql(s"ALTER TABLE ${t}_compact RENAME TO $t")
@@ -76,8 +80,11 @@ object SignatureStore {
     // root — across filesystems, if the old store was local and this one
     // is an object store (caught live in the r14 flat-object soak)
     spark.sql("DROP TABLE IF EXISTS sig_splits")
-    StagedAppend.reset(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+    val fsys = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StagedAppend.reset(fsys, path)
+    // a compacted store's `<t>_g<gen>` dirs outlive the DROPs above
+    tables.foreach(GenDir.reset(fsys, path, _))
     MinHashLSH.hashedDocs(toks, p)
       .write.format("parquet")
       .option("path", s"$path/sig_docs")
@@ -109,7 +116,7 @@ object SignatureStore {
   /** Published files reach a table's readers only once its cached file
     * listing is refreshed. */
   private def refreshTables(spark: SparkSession): Unit =
-    Seq("sig_docs", "sig_sets", "sig_splits").foreach { t =>
+    tables.foreach { t =>
       if (spark.sessionState.catalog.tableExists(
             org.apache.spark.sql.catalyst.TableIdentifier(t)))
         spark.catalog.refreshTable(t)
@@ -314,18 +321,21 @@ object SignatureStore {
     routed
   }
 
-  /** Rewrite both tables down to one file generation — the maintenance job
-    * a long-lived store schedules after many admits. Every [[append]] adds
-    * one file per bucket to `sig_sets` and one file set to `sig_docs`, so
-    * file count grows linearly with admit cycles and the probe scan pays
-    * per-file open cost — the classic small-files decay. The rewrite
-    * stages a fresh generation directory next to the live one, swaps the
-    * catalog names, then deletes the old generation; data is never
-    * modified in place, so a crash mid-compact leaves the live tables
-    * intact (at worst an orphaned staging dir, removed by the next
-    * compact's DROP IF EXISTS). Same single-writer assumption as
-    * BucketedLayout's day swap, and the same brief window: between the
-    * DROP and the RENAME the table name is absent from the catalog. */
+  /** Rewrite every table down to one file generation — the maintenance
+    * job a long-lived store schedules after many admits. Every [[append]]
+    * adds one file per bucket to `sig_sets` and one file set to `sig_docs`
+    * (and to a routed store's `sig_splits`), so file count grows linearly
+    * with admit cycles and the probe scan pays per-file open cost — the
+    * classic small-files decay. The rewrite stages every table as a fresh
+    * `<t>_g<gen>` generation dir under a `<t>_compact` name, then swaps
+    * each catalog name, then drops every generation dir the catalog no
+    * longer names ([[GenDir.dropGens]]). Data is never modified in place,
+    * so a crash mid-compact leaves the live tables intact: an orphan
+    * staging, or one table's swap half done (healed by [[healSwap]]), and
+    * leftover dirs the next compact's sweep reclaims. Same single-writer
+    * assumption as BucketedLayout's day swap, and the same brief window:
+    * between the DROP and the RENAME the table name is absent from the
+    * catalog. */
   def compact(spark: SparkSession, path: String): Unit =
       WriterLease.withLease(spark, path) {
     import org.apache.spark.sql.catalyst.TableIdentifier
@@ -336,47 +346,37 @@ object SignatureStore {
     val cat = spark.sessionState.catalog
     def loc(t: String) = new org.apache.hadoop.fs.Path(
       cat.getTableMetadata(TableIdentifier(t)).location)
-    val spec = cat.getTableMetadata(TableIdentifier("sig_sets")).bucketSpec
+    val n = cat.getTableMetadata(TableIdentifier("sig_sets")).bucketSpec
       .getOrElse(sys.error("sig_sets lost its bucket spec; rebuild the store"))
+      .numBuckets
     val gen = java.lang.System.nanoTime()
-    val (oldDocs, oldSets) = (loc("sig_docs"), loc("sig_sets"))
-    spark.sql("DROP TABLE IF EXISTS sig_docs_compact")
-    spark.sql("DROP TABLE IF EXISTS sig_sets_compact")
-    // Read the generations by PATH, not via the catalog: a `spark.table`
-    // scan of a table already bucketed (id, n) satisfies the
-    // repartition(n, id) clustering, so Spark elides the shuffle — and
-    // then (no join/agg to feed) auto-disables the bucketed scan, reading
-    // the small files in file-order partitions. Each write task then holds
-    // rows of MANY buckets and emits one file per (task, bucket): the
-    // rewrite is still a correct bucketed table, but the file count never
-    // shrinks — the one job compact exists to do. A bare parquet read
-    // carries no bucket metadata, so the shuffle survives and each task
-    // receives exactly one bucket → one file per bucket per table.
-    spark.read.parquet(oldDocs.toString).repartition(spec.numBuckets)
-      .write.format("parquet").option("path", s"$path/sig_docs_g$gen")
-      .saveAsTable("sig_docs_compact")
-    spark.read.parquet(oldSets.toString).repartition(spec.numBuckets, col("id"))
-      .write.format("parquet")
-      .bucketBy(spec.numBuckets, "id").sortBy("id")
-      .option("path", s"$path/sig_sets_g$gen")
-      .saveAsTable("sig_sets_compact")
-    spark.sql("DROP TABLE sig_docs")
-    spark.sql("ALTER TABLE sig_docs_compact RENAME TO sig_docs")
-    spark.sql("DROP TABLE sig_sets")
-    spark.sql("ALTER TABLE sig_sets_compact RENAME TO sig_sets")
-    val fs = oldDocs.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(oldDocs, true)
-    fs.delete(oldSets, true)
     // routed stores also accumulate one sig_splits file per admit cycle
-    if (cat.tableExists(TableIdentifier("sig_splits"))) {
-      val oldSplits = loc("sig_splits")
-      spark.sql("DROP TABLE IF EXISTS sig_splits_compact")
-      spark.read.parquet(oldSplits.toString).repartition(spec.numBuckets)
-        .write.format("parquet").option("path", s"$path/sig_splits_g$gen")
-        .saveAsTable("sig_splits_compact")
-      spark.sql("DROP TABLE sig_splits")
-      spark.sql("ALTER TABLE sig_splits_compact RENAME TO sig_splits")
-      fs.delete(oldSplits, true)
+    val present = tables.filter(t => cat.tableExists(TableIdentifier(t)))
+    present.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${t}_compact")
+      // Read the generations by PATH, not via the catalog: a `spark.table`
+      // scan of a table already bucketed (id, n) satisfies the
+      // repartition(n, id) clustering, so Spark elides the shuffle — and
+      // then (no join/agg to feed) auto-disables the bucketed scan, reading
+      // the small files in file-order partitions. Each write task then holds
+      // rows of MANY buckets and emits one file per (task, bucket): the
+      // rewrite is still a correct bucketed table, but the file count never
+      // shrinks — the one job compact exists to do. A bare parquet read
+      // carries no bucket metadata, so the shuffle survives and each task
+      // receives exactly one bucket → one file per bucket per table.
+      val df = spark.read.parquet(loc(t).toString)
+      val w =
+        if (t == "sig_sets") df.repartition(n, col("id")).write.bucketBy(n, "id").sortBy("id")
+        else df.repartition(n).write
+      w.format("parquet").option("path", s"$path/${t}_g$gen")
+        .saveAsTable(s"${t}_compact")
     }
+    present.foreach { t =>
+      spark.sql(s"DROP TABLE $t")
+      spark.sql(s"ALTER TABLE ${t}_compact RENAME TO $t")
+    }
+    val fsys = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    present.foreach(t => GenDir.dropGens(fsys, path, t, Set(loc(t).getName)))
   }
 }

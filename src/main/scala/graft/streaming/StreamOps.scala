@@ -1061,7 +1061,7 @@ object StreamOps {
           // Hadoop FS probe, not java.io.File: the store dir may live on
           // HDFS/S3-style paths where a local-file exists() is always
           // false and the ingest would silently re-create existing state.
-          val fsys = org.apache.hadoop.fs.FileSystem.get(
+          val fsys = new org.apache.hadoop.fs.Path(dir).getFileSystem(
             s.sparkContext.hadoopConfiguration)
           val existing =
             if (fsys.exists(new org.apache.hadoop.fs.Path(dir)))
@@ -1112,42 +1112,29 @@ object StreamOps {
       }
       .start()
 
-  /** Resolve the live base directory. Pointer mode first (round 15 — the
-    * flat-object commit path): a `_base_gen` pointer names the current
-    * generation ([[graft.sources.GenDir]]); stores compacted on an
-    * atomic-rename filesystem have no pointer and fall through to the
-    * classic name, healing the two-rename window: if `base` is absent but
-    * a retired `base_old_<gen>` exists (crash between compaction's retire
-    * and publish renames), the NEWEST retired generation IS the last
-    * published base — serving it plus the partials above ITS watermark is
-    * exactly the pre-crash view, because the folded partials are only
-    * deleted after a successful publish. */
-  private def resolvedBase(fsys: org.apache.hadoop.fs.FileSystem,
+  /** Resolve the live base directory ([[graft.sources.GenDir.livePath]]:
+    * the `_base_gen` pointer's generation, else the classic `base`), or
+    * None before the first compact. A live dir absent on an atomic-rename
+    * filesystem is compaction's two-rename window, healed the way every
+    * GenDir store heals it ([[graft.sources.GenDir.rollBack]]): the newest
+    * retired generation IS the last published base, and serving it plus
+    * the partials above ITS watermark is exactly the pre-crash view,
+    * because the folded partials are only deleted after a successful
+    * publish. */
+  private def resolvedBase(s: SparkSession, fsys: org.apache.hadoop.fs.FileSystem,
                            storeDir: String): Option[org.apache.hadoop.fs.Path] = {
-    val liveName = graft.sources.GenDir.currentName(fsys, storeDir, "base")
-    if (liveName != "base") {
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/$liveName")
-      // a pointer naming a vanished generation is damage (publish defers
-      // predecessor deletion a full compact cycle) — fall through to the
-      // classic healing rather than silently serving partials-only
-      if (fsys.exists(p)) return Some(p)
-    }
-    val base = new org.apache.hadoop.fs.Path(s"$storeDir/base")
-    if (fsys.exists(base)) Some(base)
-    else {
-      val root = new org.apache.hadoop.fs.Path(storeDir)
-      if (!fsys.exists(root)) None
-      else fsys.listStatus(root).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("base_old_"))
-        .sortBy(p => p.getName.stripPrefix("base_old_").toLong)
-        .lastOption
-    }
+    val live = graft.sources.GenDir.livePath(fsys, storeDir, "base")
+    if (!fsys.exists(live) && graft.sources.AtomicRename.isAtomic(s, storeDir))
+      graft.sources.GenDir.rollBack(fsys, storeDir, "base", live)
+    // a pointer naming a vanished generation is damage: serve the classic
+    // base rather than partials only
+    Seq(live, new org.apache.hadoop.fs.Path(s"$storeDir/base")).find(fsys.exists)
   }
 
   /** The compaction watermark lives INSIDE the base directory
     * (`base/_upto` — underscore files are invisible to parquet listings),
     * so the folded data and the set of batch ids it covers publish in the
-    * SAME rename: no crash can leave a base that disagrees with its
+    * SAME swap: no crash can leave a base that disagrees with its
     * watermark. Callers pass the base they resolved ([[resolvedBase]])
     * and serve: resolving it a second time could pair this watermark with
     * a base a concurrent compact published in between. */
@@ -1181,7 +1168,8 @@ object StreamOps {
     // a batch at or below the compaction watermark is already folded into
     // base AND its partial is gone — re-applying it would double-add (the
     // replay-after-compact ordering); skip it instead
-    if (batchId <= compactedUpto(fsys, resolvedBase(fsys, storeDir))) return
+    if (batchId <= compactedUpto(fsys,
+          resolvedBase(batch.sparkSession, fsys, storeDir))) return
     val dayUs = 86400L * 1000000L
     val part = batch.select(
         graft.functions.SeriesFunctions.floorDiv(unix_micros(col("ts")), dayUs)
@@ -1203,7 +1191,7 @@ object StreamOps {
   def fingerprints(s: SparkSession, storeDir: String): DataFrame = {
     val fsys = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val liveBase = resolvedBase(fsys, storeDir)
+    val liveBase = resolvedBase(s, fsys, storeDir)
     val upto = compactedUpto(fsys, liveBase)
     val base = liveBase.toSeq.map(p =>
       s.read.parquet(p.toString).select(col("day"), col("n"), col("fp")))
@@ -1241,17 +1229,10 @@ object StreamOps {
     *    landing after the listing is neither folded, deleted, nor covered
     *    by the watermark; it waits intact for the next compact;
     *  - `_upto` is written INTO the staging dir, so the folded rows and
-    *    the id set they cover publish in the same atomic rename;
-    *  - publish is posture-dependent (round 15): on atomic-rename
-    *    filesystems, retire-and-publish (rename base→base_old_<gen> →
-    *    rename staging→base → delete old) — a crash between the renames
-    *    leaves `base_old_<gen>` recoverable by hand, never silently
-    *    absent data; on flat object stores (and pointer-carrying
-    *    migrated stores), a fresh `base_g<gen>` directory plus ONE
-    *    `_base_gen` pointer write ([[graft.sources.GenDir]]) — a crash
-    *    before the flip leaves an orphan generation for the next
-    *    compact's sweep, and the retired generation survives one compact
-    *    cycle so in-flight readers finish their scans;
+    *    the id set they cover publish in the same swap;
+    *  - the swap is [[graft.sources.GenDir.rewrite]]'s, in either posture,
+    *    with its crash leftovers healed by [[resolvedBase]] and the next
+    *    compact;
     *  - a crash after publish but before the folded partials' delete
     *    leaves dirs with id ≤ the new watermark: [[fingerprints]] filters
     *    them out of serving and the next compact deletes them without
@@ -1276,23 +1257,12 @@ object StreamOps {
     // object stores are a supported posture here since round 15
     val fsys = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // posture decides the publish mechanics below: atomic-rename
-    // filesystems keep the two-rename retire/publish; flat object stores
-    // (or a store already carrying a generation pointer from an
-    // object-store life) publish a fresh generation dir via one pointer
-    // write ([[graft.sources.GenDir]]) — the r14 refusal replaced by a
-    // working commit path (r14 verdict item 5)
-    val pointered =
-      graft.sources.GenDir.currentName(fsys, storeDir, "base") != "base"
-    val atomicSwap =
-      graft.sources.AtomicRename.isAtomic(s, storeDir) && !pointered
     val partsPath = new org.apache.hadoop.fs.Path(s"$storeDir/parts")
     // fold from the RESOLVED base: after a crash between the retire and
-    // publish renames the last published base lives under base_old_<gen>,
-    // and folding from `base`-only would silently rebuild the store from
-    // partials alone — all compacted history lost. resolvedBase heals
-    // both this path and serving.
-    val liveBase = resolvedBase(fsys, storeDir)
+    // publish renames the live base is absent, and folding from it alone
+    // would silently rebuild the store from partials — all compacted
+    // history lost. resolvedBase heals both this path and serving.
+    val liveBase = resolvedBase(s, fsys, storeDir)
     val upto0 = compactedUpto(fsys, liveBase)
     val listed: Seq[(Long, org.apache.hadoop.fs.Path)] =
       if (!fsys.exists(partsPath)) Nil
@@ -1301,7 +1271,6 @@ object StreamOps {
         .map(p => p.getName.stripPrefix("batch=").toLong -> p)
     val (stale, fold) = listed.partition(_._1 <= upto0)
     val upto1 = fold.foldLeft(upto0)((m, e) => math.max(m, e._1))
-    val basePath = new org.apache.hadoop.fs.Path(s"$storeDir/base")
     val frames =
       liveBase.toSeq.map(p =>
         s.read.parquet(p.toString).select(col("day"), col("n"), col("fp"))) ++
@@ -1310,46 +1279,18 @@ object StreamOps {
            .select(col("day"), col("n"), col("fp")))
        else Nil)
     require(frames.nonEmpty, s"no fingerprint store at $storeDir")
-    // eager checkpoint: the staged frame must stop referencing the base
-    // files the publish below is about to retire
-    val staged = frames.reduce(_ unionAll _)
-      .groupBy("day").agg(sum("n").as("n"), sum("fp").as("fp"))
-      .localCheckpoint(true)
-    val gen = java.lang.System.nanoTime()
-    if (atomicSwap) {
-      val tmp = new org.apache.hadoop.fs.Path(s"$storeDir/base_staging_$gen")
-      staged.write.mode("overwrite").parquet(tmp.toString)
-      graft.sources.SmallFile.write(fsys,
-        new org.apache.hadoop.fs.Path(tmp, "_upto"), upto1.toString)
-      val old = new org.apache.hadoop.fs.Path(s"$storeDir/base_old_$gen")
-      if (fsys.exists(basePath))
-        require(fsys.rename(basePath, old), s"compact: could not retire $basePath")
-      require(fsys.rename(tmp, basePath), s"compact: could not publish $tmp")
-      if (fsys.exists(old)) fsys.delete(old, true)
-    } else {
-      // flat object store (or pointer-carrying store): reclaim the
-      // PREVIOUS compact's deferred predecessors first (single-writer,
-      // same as the index stores — the grace cycle protects readers that
-      // resolved the pre-flip pointer), then stage a fresh generation and
-      // flip the `_base_gen` pointer — one small-object write, no
-      // directory rename anywhere; `_upto` lands INSIDE the generation
-      // before the flip, so the fold and its watermark publish together
-      graft.sources.GenDir.sweep(fsys, storeDir, "base")
-      val genName = s"base_g$gen"
-      val genPath = new org.apache.hadoop.fs.Path(s"$storeDir/$genName")
-      staged.write.mode("overwrite").parquet(genPath.toString)
-      graft.sources.SmallFile.write(fsys,
-        new org.apache.hadoop.fs.Path(genPath, "_upto"), upto1.toString)
-      graft.sources.GenDir.publish(fsys, storeDir, "base", genName)
-    }
-    // GC every other retired/staging generation (a crashed run's
-    // leftovers — their content is covered by the base just published;
-    // base_old_/base_staging_ names are an atomic-posture life's, so a
-    // posture-migrated store sheds them here too)
-    fsys.listStatus(new org.apache.hadoop.fs.Path(storeDir)).map(_.getPath)
-      .filter(p => p.getName.startsWith("base_old_") ||
-                   p.getName.startsWith("base_staging_"))
-      .foreach(p => fsys.delete(p, true))
+    // the fold is staged beside the live base, so its read and write never
+    // touch the same files; `_upto` lands INSIDE the staged dir before the
+    // publish, so the fold and its watermark publish together
+    graft.sources.GenDir.rewrite(s, storeDir, Seq(graft.sources.GenDir.Swap("base",
+      liveBase.getOrElse(graft.sources.GenDir.livePath(fsys, storeDir, "base")),
+      (_, dst) => {
+        frames.reduce(_ unionAll _)
+          .groupBy("day").agg(sum("n").as("n"), sum("fp").as("fp"))
+          .write.mode("overwrite").parquet(dst)
+        graft.sources.SmallFile.write(fsys,
+          new org.apache.hadoop.fs.Path(dst, "_upto"), upto1.toString)
+      })))
     (fold ++ stale).foreach { case (_, p) => fsys.delete(p, true) }
     // drop the parts/ shell only when nothing else landed in it — a dir
     // created after the listing (quiesced-ingest violation or the next

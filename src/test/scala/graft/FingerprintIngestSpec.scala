@@ -231,4 +231,63 @@ class FingerprintIngestSpec extends SparkSpecBase {
         expect.exists { case (d2, n2, _) => d2 == d && n == 2 * n2 } },
       "post-release batch+compact must fold batch 1 exactly once")
   }
+
+  test("ST28 a pointer-carrying store on an atomic-rename filesystem swaps " +
+       "at the pointed dir; its two-rename crash window serves, fences and heals") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val store = tmp()
+    val fsys = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def at(day: Int, id: Long) = (id, Timestamp.valueOf(f"2024-04-$day%02d 10:00:00"))
+    val all = Seq(at(1, 30L), at(2, 31L), at(2, 32L))
+    StreamOps.applyFingerprintBatch(all.take(2).toDF("event_id", "ts"), 0L, store)
+    StreamOps.compactFingerprints(spark, store)
+    // migrate by hand to the pointer layout a flat-store life leaves behind
+    assert(fsys.rename(new Path(s"$store/base"), new Path(s"$store/base_g5")))
+    graft.sources.SmallFile.write(fsys, new Path(s"$store/_base_gen"), "base_g5")
+    StreamOps.applyFingerprintBatch(all.drop(2).toDF("event_id", "ts"), 1L, store)
+    val expect = rows(batchFp(all.toDF("event_id", "ts")))
+    assert(rows(StreamOps.fingerprints(spark, store)) === expect)
+    StreamOps.compactFingerprints(spark, store)
+    assert(rows(StreamOps.fingerprints(spark, store)) === expect,
+      "served view changed through the compact at the pointed dir")
+    assert(graft.sources.GenDir.currentName(fsys, store, "base") === "base_g5" &&
+           fsys.exists(new Path(s"$store/base_g5")),
+      "the compact must swap by renames at the pointed dir, keeping the pointer")
+    // inject the crash between GenDir's two renames: the pointed dir was
+    // retired to base_old_<gen> and the staged fold never published
+    assert(fsys.rename(new Path(s"$store/base_g5"), new Path(s"$store/base_old_9")))
+    fsys.mkdirs(new Path(s"$store/base_compact_9"))
+    assert(rows(StreamOps.fingerprints(spark, store)) === expect,
+      "serving lost the compacted history in the two-rename window")
+    assert(fsys.exists(new Path(s"$store/base_g5")),
+      "a reader finding the live base absent must restore it")
+    StreamOps.applyFingerprintBatch(all.drop(2).toDF("event_id", "ts"), 1L, store)
+    assert(rows(StreamOps.fingerprints(spark, store)) === expect,
+      "replay during the crash window double-added")
+    StreamOps.compactFingerprints(spark, store)
+    assert(rows(StreamOps.fingerprints(spark, store)) === expect)
+    val left = fsys.listStatus(new Path(store)).map(_.getPath.getName)
+      .filter(_.startsWith("base"))
+    assert(left.toSeq === Seq("base_g5"), s"crash leftovers not healed: ${left.toSeq}")
+  }
+
+  test("ST28 a base_compact_<gen> orphan beside a live base is gone after " +
+       "the next compact") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val store = tmp()
+    val fsys = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def at(day: Int, id: Long) = (id, Timestamp.valueOf(f"2024-05-$day%02d 10:00:00"))
+    val all = Seq(at(1, 40L), at(2, 41L), at(3, 42L))
+    StreamOps.applyFingerprintBatch(all.take(2).toDF("event_id", "ts"), 0L, store)
+    StreamOps.compactFingerprints(spark, store)
+    // a crashed compact's unpublished staging, with a stray part file
+    graft.sources.SmallFile.write(fsys, new Path(s"$store/base_compact_3/part-0"), "x")
+    StreamOps.applyFingerprintBatch(all.drop(2).toDF("event_id", "ts"), 1L, store)
+    StreamOps.compactFingerprints(spark, store)
+    assert(!fsys.exists(new Path(s"$store/base_compact_3")), "orphan staging survived")
+    assert(rows(StreamOps.fingerprints(spark, store)) ===
+      rows(batchFp(all.toDF("event_id", "ts"))))
+  }
 }

@@ -93,4 +93,27 @@ class RetentionIngestSpec extends SparkSpecBase {
       assert(m1 === m2)
     } finally q.stop()
   }
+
+  test("ST25 a store on a flat object store (s3a) ingests and serves " +
+       "through the store dir's own filesystem") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    spark.sparkContext.hadoopConfiguration.set("fs.s3a.impl", classOf[FlatObjectFs].getName)
+    val store = "s3a://test" + tmp()
+    val input = MemoryStream[(Long, Timestamp)]
+    val q = StreamOps.retentionIngest(input.toDF().toDF("user_id", "ts"), store, tmp())
+    def at(day: Int) = Timestamp.valueOf(f"2024-01-$day%02d 12:00:00")
+    try {
+      input.addData((1L, at(10)), (2L, at(10)))
+      q.processAllAvailable()
+      // the second batch probes the existing activity store on s3a
+      input.addData((1L, at(11)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val day10 = 19732L // 2024-01-10 in epoch days
+    val m = StreamOps.retentionMatrix(spark, store)
+      .select("cohort_day", "offset", "n_active").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(m === Set((day10, 0L, 2L), (day10, 1L, 1L)))
+  }
 }

@@ -262,4 +262,52 @@ class SignatureStoreSpec extends SparkSpecBase with SigCatalogSerialized {
     assert(!new java.io.File(storeDir).listFiles
       .exists(_.getName.startsWith("_append_ready_")), "ready dir not cleaned")
   }
+
+  /** The store root holds exactly one data dir per catalog table — the one
+    * its catalog location names — and an increment equals a recompute. */
+  private def assertReclaimed(storeDir: String): Unit = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val cat = spark.sessionState.catalog
+    val named = Seq("sig_docs", "sig_sets", "sig_splits")
+      .filter(t => cat.tableExists(TableIdentifier(t)))
+      .map(t => new org.apache.hadoop.fs.Path(cat.getTableMetadata(TableIdentifier(t))
+        .location).getName).toSet
+    val dirs = new java.io.File(storeDir).listFiles
+      .filter(f => f.isDirectory && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(_.getName).toSet
+    assert(dirs === named, "generation dirs the catalog does not name survived")
+    assert(pairsOf(SignatureStore.incrementPairs(spark, batch, 0.8)) ===
+      pairsOf(MinHashLSH.crossVerifiedPairs(batch, corpus, 0.8)))
+  }
+
+  /** A compact's staging of `sig_docs` at `sig_docs_g1`, as a crash leaves it. */
+  private def stageDocsCompact(storeDir: String): Unit =
+    spark.read.parquet(s"$storeDir/sig_docs").write.format("parquet")
+      .option("path", s"$storeDir/sig_docs_g1").saveAsTable("sig_docs_compact")
+
+  test("compact after a crash between DROP TABLE and the rename reclaims " +
+       "the dropped generation's dir") {
+    val storeDir = tmp("store-dropcrash")
+    SignatureStore.write(spark, corpus, storeDir)
+    stageDocsCompact(storeDir)
+    spark.sql("DROP TABLE sig_docs") // EXTERNAL: the sig_docs dir stays
+    SignatureStore.compact(spark, storeDir)
+    assertReclaimed(storeDir)
+  }
+
+  test("compact after a crash before the DROP reclaims the orphan staging's dir") {
+    val storeDir = tmp("store-stagingcrash")
+    SignatureStore.write(spark, corpus, storeDir)
+    stageDocsCompact(storeDir)
+    SignatureStore.compact(spark, storeDir)
+    assertReclaimed(storeDir)
+  }
+
+  test("write over a compacted store reclaims its generation dirs") {
+    val storeDir = tmp("store-rewrite")
+    SignatureStore.write(spark, corpus, storeDir)
+    SignatureStore.compact(spark, storeDir)
+    SignatureStore.write(spark, corpus, storeDir)
+    assertReclaimed(storeDir)
+  }
 }
