@@ -110,10 +110,13 @@ object GraftSession {
   }
 
   /** Standalone builder for tests/benchmarks. Installs [[graft.plans.GraftExtensions]]
-    * (nanos-range pushdown rule + SQL functions). A codegen cache size the
-    * process's SparkConf already carries (a `-Dspark.sql.codegen.cache.maxEntries`
-    * flag, e.g. through `SPARK_GRAFT_CORE_CONF`) wins over
-    * [[CodegenCacheMaxEntries]]. */
+    * (nanos-range pushdown rule + SQL functions). Only the confs a running
+    * session cannot change sit on the builder; the runtime confs come from
+    * [[tune]], so over a live session (`getOrCreate`) or a process SparkConf
+    * that excludes its own optimizer rules, graft's rule is merged in, not
+    * written over the host's. A codegen cache size the process's SparkConf
+    * already carries (a `-Dspark.sql.codegen.cache.maxEntries` flag, e.g.
+    * through `SPARK_GRAFT_CORE_CONF`) wins over [[CodegenCacheMaxEntries]]. */
   def build(appName: String = "graft", master: String = s"local[${defaultCpus}]",
             shufflePartitions: String = defaultCpus): SparkSession = {
     val codegenCache = "spark.sql.codegen.cache.maxEntries"
@@ -123,19 +126,13 @@ object GraftSession {
       .master(master)
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        AdaptiveBroadcastThreshold)
-      .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config(codegenCache,
         new org.apache.spark.SparkConf().get(codegenCache, CodegenCacheMaxEntries))
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.SeriesFunctions.register(spark)
+    tune(spark)
     // Env-supplied SQLConf overrides ("k=v;k=v"), applied last — the A/B
     // switchboard the round-16 optimization pass measures with, and the
     // hook a cluster deployment uses for scale-dependent values (e.g.

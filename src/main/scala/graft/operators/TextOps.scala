@@ -2779,7 +2779,7 @@ object TextOps {
     * buckets over char 3-grams — x02's blocker — feeding the IDENTICAL
     * adjudication kernel. Front-end choice is a PER-CORPUS arbitration on
     * measured candidate volume, not a static rule: the round-11 scale
-    * rehearsal (BASELINE.md, `Dev scalebench:10` + the x171 candidate counts)
+    * rehearsal (BASELINE.md, "Round 11 recordings" + the x171 candidate counts)
     * REFUTED the earlier "bands win at scale" claim on this fixture
     * family — with a 30-word vocabulary every doc shares nearly all
     * char-grams, so band keys collide en masse and the banded candidate

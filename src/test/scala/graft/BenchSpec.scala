@@ -213,4 +213,27 @@ class BenchSpec extends AnyFunSuite {
       assert(codegen.get("cache_max").asInt === 1000)
     } finally java.util.Locale.setDefault(prev)
   }
+
+  test("failed rows are named in the full line and counted in the compact line, " +
+       "under a comma-decimal locale and with quotes in names and messages") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val rows = Seq("plain" -> 0.25)
+      def full(failed: Seq[(String, String)]) = mapper.readTree(Bench.fullLine(
+        rows, 1, 0.25, Nil, Nil, Nil, None, Nil, Seq("start" -> 0.5), "sf",
+        Bench.Codegen(0, 0, 1000), failed))
+      val clean = full(Nil).get("failed")
+      assert(clean.isObject && clean.size === 0, "a clean run carries failed: {}")
+      val failed = full(Seq("x\"bad" -> "boom: \"quoted\"\nsecond line")).get("failed")
+      assert(failed.get("x\"bad").asText === "boom: \"quoted\"\nsecond line")
+      val compact = mapper.readTree(Bench.compactLine(0.25, 1, 0, 0.0, rows, "sf", "4",
+        "bench_last.json", failedRows = 2))
+      assert(compact.get("failed_rows").asInt === 2)
+      assert(compact.get("value").asDouble === 0.25)
+      assert(mapper.readTree(Bench.compactLine(0.25, 1, 0, 0.0, rows, "sf", "4",
+        "bench_last.json")).get("failed_rows").asInt === 0)
+    } finally java.util.Locale.setDefault(prev)
+  }
 }
